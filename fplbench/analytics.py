@@ -1,4 +1,4 @@
-"""``analytics``: passes of 20 registered queries over generated testdata.
+"""``analytics``: passes of 10 registered queries over generated testdata.
 
 A pass is what a scheduled analytics job does in a fresh session: each
 query is built by its registry function and collected with ``toPandas``,
@@ -8,6 +8,13 @@ checked against each query's DuckDB oracle after the timed loop. The seed
 fixes the data; the first pass runs the queries in the pinned order below
 (which query pays a cold path first would otherwise move with the seed),
 later passes in a seeded order.
+
+The pass is the six relational headline queries (plans/) plus four corpus
+ones: both set-overlap pair engines (prefix filter and n-gram Jaccard),
+one similarity top-k and one functions/ scorer. The other ten headline
+queries doubled a run's length, and with it the time the benchmark's
+repeated runs need, so only the traced run times them, layer by layer,
+after its measured pass; their outputs are checked there too.
 """
 
 from __future__ import annotations
@@ -25,8 +32,7 @@ import gen
 import probe
 from frames import oracle_match
 
-# The 19 headline queries of the repo's bench plus the set-overlap pair
-# engine's direct reader; pinned here so the workload never drifts with it.
+# Pinned here so the workload never drifts with the repo's bench list.
 RELATIONAL = (
     "flagship_customer_activity",
     "agg_pricing_summary",
@@ -35,31 +41,32 @@ RELATIONAL = (
     "window_moving_sum",
     "agg_supplier_stats",
 )
-# operators/ and functions/ queries, plus cf_item_similarity: it lives in
-# plans/advanced_relational but is a pair-generating co-occurrence join
 CORPUS = (
-    "dedup_minhash_pairs",
     "text_quality_scores",
     "ann_cosine_topk",
+    "dedup_prefix_filter_pairs",
+    "dedup_ngram_jaccard",
+)
+NAMES = RELATIONAL + CORPUS
+TRACED_ONLY = (
+    "dedup_minhash_pairs",
     "dedup_winnowing_pairs",
     "quality_repetition_signals",
     "emb_neardup_pairs",
     "source_token_divergence",
     "pii_scrub_summary",
     "hybrid_search_topk",
-    "dedup_prefix_filter_pairs",
     "pagerank_dupgraph",
     "wordpiece_encode_stats",
     "cf_item_similarity",
-    "dedup_ngram_jaccard",
 )
-NAMES = RELATIONAL + CORPUS
-# no oracle: its row count is compared with the oracled MinHash twin's
-ROWS_ONLY = {"dedup_minhash_pairs": "dedup_minhash_portable"}
+# no oracle (its hash family is engine-specific): checked against the exact
+# Jaccard of the word-3-gram sets it estimates, see minhash_ok
+NO_ORACLE = "dedup_minhash_pairs"
 
 
 def family(q: str) -> str:
-    return "relational" if q in RELATIONAL else "corpus"
+    return "relational" if q in RELATIONAL else "corpus" if q in CORPUS else "traced_only"
 
 
 def run_query(spark, data: str, q: str):
@@ -98,22 +105,43 @@ def traced_pass(h, data: str, order: list[str], out: dict) -> tuple[dict, dict]:
     return rec, times
 
 
+def minhash_ok(got, data: str) -> bool:
+    """The top-20 MinHash pairs: 20 distinct ordered pairs, sorted by
+    estimate, each one a near-duplicate (exact Jaccard of its word-3-gram
+    sets at least 0.5; the generator plants more than 20) whose 32-hash
+    estimate is within 0.3 of the exact value (over 3 standard errors)."""
+    docs = duckdb.sql(f"SELECT doc_id, text FROM '{data}/documents.parquet'").fetchall()
+    grams = {}
+    for d, text in docs:
+        w = text.lower().split()
+        grams[d] = {tuple(w[i:i + 3]) for i in range(len(w) - 2)}
+    pairs = list(zip(got.doc_id_a, got.doc_id_b, got.est_jaccard))
+    if len(pairs) != 20 or len({(a, b) for a, b, _ in pairs}) != 20:
+        return False
+    if list(got.est_jaccard) != sorted(got.est_jaccard, reverse=True):
+        return False
+    for a, b, est in pairs:
+        ga, gb = grams[a], grams[b]
+        exact = len(ga & gb) / max(len(ga | gb), 1)
+        if not (a < b and exact >= 0.5 and abs(est - exact) <= 0.3):
+            return False
+    return True
+
+
 def check(h, data: str, frames: dict) -> None:
     """Compare each collected output with its DuckDB oracle."""
     con = duckdb.connect()
     try:
         for t in TABLE_NAMES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
-        for q in NAMES:
-            got = frames.get(q)
+        for q, got in frames.items():
             if got is None:
                 continue  # the failed query is already counted
-            if q in ROWS_ONLY:
-                ref = con.execute(ORACLE_SQL[ROWS_ONLY[q]]).fetchdf()
-                h.attempt(len(got) == len(ref), f"analytics check {q} (rows)")
+            if q == NO_ORACLE:
+                h.check(f"analytics check {q} (exact Jaccard)", minhash_ok, got, data)
             else:
-                h.check(f"analytics check {q}", oracle_match, got,
-                        con.execute(ORACLE_SQL[q]).fetchdf())
+                h.check(f"analytics check {q}", lambda: oracle_match(
+                    got, con.execute(ORACLE_SQL[q]).fetchdf()))
     finally:
         con.close()
 
@@ -144,11 +172,9 @@ def run(h, ctx) -> dict:
     frames: dict = {}
     rec: dict = {}
     if ctx.trace:
-        # the traced run's one pass is its measured pass, on a fresh context
-        # with the event log on; the tracing overhead is its pass_s minus an
-        # untraced run's pass_s for the same seed
-        h.set_event_log(True)
-        h.start()
+        # the traced run's one pass is its measured pass, from the same
+        # warmed state as an untraced run's; the tracing overhead is its
+        # pass_s minus an untraced run's pass_s for the same seed
         rec, p = traced_pass(h, data, order(), frames)
         for q, dt in p.items():
             samples[q].append(dt)
@@ -159,6 +185,9 @@ def run(h, ctx) -> dict:
         for q, dt in p.items():
             samples[q].append(dt)
         passes.append(sum(p.values()))
+    if ctx.trace:
+        more, _ = traced_pass(h, data, list(TRACED_ONLY), frames)
+        rec.update(more)
     check(h, data, frames)
     per_query = {q: probe.median(v) for q, v in samples.items()}
     relational = sum(per_query[q] for q in RELATIONAL)

@@ -142,8 +142,6 @@ def run(h, ctx) -> dict:
                             "page_tail_percentile": label, "pages": len(pages)}
 
     if ctx.trace:
-        h.set_event_log(True)
-        h.start()
         rec: dict[str, list] = {}
         for _ in range(ctx.traced_ops):
             h.op("page (traced)", traced_page, h.spark, star, rec)

@@ -84,7 +84,7 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def layer_probes(h, landing: str, wh: str, batch_path: str, reps: int = 3) -> dict:
+def layer_probes(h, landing: str, wh: str, batch_path: str, reps: int = 2) -> dict:
     """Time the ingest and upsert layers alone, each to the noop sink."""
     spark, out = h.spark, {}
 

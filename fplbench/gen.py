@@ -8,8 +8,11 @@ test.
 
 * ``analytics_tables`` -- the ten tables the registry queries read
   (region ... embeddings), shaped like the engine's synthetic testdata:
-  uniform TPC-H-ish star, an events stream, a 30-word document corpus with
-  ~5% planted near-duplicates, and unit-norm 64-d embeddings.
+  uniform TPC-H-ish star, a 30-day events stream, a corpus of 10-100 words
+  drawn uniformly from 30, with 5% planted near-duplicates (a copy of
+  another document plus " dup"), and unit-norm 64-d embeddings.
+  ``fit.py`` prints the generated tables' statistics next to a reference
+  testdata directory's.
 * ``Season`` -- one FPL season (teams, ~700 players, 38 gameweeks of
   per-player history, understat match rows). ``write_star`` lays it out as
   the curated star schema the dashboard reads; ``write_landing`` lays out
@@ -150,20 +153,20 @@ def analytics_tables(out_dir: str, seed: int, sf: float) -> dict[str, int]:
                   ("l_linestatus", s), ("l_shipdate", ts)]))
 
     r = rng_for(6)
-    gaps = r.exponential(259.0, n_ev)
+    gaps = r.exponential(30 * 86_400 / n_ev, n_ev)  # the stream spans ~30 days
     t0 = np.datetime64("2024-01-01T00:00:00", "us")
     put("events", {
         "event_id": np.arange(n_ev, dtype=np.int64),
         "ts": t0 + (np.cumsum(gaps) * 1e6).astype("timedelta64[us]"),
-        "user_id": r.integers(0, max(n_ev // 66, 10), n_ev).astype(np.int64),
+        "user_id": r.integers(0, max(n_ev * 3 // 200, 10), n_ev).astype(np.int64),
         "event_type": np.array(EVENT_TYPES)[r.integers(0, 5, n_ev)].tolist(),
-        "value": np.maximum(np.round(r.exponential(50.0, n_ev), 2), 0.01),
+        "value": np.round(r.exponential(50.0, n_ev), 2),
         "props": [f'{{"k": {k}}}' for k in r.integers(0, 100, n_ev)],
     }, pa.schema([("event_id", i64), ("ts", ts), ("user_id", i64), ("event_type", s),
                   ("value", f64), ("props", s)]))
 
     r = rng_for(7)
-    texts = [" ".join(np.array(WORDS)[r.integers(0, len(WORDS), r.integers(10, 100))])
+    texts = [" ".join(np.array(WORDS)[r.integers(0, len(WORDS), r.integers(10, 101))])
              for _ in range(n_docs)]
     # 5% planted near-duplicates: a copy of another document plus a marker
     for i in r.choice(n_docs, n_docs // 20, replace=False):

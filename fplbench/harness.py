@@ -1,6 +1,6 @@
 """One benchmark process: pinned environment, the Spark session's whole
-life (launch, restarts, event-log switch, shutdown), and the tally of
-attempted and failed operations."""
+life (launch, restarts, shutdown), and the tally of attempted and failed
+operations."""
 
 from __future__ import annotations
 
@@ -25,8 +25,8 @@ def pin_environment(root: str, workdir: str, trace: bool) -> dict[str, str]:
         "PYTHONPATH": os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
     }
     if trace:
-        # the event log is switched on through a benchmark-owned
-        # spark-defaults.conf, so get_spark itself stays untouched
+        # the event log is on for the whole traced run, through a
+        # benchmark-owned spark-defaults.conf, so get_spark stays untouched
         conf_dir = os.path.join(workdir, "conf")
         os.makedirs(conf_dir, exist_ok=True)
         os.makedirs(os.path.join(workdir, "eventlog"), exist_ok=True)
@@ -41,6 +41,11 @@ def pin_environment(root: str, workdir: str, trace: bool) -> dict[str, str]:
     os.environ.update(env)
     os.makedirs(env["SPARK_LOCAL_DIRS"], exist_ok=True)
     return env
+
+
+class Overrun(BaseException):
+    """The run passed its deadline. Not an ``Exception``, so the per-op
+    handlers below let it through and it ends the run."""
 
 
 class Harness:
@@ -80,16 +85,6 @@ class Harness:
         else:
             self.spark = get_spark("fplbench")
         return time.perf_counter() - t0
-
-    def set_event_log(self, on: bool) -> None:
-        """Switch the event log for the next SparkContext. spark-defaults.conf
-        reaches the JVM as system properties, which every new SparkConf
-        reads, so toggling the property toggles tracing per context."""
-        system = self.spark.sparkContext._jvm.java.lang.System
-        if on:
-            system.setProperty("spark.eventLog.enabled", "true")
-        else:
-            system.clearProperty("spark.eventLog.enabled")
 
     def pids(self) -> list[int]:
         from pyspark import SparkContext
