@@ -1,13 +1,13 @@
-"""``analytics``: passes of 10 registered queries over generated testdata.
+"""``analytics``: one pass of 10 registered queries over generated testdata.
 
 A pass is what a scheduled analytics job does in a fresh session: each
 query is built by its registry function and collected with ``toPandas``,
-so every column is computed. The first pass after set-up is measured (the
-set-up's table reads are its only warm-up), and its collected outputs are
-checked against each query's DuckDB oracle after the timed loop. The seed
-fixes the data; the first pass runs the queries in the pinned order below
-(which query pays a cold path first would otherwise move with the seed),
-later passes in a seeded order.
+so every column is computed. A run measures exactly one pass, the first
+after set-up (the set-up's table reads are its only warm-up), whatever
+``--seconds`` says: a second, warm pass would measure something else. Its
+collected outputs are checked against each query's DuckDB oracle after it.
+The seed fixes the data; the pass runs the queries in the pinned order
+below, so which query pays a cold path first never moves with the seed.
 
 The pass is the six relational headline queries (plans/) plus four corpus
 ones: both set-overlap pair engines (prefix filter and n-gram Jaccard),
@@ -20,8 +20,6 @@ after its measured pass; their outputs are checked there too.
 from __future__ import annotations
 
 import os
-import random
-import time
 
 import duckdb
 
@@ -148,7 +146,6 @@ def check(h, data: str, frames: dict) -> None:
 
 def run(h, ctx) -> dict:
     load_all()
-    rng = random.Random(ctx.seed)
     data = ""
 
     def setup(i: int) -> dict:
@@ -161,43 +158,23 @@ def run(h, ctx) -> dict:
 
     readings = ctx.setup(setup)
 
-    def order() -> list[str]:
-        o = list(NAMES)
-        if passes:
-            rng.shuffle(o)
-        return o
-
-    samples: dict[str, list[float]] = {q: [] for q in NAMES}
-    passes: list[float] = []
     frames: dict = {}
     rec: dict = {}
     if ctx.trace:
-        # the traced run's one pass is its measured pass, from the same
-        # warmed state as an untraced run's; the tracing overhead is its
-        # pass_s minus an untraced run's pass_s for the same seed
-        rec, p = traced_pass(h, data, order(), frames)
-        for q, dt in p.items():
-            samples[q].append(dt)
-        passes.append(sum(p.values()))
-    deadline = time.perf_counter() + ctx.seconds
-    while not passes or (not ctx.trace and time.perf_counter() < deadline):
-        p = measured_pass(h, data, order(), frames)
-        for q, dt in p.items():
-            samples[q].append(dt)
-        passes.append(sum(p.values()))
-    if ctx.trace:
+        # the traced run's pass is its measured pass, from the same warmed
+        # state as an untraced run's; the tracing overhead is its pass_s
+        # minus an untraced run's pass_s for the same seed
+        rec, per_query = traced_pass(h, data, list(NAMES), frames)
         more, _ = traced_pass(h, data, list(TRACED_ONLY), frames)
         rec.update(more)
+    else:
+        per_query = measured_pass(h, data, list(NAMES), frames)
     check(h, data, frames)
-    per_query = {q: probe.median(v) for q, v in samples.items()}
     relational = sum(per_query[q] for q in RELATIONAL)
     corpus = sum(per_query[q] for q in CORPUS)
-    tail, label = probe.tail(passes)
     readings["e2e"] = {"op_p50_s": relational + corpus}
     readings["workload"] = {"pass_s": relational + corpus, "relational_s": relational,
-                            "corpus_s": corpus, "passes": len(passes),
-                            "pass_tail_s": tail, "pass_tail_percentile": label,
-                            "query_s": {q: round(v, 4) for q, v in per_query.items()}}
+                            "corpus_s": corpus, "query_s": {q: round(v, 4) for q, v in per_query.items()}}
     if ctx.trace:
         lay = {"analytics.relational_s": relational, "analytics.corpus_s": corpus,
                "analytics.traced_pass_s": relational + corpus}

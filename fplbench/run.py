@@ -7,10 +7,12 @@ measured end to end and layer by layer (the weekly ETL load layer by layer).
 
 Run from the repository root. Each run launches one Spark session on all
 visible cores, builds its inputs from ``--seed`` inside ``.fplbench_work/``
-(removed on exit), sets up three times (session start, input generation,
-warm-up read) and reports the median as ``setup_s``, then measures whole
-operations in a closed loop with one client until ``--seconds`` have
-passed (always at least one), and checks outputs outside the timed region.
+(removed on exit), sets up three times (session start, writing the
+inputs -- analytics also generates them there -- and a warm-up read) and
+reports the median as ``setup_s``, then measures whole operations in a
+closed loop with one client, and checks outputs outside the timed region. A dashboard run times pages, after ten untimed warm-up
+pages, until ``--seconds`` have passed (always at least one); an analytics
+run times exactly one pass, however long it takes.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics``. With ``--trace 0`` the metrics are the
@@ -18,7 +20,7 @@ end-to-end ones, shared by every workload:
 
 * ``setup_s`` -- median of the three set-ups;
 * ``op_p50_s`` -- median seconds of the workload's operation: a dashboard
-  page, an analytics pass (the sum of its queries' medians).
+  page, or the seconds of the one analytics pass.
 
 Tail latency (the highest percentile with ten samples beyond it, or the
 maximum when a run has too few samples) is printed on the line before, not
@@ -103,7 +105,7 @@ class Context:
         self.traced_ops = 3
 
     def setup(self, fn) -> dict:
-        """Set up ``SETUPS`` times -- (re)start the session, generate the
+        """Set up ``SETUPS`` times -- (re)start the session, write the
         inputs, warm up -- and keep the median; the last set-up's inputs
         are the ones measured."""
         totals, starts, inputs = [], [], {}
