@@ -5,20 +5,24 @@ Reference CTE pipeline -> our mapping (player->customer, team->nation,
 player_week_ft->orders, round_gw->order month):
 
   ct_gen              dim decorate: customer LEFT JOIN nation (broadcast)   [J1]
+  last_3_wk_numb      distinct round_gw DESC LIMIT 3 ->
+                      latest distinct order months, ranked rn 1..4          [A5,T6]
   ct_stats_totals     sum(points),sum(bps) per player ->
                       sum(totalprice), count(orders) per customer           [A1]
-  last_3_wk_numb      distinct round_gw DESC LIMIT 3 ->
-                      3 latest distinct order months                        [A5,T6]
-  ct_last_weeks_3     semi-join fact to those weeks                         [J3,P11]
-  ct_last_weeks_3_f   row_number rank + filtered-max pivot -> gw_1/2/3      [W1,A3]
+  ct_last_weeks_3_f   filtered-max pivot of rn 1..3 -> gw_1/2/3             [W1,A3]
   ct_avg_points_4     sum over last-4 weeks / 4 (constant divisor!)         [A2]
-  final               4-way LEFT JOIN + coalesce(total,0) + top-15          [J2,P6,T3]
+  final               LEFT JOIN + coalesce(total,0) + top-15                [J2,P6,T3]
+
+The three per-customer CTEs are ONE aggregate keyed on o_custkey over the
+fact LEFT JOINed to the broadcast last-4 rank, which attaches rn to the
+last-4 rows only: the lifetime sums see every row, the rn-conditional
+aggregates see the recent ones.
 
 Scale notes (100 TB): the period-rank table is <=O(#months) rows and is
-broadcast to the fact side, so the pivot costs one shuffle (the groupBy on
-the fact key); the dim decorate broadcasts nation; the 4 aggregates share the
-same grouping key so AQE coalesces their shuffles; the final top-15 is
-TakeOrderedAndProject (no global sort).
+broadcast to the fact side, so the fact costs one shuffle (the groupBy on
+its key); the dim decorate broadcasts nation; the final top-15 is
+TakeOrderedAndProject (no global sort). The oracle below keeps the
+reference's separate CTEs.
 """
 
 from __future__ import annotations

@@ -1,26 +1,40 @@
 """The five analytical dashboard queries on the FPL star schema
-(SURVEY.md §2.11) — exact reference semantics, DataFrame-native.
+(SURVEY.md §2.11) — exact reference semantics, each one ``spark.sql``
+statement.
+
+Every query is a single SQL text that reads like the reference's
+(sql_queries.py:111-256) and takes its tables as DataFrame arguments
+(``spark.sql(text, p=player_dm, ...)``): PySpark registers them as
+temporary views for the one analysis and drops them when the call returns,
+so building a query analyzes it once, runs no Spark job and leaves the
+catalog as it found it. ``k`` is bound through ``int(k)`` so it can only
+ever be a number in the text.
 
 These run on the engine's canonical FPL tables (sources/schemas.py) and are
-verified in tests/test_fpl_queries.py against hand-computed fixtures plus the
-two reference data-quality checks (known-entity lookup, join integrity).
-Deterministic id tiebreakers are appended to every top-k (the reference
-relies on Postgres's arbitrary tie order; we pin it — SURVEY.md §4.3.2).
+verified in tests/test_fpl_queries.py against hand-computed fixtures, the
+DuckDB oracle text on degenerate stars, plus the two reference data-quality
+checks (known-entity lookup, join integrity). Deterministic id tiebreakers
+are appended to every top-k (the reference relies on Postgres's arbitrary
+tie order; we pin it — SURVEY.md §4.3.2).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 def basic_ply_data(player_dm: DataFrame, k: int = 9) -> DataFrame:
     """Top-k players by form (reference sql_queries.py:111)."""
-    return (
-        player_dm.select("name", "surname", "form", "id")
-        .orderBy(F.col("form").desc(), F.col("id").asc())
-        .limit(k)
-        .drop("id")
+    return player_dm.sparkSession.sql(
+        """
+        SELECT name, surname, form
+        FROM {p}
+        ORDER BY form DESC, id ASC
+        LIMIT {k}
+        """,
+        p=player_dm,
+        k=int(k),
     )
 
 
@@ -28,20 +42,17 @@ def value_per_points(player_dm: DataFrame, k: int = 9) -> DataFrame:
     """Top-k by total_points with point_value = total_points/now_costs*10
     cast to decimal(12,2) (reference sql_queries.py:113-116). Decimal-first
     division for Postgres-compatible precision (SURVEY.md §4.3.3)."""
-    pv = (
-        F.col("total_points").cast("decimal(18,2)") / F.col("now_costs") * 10
-    ).cast("decimal(12,2)")
-    return (
-        player_dm.select(
-            "name",
-            "surname",
-            "total_points",
-            pv.alias("point_value"),
-            "id",
-        )
-        .orderBy(F.col("total_points").desc(), F.col("id").asc())
-        .limit(k)
-        .drop("id")
+    return player_dm.sparkSession.sql(
+        """
+        SELECT name, surname, total_points,
+               CAST(CAST(total_points AS DECIMAL(18,2)) / now_costs * 10
+                    AS DECIMAL(12,2)) AS point_value
+        FROM {p}
+        ORDER BY total_points DESC, id ASC
+        LIMIT {k}
+        """,
+        p=player_dm,
+        k=int(k),
     )
 
 
@@ -51,112 +62,100 @@ def detailed_ply_data_per_week(
     player_week_ft: DataFrame,
     k: int = 15,
 ) -> DataFrame:
-    """The flagship (reference sql_queries.py:118-188), CTE for CTE:
+    """The flagship (reference sql_queries.py:118-188):
 
     ct_gen: decorate player with team short_name (broadcast — 20 teams);
-    ct_stats_totals: sum(total_points), sum(bps) per player;
-    last_3_wk_numb + ct_last_weeks_3_final: the 3 latest DISTINCT gameweeks
-      across the whole fact table (NOT per player), pivoted to gw_1/2/3 via
-      filtered max — players missing a week get NULL (only total_points gets
-      coalesce, reference sql_queries.py:174 — SURVEY.md §7.3.4);
-    ct_avg_points_last_4: sum(points::decimal)/4 over the last 4 weeks —
-      constant divisor even for players active in fewer weeks;
-    final: 4-way left join, coalesce, top-k by total points.
+    last_4_wk: the 4 latest DISTINCT gameweeks across the whole fact table
+      (NOT per player), ranked rn 1..4 — at most 38 rounds, broadcast;
+    ct_stats: ONE aggregation keyed on element_ over the fact LEFT JOINed to
+      last_4_wk, which attaches rn only to the last-4 rows (NULL elsewhere).
+      It folds the reference's three CTEs:
+      - ct_stats_totals: sum(total_points), sum(bps) over every row;
+      - ct_last_weeks_3_final: rn 1/2/3 pivoted to gw_1/2/3 via filtered
+        max — players missing a week get NULL (only total_points gets
+        coalesce, reference sql_queries.py:174 — SURVEY.md §7.3.4);
+      - ct_avg_points_last_4: sum(points::decimal)/4 over the rn rows —
+        constant divisor even for players active in fewer weeks, NULL for
+        players with no last-4 row, as the reference's left join gives;
+    final: left join, coalesce, top-k by total points.
     """
-    ct_gen = player_dm.join(
-        F.broadcast(team_dm.select(F.col("id").alias("tid"), "short_name")),
-        player_dm.team_id == F.col("tid"),
-        "left",
-    ).select(
-        "id",
-        F.concat(F.col("name"), F.lit(" "), F.col("surname")).alias("ply_name"),
-        "short_name",
-        "position",
-        "now_costs",
-    )
-
-    totals = player_week_ft.groupBy("element_").agg(
-        F.sum("total_points").alias("sum_points"),
-        F.sum("bps").alias("sum_bps"),
-    )
-
-    ranked_weeks = (
-        player_week_ft.select("round_gw")
-        .distinct()
-        .withColumn("rn", F.row_number().over(Window.orderBy(F.col("round_gw").desc())))
-        .filter(F.col("rn") <= 4)
-    )
-    recent = player_week_ft.join(F.broadcast(ranked_weeks), "round_gw")
-    last3 = (
-        recent.filter(F.col("rn") <= 3)
-        .groupBy("element_")
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("total_points"))).alias("gw_1"),
-            F.max(F.when(F.col("rn") == 2, F.col("total_points"))).alias("gw_2"),
-            F.max(F.when(F.col("rn") == 3, F.col("total_points"))).alias("gw_3"),
+    return player_dm.sparkSession.sql(
+        """
+        WITH ct_gen AS (
+          SELECT /*+ BROADCAST(t) */
+                 p.id, concat(p.name, ' ', p.surname) AS ply_name,
+                 t.short_name, p.position
+          FROM {p} p LEFT JOIN {t} t ON p.team_id = t.id
+        ),
+        last_4_wk AS (
+          SELECT round_gw, rn
+          FROM (SELECT round_gw, row_number() OVER (ORDER BY round_gw DESC) AS rn
+                FROM (SELECT DISTINCT round_gw FROM {f}))
+          WHERE rn <= 4
+        ),
+        ct_stats AS (
+          SELECT /*+ BROADCAST(w) */
+                 f.element_,
+                 SUM(f.total_points) AS sum_points,
+                 SUM(f.bps) AS sum_bps,
+                 MAX(CASE WHEN w.rn = 1 THEN f.total_points END) AS gw_1,
+                 MAX(CASE WHEN w.rn = 2 THEN f.total_points END) AS gw_2,
+                 MAX(CASE WHEN w.rn = 3 THEN f.total_points END) AS gw_3,
+                 round(SUM(CASE WHEN w.rn IS NOT NULL
+                                THEN CAST(f.total_points AS DECIMAL(18,2)) END) / 4,
+                       2) AS avg_4_weeks
+          FROM {f} f LEFT JOIN last_4_wk w ON f.round_gw = w.round_gw
+          GROUP BY f.element_
         )
+        SELECT g.id, g.ply_name, g.short_name, g.position,
+               coalesce(s.sum_points, 0) AS total_points,
+               s.sum_bps, s.gw_1, s.gw_2, s.gw_3, s.avg_4_weeks
+        FROM ct_gen g LEFT JOIN ct_stats s ON g.id = s.element_
+        ORDER BY total_points DESC, g.id ASC
+        LIMIT {k}
+        """,
+        p=player_dm,
+        t=team_dm,
+        f=player_week_ft,
+        k=int(k),
     )
-    avg4 = recent.groupBy("element_").agg(
-        F.round(F.sum(F.col("total_points").cast("decimal(18,2)")) / 4, 2).alias(
-            "avg_4_weeks"
+
+
+def _top_summed_stats(player_stats_dm: DataFrame, order_col: str, k: int) -> DataFrame:
+    """ct_summed_stats and its top-k (reference sql_queries.py:220-237,
+    repeated at :239-251 with another ORDER BY): each stats query runs its
+    own aggregation. ``order_col`` is one of this module's two literals."""
+    return player_stats_dm.sparkSession.sql(
+        f"""
+        WITH ct_summed_stats AS (
+          SELECT full_name,
+                 SUM(min_played) AS min_played,
+                 SUM(key_passes) AS key_pass,
+                 SUM(assists) AS assists,
+                 SUM(shots) AS shots,
+                 SUM(xg) AS xg,
+                 SUM(xa) AS xa,
+                 SUM(xg) + SUM(xa) AS total_xi
+          FROM {{s}}
+          GROUP BY full_name
         )
-    )
-
-    out = (
-        ct_gen.join(totals, ct_gen.id == totals.element_, "left")
-        .drop("element_")
-        .join(last3, ct_gen.id == last3.element_, "left")
-        .drop("element_")
-        .join(avg4, ct_gen.id == avg4.element_, "left")
-        .drop("element_")
-        .select(
-            "id",
-            "ply_name",
-            "short_name",
-            "position",
-            F.coalesce(F.col("sum_points"), F.lit(0)).alias("total_points"),
-            "sum_bps",
-            "gw_1",
-            "gw_2",
-            "gw_3",
-            "avg_4_weeks",
-        )
-        .orderBy(F.col("total_points").desc(), F.col("id").asc())
-        .limit(k)
-    )
-    return out
-
-
-def _summed_stats(player_stats_dm: DataFrame) -> DataFrame:
-    """ct_summed_stats (reference sql_queries.py:220-232, duplicated at
-    :239-251 — built once here, shared by both stats queries)."""
-    return player_stats_dm.groupBy("full_name").agg(
-        F.sum("min_played").alias("min_played"),
-        F.sum("key_passes").alias("key_pass"),
-        F.sum("assists").alias("assists"),
-        F.sum("shots").alias("shots"),
-        F.sum("xg").alias("xg"),
-        F.sum("xa").alias("xa"),
-        (F.sum("xg") + F.sum("xa")).alias("total_xi"),
+        SELECT * FROM ct_summed_stats
+        ORDER BY {order_col} DESC, full_name ASC
+        LIMIT {{k}}
+        """,
+        s=player_stats_dm,
+        k=int(k),
     )
 
 
 def sql_stats_key_pass(player_stats_dm: DataFrame, k: int = 15) -> DataFrame:
     """Top-k by summed key passes (reference sql_queries.py:220-237)."""
-    return (
-        _summed_stats(player_stats_dm)
-        .orderBy(F.col("key_pass").desc(), F.col("full_name").asc())
-        .limit(k)
-    )
+    return _top_summed_stats(player_stats_dm, "key_pass", k)
 
 
 def sql_stats_shots(player_stats_dm: DataFrame, k: int = 15) -> DataFrame:
     """Top-k by summed shots (reference sql_queries.py:239-256)."""
-    return (
-        _summed_stats(player_stats_dm)
-        .orderBy(F.col("shots").desc(), F.col("full_name").asc())
-        .limit(k)
-    )
+    return _top_summed_stats(player_stats_dm, "shots", k)
 
 
 # --- reference data-quality checks (SURVEY.md §5.1) -------------------------
@@ -209,6 +208,7 @@ def dashboard_payload(
 import os as _os
 
 from fpl_data_pipeline_spark.registry import register
+from fpl_data_pipeline_spark.sources import schemas as S
 from pyspark.sql import SparkSession
 
 FIXTURES_DIR = _os.path.join(
@@ -217,8 +217,17 @@ FIXTURES_DIR = _os.path.join(
 )
 
 
+# declared, not inferred: a schema-inference read runs a footer job per call
+_FX_SCHEMAS = {
+    "player_dm": S.PLAYER_DM,
+    "team_dm": S.TEAM_DM,
+    "player_week_ft": S.PLAYER_WEEK_FT,
+    "player_stats_dm": S.PLAYER_STATS_DM,
+}
+
+
 def _fx(spark: SparkSession, name: str) -> DataFrame:
-    return spark.read.parquet(_os.path.join(FIXTURES_DIR, name))
+    return spark.read.schema(_FX_SCHEMAS[name]).parquet(_os.path.join(FIXTURES_DIR, name))
 
 
 def _fx_sql(name: str) -> str:

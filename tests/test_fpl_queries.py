@@ -1,11 +1,24 @@
 """The five dashboard queries (SURVEY.md §2.11) + the two ported reference
-data-quality tests (§5.2.2) on FIXTURES.md synthetic tables."""
+data-quality tests (§5.2.2) on FIXTURES.md synthetic tables, the detailed
+query against its DuckDB oracle on degenerate stars, and the queries' plan
+and construction shape."""
 
 from __future__ import annotations
 
+import glob
+import math
+import os
+from decimal import Decimal
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fpl_data_pipeline_spark.plans import fpl_queries as Q
+from fpl_data_pipeline_spark.registry import ORACLE_SQL, QUERIES, load_all
 from tests.conftest import SALAH_ID, N_WEEKS
 
 
@@ -102,3 +115,156 @@ def test_dashboard_payload_shape(player_dm, team_dm, player_week_ft):
     assert len(p["graph_lab"]) == 9 and len(p["graph_val"]) == 9
     assert all(isinstance(v, float) for v in p["graph_val"])
     assert len(p["ply_data_detail"]) == 15
+
+
+# --- the detailed query on degenerate stars, against its DuckDB oracle -------
+# The registered fpl_detailed_week oracle keeps the reference's three
+# separate aggregations (totals, last-3 pivot, last-4 average); the engine
+# folds them into one. These stars hit the cases the 8-week fixture never
+# does: no weeks at all, fewer than 3 or 4 distinct weeks, players with no
+# fact rows or without the latest week, tied totals, and k past the roster.
+
+N_STAR_PLAYERS = 6  # player 6 plays for a team that is not in team_dm
+
+
+def _fact_row(pid: int, wk: int, points: int) -> dict:
+    return {"element_": pid, "fixture": wk * 10 + pid, "total_points": points,
+            "round_gw": wk, "bps": pid + 2 * wk, "minutes": 90}
+
+
+def _degenerate_star(weeks, absent=(), skip=(), tied=False) -> dict:
+    """A 6-player star: one fact row per player per week in ``weeks``,
+    except players in ``absent`` (no rows) and the (player, week) pairs in
+    ``skip``; ``tied`` gives every row the same points."""
+    teams = [{"id": i, "name": f"Team {i}", "short_name": f"T{i}"} for i in (1, 2)]
+    players = [
+        {"id": i, "name": f"N{i}", "surname": f"S{i}", "form": Decimal("1.50"),
+         "total_points": 0, "now_costs": Decimal("5.00"),
+         "team_id": 99 if i == N_STAR_PLAYERS else 1 + i % 2, "position": "mid"}
+        for i in range(1, N_STAR_PLAYERS + 1)
+    ]
+    fact = [
+        _fact_row(pid, wk, 2 if tied else (pid * 7 + wk * 3) % 11)
+        for pid in range(1, N_STAR_PLAYERS + 1) if pid not in absent
+        for wk in weeks if (pid, wk) not in skip
+    ]
+    return {"player_dm": players, "team_dm": teams, "player_week_ft": fact}
+
+
+DEGENERATE_STARS = {
+    "empty_fact": _degenerate_star([]),
+    "one_week": _degenerate_star([5]),
+    "three_weeks": _degenerate_star([2, 5, 9]),
+    "four_weeks": _degenerate_star([1, 2, 3, 4]),
+    "no_rows_and_missing_latest": _degenerate_star(range(1, 7), absent={2}, skip={(3, 6)}),
+    "tied_totals": _degenerate_star(range(1, 6), tied=True),
+}
+
+
+def _write_star(root: str, tables: dict) -> str:
+    for name, rows in tables.items():
+        os.makedirs(os.path.join(root, name))
+        schema = to_arrow_schema(Q._FX_SCHEMAS[name])
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                       os.path.join(root, name, "part-0.parquet"))
+    return root
+
+
+def _plain(df) -> list[tuple]:
+    """Rows as tuples with numbers as float and NULL/NaN as None."""
+    def cell(v):
+        if v is None or (isinstance(v, float) and math.isnan(v)):
+            return None
+        return v if isinstance(v, str) else float(v)
+    return [tuple(cell(v) for v in r) for r in df.itertuples(index=False)]
+
+
+@pytest.mark.parametrize("k", [2, 15, 100])
+@pytest.mark.parametrize("case", sorted(DEGENERATE_STARS))
+def test_detailed_matches_oracle_on_degenerate_stars(spark, tmp_path, case, k):
+    star = _write_star(str(tmp_path / "star"), DEGENERATE_STARS[case])
+    t = {n: spark.read.schema(Q._FX_SCHEMAS[n]).parquet(os.path.join(star, n))
+         for n in DEGENERATE_STARS[case]}
+    got = Q.detailed_ply_data_per_week(t["player_dm"], t["team_dm"], t["player_week_ft"], k=k)
+    oracle = ORACLE_SQL["fpl_detailed_week"].replace(Q.FIXTURES_DIR, star)
+    want = duckdb.connect().execute(oracle).fetchdf()
+    assert len(want) == N_STAR_PLAYERS  # the oracle's LIMIT 15 keeps everyone
+    got_pdf = got.toPandas()
+    assert list(got_pdf.columns) == list(want.columns)
+    assert _plain(got_pdf) == _plain(want.head(k))
+
+
+# --- plan and construction shape ---------------------------------------------
+
+
+def _job_count(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _fixture_star(spark) -> dict:
+    return {n: Q._fx(spark, n) for n in ("player_dm", "team_dm", "player_week_ft", "player_stats_dm")}
+
+
+def test_query_construction_runs_no_jobs_and_leaves_no_views(spark):
+    t = _fixture_star(spark)
+    views_before = {x.name for x in spark.catalog.listTables()}
+    before = _job_count(spark)
+    dfs = [
+        Q.basic_ply_data(t["player_dm"]),
+        Q.value_per_points(t["player_dm"]),
+        Q.detailed_ply_data_per_week(t["player_dm"], t["team_dm"], t["player_week_ft"]),
+        Q.sql_stats_key_pass(t["player_stats_dm"]),
+        Q.sql_stats_shots(t["player_stats_dm"]),
+    ]
+    assert _job_count(spark) - before == 0
+    # the DataFrame arguments' temporary views are gone once each call
+    # returns: a long-lived server must not grow its catalog per page
+    assert {x.name for x in spark.catalog.listTables()} == views_before
+    assert all(df.schema.fieldNames() for df in dfs)
+
+
+def test_registered_fpl_queries_read_fixtures_without_inference_jobs(spark):
+    load_all()
+    names = sorted(n for n in QUERIES if n.startswith("fpl_")) + ["typed_fact_view"]
+    assert len(names) == 7
+    for name in names:
+        before = _job_count(spark)
+        QUERIES[name](spark, "")
+        assert _job_count(spark) - before == 0, name
+
+
+@pytest.mark.parametrize("table", sorted(Q._FX_SCHEMAS))
+def test_declared_schemas_match_fixture_footers(table):
+    (path,) = glob.glob(os.path.join(Q.FIXTURES_DIR, table, "*.parquet"))
+    footer = pq.read_schema(path)
+    declared = to_arrow_schema(Q._FX_SCHEMAS[table])
+    assert footer.names == declared.names
+    assert footer.types == declared.types
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The plan-tree lines under node line ``i``: those that follow it and
+    start deeper, up to the first that does not."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :|+-"))
+    out = []
+    for x in lines[i + 1:]:
+        if x.startswith("==") or depth(x) <= depth(lines[i]):
+            break
+        out.append(x)
+    return out
+
+
+def test_detailed_query_plans_one_fact_aggregate(spark):
+    t = _fixture_star(spark)
+    df = Q.detailed_ply_data_per_week(t["player_dm"], t["team_dm"], t["player_week_ft"])
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    final_aggs = [
+        i for i, x in enumerate(lines)
+        if "HashAggregate(keys=[element_#" in x and "partial_" not in x
+    ]
+    assert len(final_aggs) == 1, "\n".join(lines)
+    under = _subtree(lines, final_aggs[0])
+    assert any("FileScan parquet" in x and "player_week_ft" in x for x in under)
+    # the last-4 selector is a top-4 head over the distinct rounds
+    assert any("TakeOrderedAndProject(limit=4" in x for x in under)

@@ -162,7 +162,6 @@ INTENTIONAL_GLOBAL_WINDOW: dict[str, str] = {
     "window_rank_periods": "rank over DISTINCT calendar periods (<= ~84 months)",
     "flagship_customer_activity": "last-4 selector ranks DISTINCT periods (calendar-bounded)",
     "flagship_sql": "same plan as flagship_customer_activity via spark.sql",
-    "fpl_detailed_week": "gameweek ranks over <= 38 distinct rounds",
     "customer_survival_curve": "cumulation over DISTINCT day-grain lifetimes (max-age-bounded)",
     "events_ab_mannwhitney": "cumulation over 4-dp-quantized revenue (<= 10^4 distinct)",
     "events_cusum_changepoints": "cumulation over the day-grain series (calendar-bounded)",
