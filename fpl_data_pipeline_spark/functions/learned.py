@@ -28,8 +28,9 @@ Iterative-trainer oracle convention (shared with operators/tokenizer.py's
 BPE trainer): the DuckDB oracle replays the optimizer at a WINDOWABLE step
 count (LR_STEPS = 3 unrolled CTEs — every dot product, residual, gradient
 and update value-checked by the driver); SCALE is proven by harness
-(tools/logreg_scale_ab.py drives the same loop at 16/64 steps and measures
-flat per-step cost); and long-horizon SEMANTICS are pinned by bit-exact
+(the same loop at 16/64 steps measured flat per-step cost, BENCH_NOTES
+round 9; tools/logreg_scale_ab.py last existed at 88848a7); and
+long-horizon SEMANTICS are pinned by bit-exact
 replay, not a second engine — the 16-step exact-arithmetic Python reference
 in tests/test_round9_ops.py crosses 7 checkpoint boundaries bit-for-bit,
 and the cadence-on-vs-off twin pins plan-only-ness directly. An oracle CTE
@@ -512,9 +513,10 @@ LR_STEPS = 3
 # tree copies) ran >15 min of driver-side analysis at sf0.1. A LAZY
 # localCheckpoint every LR_CKPT_EVERY steps bounds the stacked tree at
 # 2^LR_CKPT_EVERY while keeping construction job-free. The cadence is
-# MEASURED, not guessed (tools/logreg_scale_ab.py, 64 steps at sf0.1,
-# BENCH_NOTES round-9 table): every cadence is flat across windows (no
-# cross-window creep), but within-window analysis doubles, so tighter
+# MEASURED, not guessed (64 steps at sf0.1, BENCH_NOTES round-9 table;
+# tools/logreg_scale_ab.py last existed at 88848a7): every cadence is
+# flat across windows (no cross-window creep), but within-window analysis
+# doubles, so tighter
 # wins outright — total 236 s at cadence 8, 60 s at 4, 18 s at 2.
 # Never semantic: the 16-step reference test crosses 7 boundaries
 # bit-for-bit, and the on-vs-off twin pins equality directly.
@@ -737,11 +739,11 @@ def lr_train_weights(
     """(bucket, w6) after ``steps`` unrolled gradient steps from w0 = 0 —
     the engine half shared by logreg_train_weights and logreg_train_eval
     (both oracles replay it through the same _lr_cte at LR_STEPS; the
-    scale harness tools/logreg_scale_ab.py drives the same loop at 16/64).
+    16-step reference test drives the same loop past LR_STEPS).
     Every ``ckpt_every`` steps w takes a LAZY localCheckpoint so the
     analyzed plan stays bounded at a constant number of stacked steps
     (see LR_CKPT_EVERY). The cadence only engages on long-horizon runs
-    (steps > LR_STEPS, the scale-harness territory): the registered
+    (steps > LR_STEPS, as in the 16-step reference test): the registered
     LR_STEPS-step queries keep the plain unrolled plan — 2^3 stacked
     trees cost nothing to analyze, and skipping the checkpoint there
     preserves full executor-loss recomputability for the oracled shape

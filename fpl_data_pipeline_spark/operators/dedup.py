@@ -333,6 +333,13 @@ def _capped_key_groups(sh: DataFrame, key_col: str, df_cap: int) -> DataFrame:
     )
 
 
+# The packed pair key over the (a, b) columns of a pair expansion. Both
+# halves are widened first: shiftleft keeps its input type, so an int id
+# would wrap in 32 bits and merge unrelated pairs; on bigint ids Catalyst
+# drops the no-op casts and the plan is unchanged.
+PACKED_PAIR_KEY = "shiftleft(cast(a AS bigint), 31) | cast(b AS bigint)"
+
+
 def _pair_pack_ok(ids: DataFrame | None, id_col: str = "doc_id") -> bool:
     """True when every id in ``ids[id_col]`` fits the 31-bit half of a
     packed (a << 31 | b) pair key — the round-12 pair-aggregation fast
@@ -440,9 +447,10 @@ def _set_overlap_stats(
     # flat 12.2 s for the streaming shape at identical output.
     pairs = _expand_member_pairs_streaming(pair_groups, carry=("w",))
     # Round-12, two coordinated changes to the 10^8-row pair aggregation —
-    # the registry's single largest stage (tools/pair_ab_r12.py A/B at
-    # sf0.1: 128.5M emissions, 11.4M distinct pairs; value-hash-identical
-    # across all variants):
+    # the registry's single largest stage (r12 pair-stage A/B at sf0.1,
+    # OPTIMIZATION_r12.md; its harness tools/pair_ab_r12.py last existed
+    # at 88848a7: 128.5M emissions, 11.4M distinct pairs;
+    # value-hash-identical across all variants):
     #
     # 1. PACKED KEY (guide §2.3 "narrower types"): when the caller's id
     #    relation proves both pair halves fit in 31 bits, group on ONE
@@ -470,7 +478,7 @@ def _set_overlap_stats(
     par = sh.sparkSession.sparkContext.defaultParallelism
     if _pair_pack_ok(ids):
         pair_inter = (
-            pairs.select(F.expr("shiftleft(a, 31) | b").alias("ab"), "w")
+            pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"), "w")
             .repartition(par, "ab")
             .groupBy("ab")
             .agg(F.sum("w").alias("n_common"))

@@ -207,8 +207,9 @@ BPE_MERGES = 4
 # lineage-creep class connected_components hit at 442 joins. A LAZY
 # checkpoint every BPE_CKPT_EVERY rounds bounds the chain at a constant
 # number of stacked rounds while keeping construction job-free (the
-# plan-only doctrine); the A/B at 16/32 merges (tools/bpe_scale_ab.py,
-# BENCH_NOTES) is the flat-per-round-cost evidence.
+# plan-only doctrine); the A/B at 16/32 merges (BENCH_NOTES "BPE trainer
+# beyond 4 merges"; its harness tools/bpe_scale_ab.py last existed at
+# 88848a7) is the flat-per-round-cost evidence.
 BPE_CKPT_EVERY = 8
 
 
@@ -304,7 +305,7 @@ def bpe_vocab(d: DataFrame) -> DataFrame:
     """The one corpus-sized pass: documents -> (freq, seq) trainable
     vocabulary (Heaps' law keeps it ~10^5-10^6 rows at any corpus size),
     lazily checkpointed so every training round reads the collapsed table,
-    never the corpus."""
+    never the corpus. Only [a-z0-9]+ words are trainable units."""
     words = d.select(
         F.explode(
             F.filter(
@@ -313,7 +314,13 @@ def bpe_vocab(d: DataFrame) -> DataFrame:
             )
         ).alias("word")
     )
-    return bpe_vocab_from_words(words)
+    return (
+        words.filter(F.col("word").rlike("^[a-z0-9]+$"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .select("freq", _seq0_col().alias("seq"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def _seq0_col(word_col: str = "word"):
@@ -327,27 +334,11 @@ def _seq0_col(word_col: str = "word"):
     return F.concat(F.lit("_"), F.array_join(chars, "__"), F.lit("_"))
 
 
-def bpe_vocab_from_words(words: DataFrame) -> DataFrame:
-    """(freq, seq) vocabulary from a one-column ``word`` frame — the
-    [a-z0-9]+ trainable-unit contract and the _sym_-delimited char
-    sequence live here so bpe_vocab and the vocab-scale stress harness
-    (tools/bpe_scale_ab.py) collapse words identically."""
-    return (
-        words.filter(F.col("word").rlike("^[a-z0-9]+$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select("freq", _seq0_col().alias("seq"))
-        .localCheckpoint(eager=False)
-    )
-
-
 def bpe_round(v: DataFrame, it: int) -> tuple[DataFrame, DataFrame]:
     """One training round over the (freq, seq) vocabulary: returns
     (merge_row, next_v) — the 1-row winner labeled with merge_rank=it and
     the vocabulary with that merge applied. The winner is lazily
-    checkpointed (it feeds both the output union and next_v's broadcast);
-    shared verbatim by bpe_train_merges and tools/bpe_scale_ab.py so the
-    measured loop IS the shipped loop."""
+    checkpointed (it feeds both the output union and next_v's broadcast)."""
     syms = F.filter(F.split("seq", "_"), lambda x: x != "")
     pairs = (
         v.select("freq", syms.alias("s"))

@@ -853,6 +853,7 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory for identical output (equality pinned by the expansion
     # property test).
     from fpl_data_pipeline_spark.operators.dedup import (
+        PACKED_PAIR_KEY,
         _expand_member_pairs_streaming,
         _pair_pack_ok,
     )
@@ -867,7 +868,7 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Out-of-range catalogs fall back to the exact two-column aggregation.
     if _pair_pack_ok(li, "l_partkey"):
         co = (
-            pairs.select(F.expr("shiftleft(a, 31) | b").alias("ab"))
+            pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
             .groupBy("ab")
             .agg(F.count(F.lit(1)).alias("n_common"))
             .filter(F.col("n_common") >= 3)
@@ -1335,6 +1336,7 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-aggregation hash work; the union doubles only the already-tiny
     # (ia, ib, s) relation.
     from fpl_data_pipeline_spark.operators.dedup import (
+        PACKED_PAIR_KEY,
         _expand_member_pairs_streaming,
         _pair_pack_ok,
     )
@@ -1346,7 +1348,7 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same fast path and item-column range guard as cf_item_similarity).
     if _pair_pack_ok(li, "l_partkey"):
         co_half = (
-            half_pairs.select(F.expr("shiftleft(a, 31) | b").alias("ab"))
+            half_pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
             .groupBy("ab")
             .agg(F.count(F.lit(1)).alias("s"))
             .select(

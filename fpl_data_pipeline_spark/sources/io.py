@@ -8,17 +8,22 @@ helpers encode the 100 TB conventions:
 - write_partitioned: week/date-partitioned parquet so incremental loads and
   hwm predicates prune partitions (dynamic partition overwrite touches only
   the weeks in the batch);
-- write_bucketed: pre-shuffled bucket layout on the join key so repeated
-  fact<->fact joins and MERGEs skip the exchange entirely;
-- register_tables: CREATE TABLE IF NOT EXISTS over existing parquet dirs.
+- register_tables: CREATE TABLE IF NOT EXISTS over existing parquet dirs;
+- compact: small-file rewrite through the pipeline's atomic publish.
+
+The bucketed layout (pre-shuffled on the join key, so repeated fact<->fact
+joins and MERGEs skip the exchange) lives in sources/bucketing.py.
 """
 
 from __future__ import annotations
 
-import shutil
+import math
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from fpl_data_pipeline_spark.pipeline import _publish, recover
 
 
 def create_schema(spark: SparkSession, name: str = "mylo") -> None:
@@ -45,21 +50,6 @@ def write_partitioned(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Bucketed managed table: co-locates rows by join key at write time so
-    later equi-joins/aggregations on that key need no shuffle."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
-
-
 def register_table(
     spark: SparkSession, name: str, parquet_path: str
 ) -> None:
@@ -83,14 +73,9 @@ def compact(
     engine's storage contract (same reason maxPartitionBytes is 128 MB:
     one task per file). Returns the new file count. Rewrite is staged +
     atomic-renamed like every other publish."""
-    import math
-    import os
-
-    from fpl_data_pipeline_spark.pipeline import recover
-
     # same crash-recovery preamble as every publish: a crash between
     # compact's own two renames leaves the table at .bak only — restore it
-    # before reading, or the read fails and callers treat the table as absent
+    # before sizing it, or the walk finds nothing and the read fails
     recover(path)
     total = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -99,12 +84,7 @@ def compact(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(total / target_bytes_per_file))
-    df = spark.read.parquet(path)
-    stage, backup = path + ".stage", path + ".bak"
-    df.repartition(n_files).write.mode("overwrite").parquet(stage)
-    os.rename(path, backup)
-    os.rename(stage, path)
-    shutil.rmtree(backup)
+    _publish(spark.read.parquet(path).repartition(n_files), path)
     return n_files
 
 

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from fpl_data_pipeline_spark.operators.upsert import upsert
+from fpl_data_pipeline_spark.pipeline import _merge_publish
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -59,40 +59,14 @@ def run_available_now(
     agg = windowed_counts(stream)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        """Idempotent merge with an atomic publish.
-
-        The merged result is FULLY materialized into a staging dir before the
-        live table is touched, then published by directory rename (atomic on
-        a POSIX filesystem; on an object store substitute a manifest-pointer
-        swap or a table format with a transaction log).  A crash at any point
-        leaves either the old table or the new one — never a half-written
-        directory — so the checkpoint-driven replay always merges against a
-        consistent base.  Leftover staging/backup dirs from a crashed run are
-        recovered/cleaned first, keeping the exactly-once contract.
-        """
-        import os
-        import shutil
-
-        keys = ["window_start", "event_type"]
-        stage = target_path + ".stage"
-        backup = target_path + ".bak"
-        # crash mid-swap: target renamed away but new version not yet in place
-        if not os.path.exists(target_path) and os.path.exists(backup):
-            os.rename(backup, target_path)
-        for leftover in (stage, backup):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
-        if os.path.exists(target_path):
-            base = batch_df.sparkSession.read.parquet(target_path)
-            merged = upsert(base, batch_df, keys)
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(target_path):
-            os.rename(target_path, backup)
-        os.rename(stage, target_path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        """Idempotent merge with the pipeline's atomic publish: recover a
+        crashed swap, stage the merged result, promote it by rename. A
+        crash at any point leaves either the old table or the new one, so
+        the checkpoint-driven replay always merges against a consistent
+        base (the exactly-once contract)."""
+        _merge_publish(
+            batch_df.sparkSession, batch_df, target_path, ["window_start", "event_type"]
+        )
 
     q = (
         agg.writeStream.outputMode("update")
@@ -186,30 +160,9 @@ def run_week_feed_merge(
     stream = spark.readStream.format("fpl_week_feed").option("path", feed_dir).load()
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        keys = ["week", "player_id"]
-        stage = target_path + ".stage"
-        backup = target_path + ".bak"
-        if not os.path.exists(target_path) and os.path.exists(backup):
-            os.rename(backup, target_path)
-        for leftover in (stage, backup):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
         if batch_df.isEmpty():
             return
-        if os.path.exists(target_path):
-            base = batch_df.sparkSession.read.parquet(target_path)
-            merged = upsert(base, batch_df, keys)
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(target_path):
-            os.rename(target_path, backup)
-        os.rename(stage, target_path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        _merge_publish(batch_df.sparkSession, batch_df, target_path, ["week", "player_id"])
 
     q = (
         stream.writeStream.outputMode("append")

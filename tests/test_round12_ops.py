@@ -144,19 +144,52 @@ def test_pair_pack_guard_boundary(spark):
 def test_pair_packed_agg_matches_two_column(spark):
     """The packed (a << 31 | b) pair aggregation returns exactly the
     two-column aggregation's rows (ids, n_common, na, nb) on a real
-    corpus — the round-12 fast path is value-invisible."""
+    corpus — the round-12 fast path is value-invisible — with bigint ids
+    and with int ids, where an unwidened shift wraps in 32 bits."""
     from fpl_data_pipeline_spark.operators.dedup import (
         _set_overlap_stats,
         shingles,
     )
 
     d = table(spark, "/root/testdata/sf0.001", "documents")
-    packed = _set_overlap_stats(shingles(d), "shingle", ids=d)
-    plain = _set_overlap_stats(shingles(d), "shingle", ids=None)
     key = lambda r: (r["doc_id_a"], r["doc_id_b"], r["n_common"], r["na"], r["nb"])  # noqa: E731
-    a = sorted(key(r) for r in packed.collect())
-    b = sorted(key(r) for r in plain.collect())
-    assert a == b and len(a) > 0
+    for docs in (d, d.withColumn("doc_id", F.col("doc_id").cast("int"))):
+        packed = _set_overlap_stats(shingles(docs), "shingle", ids=docs)
+        plain = _set_overlap_stats(shingles(docs), "shingle", ids=None)
+        a = sorted(key(r) for r in packed.collect())
+        b = sorted(key(r) for r in plain.collect())
+        assert a == b and len(a) > 0
+
+
+def test_hash_overlap_keys_toggle_same_rows(spark, monkeypatch):
+    """SPARK_GRAFT_HASH_OVERLAP_KEYS=0 (string grouping keys, the
+    independent collision check) and =1 (xxhash64 keys) give identical
+    _set_overlap_stats rows, for word shingles and for the char-8-gram
+    keys dedup_charngram_jaccard builds."""
+    from fpl_data_pipeline_spark.operators import dedup
+
+    sf = "/root/testdata/sf0.001"
+    d = table(spark, sf, "documents")
+    inputs = [(dedup.shingles(d), "shingle")]
+    real = dedup._set_overlap_stats
+
+    def capture(sh, key_col, *args, **kw):
+        inputs.append((sh, key_col))
+        return real(sh, key_col, *args, **kw)
+
+    monkeypatch.setattr(dedup, "_set_overlap_stats", capture)
+    dedup.dedup_charngram_jaccard(spark, sf)
+    monkeypatch.undo()
+    assert [k for _, k in inputs] == ["shingle", "g"]
+
+    key = lambda r: (r["doc_id_a"], r["doc_id_b"], r["n_common"], r["na"], r["nb"])  # noqa: E731
+    for sh, key_col in inputs:
+        rows = {}
+        for flag in ("0", "1"):
+            monkeypatch.setenv("SPARK_GRAFT_HASH_OVERLAP_KEYS", flag)
+            out = real(sh, key_col, ids=d)
+            rows[flag] = sorted(key(r) for r in out.collect())
+        assert rows["0"] == rows["1"] and len(rows["1"]) > 0, key_col
 
 
 def test_audit_shared_words_matches_per_family_tokenize(spark):
@@ -172,10 +205,7 @@ def test_audit_shared_words_matches_per_family_tokenize(spark):
     d = table(spark, "/root/testdata/sf0.001", "documents")
     words = doc_words(d).localCheckpoint(eager=False)
     for fn, cols in ((shingles, ("doc_id", "shingle")), (winnow_doc_fingerprints, ("doc_id", "fp"))):
-        if fn is shingles:
-            shared, solo = fn(d, words=words), fn(d)
-        else:
-            shared, solo = fn(d, words=words), fn(d)
+        shared, solo = fn(d, words=words), fn(d)
         a = sorted(tuple(r[c] for c in cols) for r in shared.collect())
         b = sorted(tuple(r[c] for c in cols) for r in solo.collect())
         assert a == b and len(a) > 0

@@ -145,8 +145,8 @@ def test_logreg_16_steps_crossing_ckpt_boundary_match_reference(spark, tmp_path)
     semantic one (the BPE 16-merge pin, applied to w). The tight cadence
     is deliberate: the off arm at 16 steps is the exponential-plan bomb
     the cadence exists to prevent (w feeds two consumers per step, so the
-    analyzed tree doubles per un-truncated step — measured in
-    tools/logreg_scale_ab.py), so the semantic pin compares against the
+    analyzed tree doubles per un-truncated step — measured in round 9,
+    BENCH_NOTES), so the semantic pin compares against the
     replayed arithmetic, not against a cadence-off run."""
     rows = _planted_corpus_rows()
     sf_dir = _write_corpus(spark, tmp_path, rows)

@@ -113,17 +113,16 @@ def test_catalog_ddl(spark, player_dm, tmp_path):
 
 def test_bucketed_join_avoids_exchange(spark, player_week_ft, tmp_path):
     """Two tables bucketed on the same key must sort-merge join with NO
-    Exchange on either side (sources/io.py::write_bucketed) — the structural
-    proof of the co-located-join claim in ARCHITECTURE.md §1.6."""
-    import pyspark.sql.functions as F
-    from fpl_data_pipeline_spark.sources.io import write_bucketed
+    Exchange on either side (sources/bucketing.py::write_bucketed) — the
+    structural proof of the co-located-join claim in ARCHITECTURE.md §1.6."""
+    from fpl_data_pipeline_spark.sources.bucketing import write_bucketed
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         left = player_week_ft.select("element_", "round_gw", "total_points")
         right = player_week_ft.select("element_", "round_gw", "minutes")
-        write_bucketed(left, "bkt_left", ["element_"], n_buckets=8, sort_cols=["element_"])
-        write_bucketed(right, "bkt_right", ["element_"], n_buckets=8, sort_cols=["element_"])
+        write_bucketed(left, "bkt_left", ["element_"], 8, str(tmp_path / "bkt_left"))
+        write_bucketed(right, "bkt_right", ["element_"], 8, str(tmp_path / "bkt_right"))
         l, r = spark.table("bkt_left"), spark.table("bkt_right")
         joined = l.join(r.withColumnRenamed("round_gw", "rg2"), "element_")
         plan = joined._jdf.queryExecution().executedPlan().toString()

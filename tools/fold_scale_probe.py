@@ -1,5 +1,5 @@
 """Measure the persisted band-state deployment loop at two scales — the
-round-10 companion to tools/ngram_probe.py for the NEW delta/fold path
+round-10 scale probe for the delta/fold path
 (operators/incremental_state.py): does probe/publish/fold stay linear in
 state size, and does the fold really collapse to one file per bucket?
 

@@ -2,8 +2,10 @@
 
 Runs the query with the Spark event log enabled, then parses the log into a
 stage table: wall time, task-time sum, GC, shuffle read/write bytes, input
-bytes — the UI's Stages tab, terminal edition (spark.ui is disabled in this
-sandbox). The session mirrors get_spark()'s config so plans match the bench.
+bytes — the UI's Stages tab, terminal edition (get_spark disables
+spark.ui). The session is the engine's own get_spark(), so plans match the
+bench; the event log is switched on by a run-owned spark-defaults.conf
+found through SPARK_CONF_DIR, set before the JVM starts.
 
 Usage: python tools/profile_stages.py <query> [reps]
 """
@@ -13,57 +15,43 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-EVDIR = "/tmp/spark-events-profile"
 
-
-def build_session(app_name: str):
-    from pyspark.sql import SparkSession
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    return (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+def enable_event_log(run_dir: str) -> str:
+    """Write a spark-defaults.conf that turns the event log on into
+    ``run_dir/events`` and point SPARK_CONF_DIR at it; returns the event
+    directory. Must run before the session's JVM is launched."""
+    evdir = os.path.join(run_dir, "events")
+    os.makedirs(evdir)
+    with open(os.path.join(run_dir, "spark-defaults.conf"), "w") as f:
+        f.write("spark.eventLog.enabled true\n")
+        f.write("spark.eventLog.compress false\n")
+        f.write("spark.eventLog.rolling.enabled false\n")
+        f.write(f"spark.eventLog.dir file://{evdir}\n")
+    os.environ["SPARK_CONF_DIR"] = run_dir
+    return evdir
 
 
 def main() -> None:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    import shutil
-
-    shutil.rmtree(EVDIR, ignore_errors=True)
-    os.makedirs(EVDIR, exist_ok=True)
+    run_dir = tempfile.mkdtemp(prefix="profile_stages_")
+    evdir = enable_event_log(run_dir)
 
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
+    from fpl_data_pipeline_spark import get_spark
     from fpl_data_pipeline_spark.registry import QUERIES, load_all
 
     load_all()
-    spark = build_session(f"profile_{name}")
+    spark = get_spark(f"profile_{name}")
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["topk_basic"](spark, sf_dir).count()  # warm-up
     # py4j auto-unboxes the AtomicInteger to a plain int
@@ -76,19 +64,11 @@ def main() -> None:
         print(f"rep{i}: {time.perf_counter() - t0:.3f}s")
     spark.stop()
 
-    # parse the event log (all post-warm-up stages)
-    logs = sorted(
-        (
-            p
-            for pat in ("*", "*/*")
-            for p in glob.glob(os.path.join(EVDIR, pat))
-            if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-        ),
-        key=os.path.getmtime,
-    )
+    # parse the event log (all post-warm-up stages); one application with
+    # rolling off writes one file
     stages: dict = {}
     warm_stages: set = set()
-    for path in logs:
+    for path in glob.glob(os.path.join(evdir, "*")):
         with open(path) as f:
             for line in f:
                 try:
@@ -139,6 +119,8 @@ def main() -> None:
                     )
                     im = m.get("Input Metrics") or {}
                     st["input"] = st.get("input", 0) + (im.get("Bytes Read", 0) or 0)
+
+    shutil.rmtree(run_dir)
 
     rows = sorted(
         ((sid, st) for sid, st in stages.items() if st.get("task_ms")),
