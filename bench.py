@@ -154,9 +154,15 @@ class _TaskSampler:
     nothing in the artifact could PROVE task-level parallelism. The per-
     query peak makes core usage visible inside the artifact itself: a
     32-core run shows peaks near 32 on the parallel queries, an 8-core run
-    caps at 8. Polling is a couple of py4j calls every ~20 ms from a
+    caps at 8. Polling is a couple of py4j calls every ~10 ms from a
     thread that sleeps otherwise — negligible next to 32 task slots, and
-    identical overhead across rounds/core-counts so comparisons hold."""
+    identical overhead across rounds/core-counts so comparisons hold.
+
+    peak_tasks is a best-effort upper-bound indicator, not an exact count:
+    watch()/pause() are not synchronized with the sampling loop, so
+    straggler tasks of the previous rep can be credited to the next
+    query, peaks accumulate across discarded gated retries, and a stage
+    shorter than one poll can be missed."""
 
     def __init__(self, sc) -> None:
         self._tracker = sc.statusTracker()

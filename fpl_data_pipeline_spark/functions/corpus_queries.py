@@ -12,23 +12,24 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from fpl_data_pipeline_spark.functions.text_queries import doc_bigrams
-from fpl_data_pipeline_spark.operators.dedup import _ensure_parallel, shingles
+from fpl_data_pipeline_spark.operators.dedup import (
+    _GRAMS_SQL,
+    _NORM_SQL,
+    _NORM_WORDS_SQL,
+    _ensure_parallel,
+    _norm_text,
+    _norm_words,
+    _word_ngrams,
+    shingles,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
-
-_NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-_WORDS_SQL = f"list_filter(string_split({_NORM}, ' '), w -> w <> '')"
 
 
 def _toks(df: DataFrame) -> DataFrame:
     return df.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("tok"),
+        F.explode(_norm_words(F.col("text"))).alias("tok"),
     )
 
 
@@ -66,7 +67,7 @@ def _max_multiplicity(arr):
     "quality_repetition_signals",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     wc AS (
       SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY doc_id, tok
@@ -82,7 +83,7 @@ def _max_multiplicity(arr):
       SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(ws), 1)),
                                    i -> ws[i] || ' ' || ws[i+1])) AS bigram
-      FROM (SELECT doc_id, {_WORDS_SQL} AS ws FROM documents)
+      FROM (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents)
     ),
     bgc AS (SELECT doc_id, bigram, COUNT(*) AS c FROM bg GROUP BY doc_id, bigram),
     bg_doc AS (
@@ -113,22 +114,10 @@ def quality_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = _ensure_parallel(d).select(
         "doc_id",
-        F.filter(
-            F.split(F.lower("text"), r"\s+"),
-            lambda w: w != "",
-        ).alias("ws"),
-    )
-    bigrams = F.when(
-        F.size("ws") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ws") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("ws"), i), F.element_at(F.col("ws"), i + 1)
-            ),
-        ),
+        _norm_words(F.col("text")).alias("ws"),
     )
     staged = words.filter(F.size("ws") >= 1).select(
-        "doc_id", "ws", bigrams.alias("bg")
+        "doc_id", "ws", _word_ngrams(F.col("ws"), 2).alias("bg")
     )
     return staged.select(
         "doc_id",
@@ -155,7 +144,7 @@ SEQ_LEN = 2048
     "doc_packing_summary",
     f"""
     WITH toks AS (
-      SELECT doc_id, len({_WORDS_SQL}) AS n_tokens FROM documents
+      SELECT doc_id, len({_NORM_WORDS_SQL}) AS n_tokens FROM documents
     ),
     packed AS (
       SELECT doc_id, n_tokens,
@@ -186,12 +175,7 @@ def doc_packing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     ntok = d.select(
         "doc_id",
-        F.size(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("n_tokens"),
+        F.size(_norm_words(F.col("text"))).alias("n_tokens"),
     )
     from fpl_data_pipeline_spark.plans.scale_primitives import global_prefix_sums
 
@@ -213,7 +197,7 @@ def doc_packing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tfidf_top_terms",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
     df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
@@ -270,7 +254,7 @@ BENCH_MOD = 97  # docs with doc_id % 97 == 0 stand in for the eval benchmark
                range(1, greatest(len(ws) - {CONTAM_NGRAM - 2}, 1)),
                i -> list_aggregate(ws[i:i+{CONTAM_NGRAM - 1}], 'string_agg', ' ')
              ))) AS g
-      FROM (SELECT doc_id, {_WORDS_SQL} AS ws FROM documents)
+      FROM (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents)
       WHERE len(ws) >= {CONTAM_NGRAM}
     ),
     bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % {BENCH_MOD} = 0),
@@ -324,8 +308,8 @@ _STOP = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
     WITH feat AS (
       SELECT doc_id,
              length(text) AS n_chars,
-             len({_WORDS_SQL}) AS n_tokens,
-             len(list_filter({_WORDS_SQL}, w -> w IN {_STOP!r})) AS n_stop,
+             len({_NORM_WORDS_SQL}) AS n_tokens,
+             len(list_filter({_NORM_WORDS_SQL}, w -> w IN {_STOP!r})) AS n_stop,
              len(regexp_extract_all(text, '[0-9]')) AS n_digits,
              len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
       FROM documents
@@ -333,7 +317,7 @@ _STOP = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
     wc AS (
       SELECT doc_id, MAX(c) AS max_wc, SUM(c) AS sum_wc FROM (
         SELECT doc_id, tok, COUNT(*) AS c
-        FROM (SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents)
+        FROM (SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents)
         GROUP BY doc_id, tok
       ) GROUP BY doc_id
     ),
@@ -363,10 +347,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     + word-frequency stats) joined on doc_id; one scan each; all fractions
     exact int/int doubles."""
     d = table(spark, sf_dir, "documents")
-    ws = F.filter(
-        F.split(F.lower("text"), r"\s+"),
-        lambda w: w != "",
-    )
+    ws = _norm_words(F.col("text"))
     feat = d.select(
         "doc_id",
         F.length("text").alias("n_chars"),
@@ -406,7 +387,7 @@ CHUNK_TOKENS = 32
 @register(
     "doc_chunking",
     f"""
-    WITH words AS (SELECT doc_id, {_WORDS_SQL} AS ws FROM documents),
+    WITH words AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
     chunks AS (
       SELECT doc_id,
              unnest(range(0, CAST(ceil(len(ws) / {CHUNK_TOKENS}.0) AS INT))) AS chunk_idx,
@@ -455,7 +436,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_unigram_surprisal",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     freq AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
     total AS (SELECT SUM(c) AS n FROM freq),
@@ -503,7 +484,7 @@ SNAPSHOT_MOD = 5  # docs with doc_id % 5 < 4 stand in for the existing corpus
     "dedup_incremental_batch",
     f"""
     WITH fp AS (
-      SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+      SELECT doc_id, md5({_NORM_SQL}) AS fp
       FROM documents
     ),
     existing AS (SELECT DISTINCT fp FROM fp WHERE doc_id % {SNAPSHOT_MOD} < {SNAPSHOT_MOD - 1}),
@@ -535,7 +516,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
-        F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("fp"),
+        F.md5(_norm_text(F.col("text"))).alias("fp"),
     )
     existing = (
         fp.filter(F.col("doc_id") % SNAPSHOT_MOD < SNAPSHOT_MOD - 1)
@@ -626,8 +607,8 @@ def lang_stats_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH feat AS (
       SELECT doc_id, text,
              length(text) AS n_chars,
-             len({_WORDS_SQL}) AS n_tokens,
-             len(list_filter({_WORDS_SQL}, w -> w IN {_STOP!r})) AS n_stop,
+             len({_NORM_WORDS_SQL}) AS n_tokens,
+             len(list_filter({_NORM_WORDS_SQL}, w -> w IN {_STOP!r})) AS n_stop,
              len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
       FROM documents
     ),
@@ -640,7 +621,7 @@ def lang_stats_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped AS (
       SELECT MIN(doc_id) AS doc_id, MAX(n_tokens) AS n_tokens
       FROM (SELECT doc_id, n_tokens,
-                   md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+                   md5({_NORM_SQL}) AS fp
             FROM kept)
       GROUP BY fp
     ),
@@ -669,10 +650,7 @@ def corpus_release_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     and split share one shuffle chain). Near-dup stages slot in between
     dedup and split at scale (see dedup_apply_summary)."""
     d = table(spark, sf_dir, "documents")
-    ws = F.filter(
-        F.split(F.lower("text"), r"\s+"),
-        lambda w: w != "",
-    )
+    ws = _norm_words(F.col("text"))
     feat = d.select(
         "doc_id",
         "text",
@@ -692,7 +670,7 @@ def corpus_release_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.select(
             "doc_id",
             "n_tokens",
-            F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("fp"),
+            F.md5(_norm_text(F.col("text"))).alias("fp"),
         )
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"), F.max("n_tokens").alias("n_tokens"))
@@ -716,7 +694,7 @@ def corpus_release_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_token_divergence",
     f"""
     WITH toks AS (
-      SELECT source, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT source, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     src AS (
       SELECT source, tok, COUNT(*) AS c_s FROM toks GROUP BY source, tok
@@ -762,12 +740,7 @@ def source_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("tok"),
+        F.explode(_norm_words(F.col("text"))).alias("tok"),
     )
     # round-11 pin: ``src`` feeds FOUR consumers (src_tot, corpus — and
     # through them corpus_tot — plus the terms join), so without pinning the
@@ -814,7 +787,7 @@ TOKEN_BUDGET = 20_000  # total training-token budget for the plan
     "token_budget_plan",
     f"""
     WITH doc_toks AS (
-      SELECT doc_id, source, len({_WORDS_SQL}) AS n_tokens,
+      SELECT doc_id, source, len({_NORM_WORDS_SQL}) AS n_tokens,
              md5(CAST(doc_id AS VARCHAR) || ':curriculum') AS pick_key
       FROM documents
     ),
@@ -865,12 +838,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_toks = d.select(
         "doc_id",
         "source",
-        F.size(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("n_tokens"),
+        F.size(_norm_words(F.col("text"))).alias("n_tokens"),
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":curriculum"))).alias(
             "pick_key"
         ),
@@ -916,7 +884,7 @@ REWRITE_MOD = 17
     f"""
     WITH old_snap AS (
       SELECT doc_id, source,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+             md5({_NORM_SQL}) AS fp
       FROM documents WHERE doc_id % {OLD_DROP_MOD} <> 0
     ),
     new_snap AS (
@@ -954,11 +922,10 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diff co-located and shuffle-free) and one hash aggregate on
     (source, status); fingerprints are computed scan-side."""
     d = table(spark, sf_dir, "documents")
-    fp = lambda c: F.md5(F.lower(F.trim(F.regexp_replace(c, r"\s+", " "))))  # noqa: E731
     old_snap = d.filter(F.col("doc_id") % OLD_DROP_MOD != 0).select(
         F.col("doc_id").alias("o_id"),
         F.col("source").alias("o_source"),
-        fp(F.col("text")).alias("o_fp"),
+        F.md5(_norm_text(F.col("text"))).alias("o_fp"),
     )
     new_text = F.when(
         F.col("doc_id") % REWRITE_MOD == 0, F.concat(F.col("text"), F.lit(" recrawled"))
@@ -966,7 +933,7 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_snap = d.filter(F.col("doc_id") % NEW_DROP_MOD != 0).select(
         F.col("doc_id").alias("n_id"),
         F.col("source").alias("n_source"),
-        fp(new_text).alias("n_fp"),
+        F.md5(_norm_text(new_text)).alias("n_fp"),
     )
     joined = old_snap.join(new_snap, old_snap.o_id == new_snap.n_id, "full_outer")
     status = (
@@ -1001,7 +968,7 @@ _HS_DOT = (
     "hybrid_search_topk",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     dls AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
     stats AS (
@@ -1219,7 +1186,7 @@ def _bloom_pos(col, j: int):
     "bloom_blocklist_summary",
     f"""
     WITH fps AS (
-      SELECT doc_id, md5({_NORM}) AS fp FROM documents
+      SELECT doc_id, md5({_NORM_SQL}) AS fp FROM documents
     ),
     block AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 97 = 0),
     bits AS (
@@ -1270,7 +1237,7 @@ def bloom_blocklist_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     fps = d.select(
-        "doc_id", F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("fp")
+        "doc_id", F.md5(_norm_text(F.col("text"))).alias("fp")
     ).localCheckpoint()
     block = fps.filter(F.col("doc_id") % 97 == 0).select("fp").distinct()
     corpus = fps.filter(F.col("doc_id") % 97 != 0)
@@ -1316,7 +1283,7 @@ def bloom_blocklist_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bpe_pair_stats",
     f"""
     WITH toks AS (
-      SELECT unnest({_WORDS_SQL}) AS word FROM documents
+      SELECT unnest({_NORM_WORDS_SQL}) AS word FROM documents
     ),
     vocab AS (SELECT word, COUNT(*) AS freq FROM toks GROUP BY word),
     pairs AS (
@@ -1453,19 +1420,8 @@ def source_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all, so unlike the Jaccard family it needs no df cap to stay linear.
 @register(
     "doc_novelty_scores",
-    """
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
+    f"""
+    WITH {_GRAMS_SQL},
     exploded AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
     freq AS (SELECT shingle, COUNT(*) AS df FROM exploded GROUP BY shingle),
     per_doc AS (
@@ -1556,7 +1512,7 @@ LM_ADDK_NUM, LM_ADDK_DEN = 1, 2  # add-k with k = 1/2, exact rational
     WITH split AS (
       SELECT doc_id, source,
              list_filter(string_split(
-               lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+               {_NORM_SQL}, ' '),
                w -> w <> '') AS ws,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
                   THEN 'train' ELSE 'test' END AS part
@@ -1610,7 +1566,7 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     80% hash-split train docs only, evaluated on the 20% held-out docs with
     add-1/2 smoothing over the train vocabulary."""
     d = table(spark, sf_dir, "documents")
-    ws = _words_col(F.col("text"))
+    ws = _norm_words(F.col("text"))
     split = d.select(
         "doc_id",
         "source",
@@ -1675,17 +1631,6 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _words_col(col):
-    """normalized word array (module-local mirror of the dedup helper).
-
-    Round-12: delegates to the one-pass tokenizer (dedup._norm_words) —
-    token-identical to the collapse-then-split it mirrored (round-11
-    A/B-verified corpus-wide), one regex pass per doc."""
-    from fpl_data_pipeline_spark.operators.dedup import _norm_words
-
-    return _norm_words(col)
-
-
 # --- source-pair Jensen-Shannon matrix (feed-sibling detector) --------------
 
 
@@ -1693,7 +1638,7 @@ def _words_col(col):
     "source_js_matrix",
     f"""
     WITH toks AS (
-      SELECT source, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT source, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     src AS (
       SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY source, tok
@@ -1741,7 +1686,7 @@ def source_js_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-green empirically; terms are O(p*ln) magnitudes).
     """
     d = table(spark, sf_dir, "documents")
-    toks = d.select("source", F.explode(_words_col(F.col("text"))).alias("tok"))
+    toks = d.select("source", F.explode(_norm_words(F.col("text"))).alias("tok"))
     src = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     tot = src.groupBy("source").agg(F.sum("c").alias("n"))
     srcs = src.select("source").distinct().withColumnRenamed("source", "b_source")
@@ -1814,7 +1759,7 @@ DSIR_B = 1024  # hashed feature buckets (fixed key space, md5-portable)
     "dsir_importance_weights",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_WORDS_SQL}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     feat AS (
       SELECT t.doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT % {DSIR_B} AS bucket
@@ -1878,12 +1823,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("tok"),
+        F.explode(_norm_words(F.col("text"))).alias("tok"),
     )
     bucket = F.pmod(
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"), F.lit(DSIR_B)

@@ -43,6 +43,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from fpl_data_pipeline_spark.operators.dedup import (
+    _NORM_WORDS_SQL,
+    _ensure_parallel,
+    _norm_words,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -529,10 +534,6 @@ LR_CKPT_EVERY = 2
 LR_ETA = 2.0
 LR_TRAIN_CUT = "cc"  # same 80% md5 split convention as Naive Bayes
 
-_LR_WORDS = (
-    "list_filter(string_split(lower(trim(regexp_replace("
-    "text, '\\s+', ' ', 'g'))), ' '), w -> w <> '')"
-)
 _LR_SPLIT = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)"
 
 
@@ -542,7 +543,7 @@ def _lr_cte() -> str:
     reused by the weights oracle and the held-out eval oracle."""
     parts = [
         f"""toks AS (
-      SELECT doc_id, unnest({_LR_WORDS}) AS tok FROM documents
+      SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS tok FROM documents
     ),
     feat AS (
       SELECT doc_id,
@@ -621,19 +622,12 @@ def _lr_features(d: DataFrame, with_eval: bool = False):
     counts after the groupBy is row-identical to filtering the tokens
     before it — logreg_train_eval used to re-tokenize the whole corpus for
     its eval half (round-12, guide §2.4)."""
-    from fpl_data_pipeline_spark.operators.dedup import _ensure_parallel
-
     # Round-11: one-pass tokenizer (token-identical, see dedup._norm_words)
     # + conditional fan-out — the 1-split sf0.1 scan ran the tokenize +
     # per-token md5 single-threaded (a 2.7 s 1-task stage in the profile).
     toks = _ensure_parallel(d).select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("tok"),
+        F.explode(_norm_words(F.col("text"))).alias("tok"),
     )
     bucket = F.pmod(
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"), F.lit(LR_B)

@@ -18,6 +18,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from fpl_data_pipeline_spark.operators.dedup import _NORM_SQL, _norm_words
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -256,7 +257,7 @@ QB_KEEP_RATE = 0.5  # per-source normalized keep rate
     WITH feat AS (
       SELECT doc_id, source,
              (CASE WHEN len(list_filter(string_split(
-                     lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+                     {_NORM_SQL}, ' '),
                      w -> w <> '')) >= 10 THEN 0.4 ELSE 0.0 END
               + CASE WHEN len(regexp_extract_all(text, '[^a-zA-Z0-9 ]'))
                           < length(text) * 0.1 THEN 0.3 ELSE 0.0 END
@@ -309,8 +310,6 @@ def quality_threshold_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Round-12: one-pass tokenizer (see dedup._norm_words) — token-identical,
     # one regex pass; only size(ws) is consumed here.
-    from fpl_data_pipeline_spark.operators.dedup import _norm_words
-
     ws = _norm_words(F.col("text"))
     score = (
         F.when(F.size(ws) >= 10, 0.4).otherwise(0.0)

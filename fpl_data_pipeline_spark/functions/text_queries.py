@@ -9,24 +9,17 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from fpl_data_pipeline_spark.operators.dedup import _ensure_parallel
+from fpl_data_pipeline_spark.operators.dedup import (
+    _NORM_SQL,
+    _NORM_WORDS_SQL,
+    _ensure_parallel,
+    _norm_text,
+    _norm_words,
+    _word_ngrams,
+    _words,  # noqa: F401  (re-exported next to _norm_text)
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
-
-_NORM = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
-_NORM_WORDS_SQL = f"list_filter(string_split({_NORM}, ' '), w -> w <> '')"
-
-
-def _norm_text(col):
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def _words(col):
-    return F.filter(F.split(col, " "), lambda w: w != "")
-
-
-# one-regex-pass twin of _words(_norm_text(col)) — see operators/dedup.py
-from fpl_data_pipeline_spark.operators.dedup import _norm_words  # noqa: E402
 
 
 # --- token counting: whitespace + BPE-ish regex tokens ----------------------
@@ -34,7 +27,7 @@ from fpl_data_pipeline_spark.operators.dedup import _norm_words  # noqa: E402
     "text_token_counts",
     f"""
     SELECT doc_id,
-           len(list_filter(string_split({_NORM}, ' '), w -> w <> '')) AS n_ws_tokens,
+           len({_NORM_WORDS_SQL}) AS n_ws_tokens,
            len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS n_bpeish_tokens,
            length(text) AS n_chars_actual
     FROM documents
@@ -62,8 +55,8 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
     WITH feat AS (
       SELECT doc_id,
              length(text) AS n_chars_actual,
-             len(list_filter(string_split({_NORM}, ' '), w -> w <> '')) AS n_tokens,
-             len(list_filter(string_split({_NORM}, ' '),
+             len({_NORM_WORDS_SQL}) AS n_tokens,
+             len(list_filter(string_split({_NORM_SQL}, ' '),
                              w -> w IN {tuple(_STOPWORDS)!r})) AS n_stop,
              len(regexp_extract_all(text, '[0-9]')) AS n_digits,
              len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
@@ -233,7 +226,7 @@ def predict_lang_markers(col) -> "F.Column":
     f"""
     WITH padded AS (
       SELECT doc_id, lang AS labeled_lang,
-             ' ' || {_NORM} || ' ' AS padded
+             ' ' || {_NORM_SQL} || ' ' AS padded
       FROM documents
     ),
     scored AS (
@@ -260,10 +253,8 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- corpus-level n-gram stats: top-25 bigrams ------------------------------
 def doc_bigrams(d: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id -> exploded word bigrams (engine operator). sequence(1, 0) is
-    descending in Spark — guard docs with <2 words or element_at(ws, 0)
-    aborts the job (explode(NULL) emits no rows, matching the oracle's
-    end-exclusive range).
+    """doc_id -> exploded word bigrams (engine operator); a doc with <2
+    words emits none (the :func:`dedup._word_ngrams` guard).
 
     Perf: the tokenization is projected into a real column first — inlining
     it in the transform lambda re-ran the regex split ~2x per bigram per doc
@@ -275,23 +266,16 @@ def doc_bigrams(d: DataFrame, text_col: str = "text") -> DataFrame:
     words = _ensure_parallel(d).select(
         "doc_id", _norm_words(F.col(text_col)).alias("ws")
     )
-    bigrams = F.when(
-        F.size("ws") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ws") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("ws"), i), F.element_at(F.col("ws"), i + 1)
-            ),
-        ),
+    return words.select(
+        "doc_id", F.explode(_word_ngrams(F.col("ws"), 2)).alias("bigram")
     )
-    return words.select("doc_id", F.explode(bigrams).alias("bigram"))
 
 
 @register(
     "text_top_bigrams",
     f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split({_NORM}, ' '), w -> w <> '') AS ws
+      SELECT doc_id, {_NORM_WORDS_SQL} AS ws
       FROM documents
     ),
     bigrams AS (
@@ -774,7 +758,7 @@ def quality_threshold_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     f"""
     WITH padded AS (
       SELECT doc_id, lang AS labeled_lang,
-             ' ' || {_NORM} || ' ' AS padded
+             ' ' || {_NORM_SQL} || ' ' AS padded
       FROM documents
     ),
     scored AS (
@@ -834,8 +818,8 @@ QM_REVIEW = 0.45
     WITH feat AS (
       SELECT doc_id, source,
              length(text) AS n_chars_actual,
-             len(list_filter(string_split({_NORM}, ' '), w -> w <> '')) AS n_tokens,
-             len(list_filter(string_split({_NORM}, ' '),
+             len({_NORM_WORDS_SQL}) AS n_tokens,
+             len(list_filter(string_split({_NORM_SQL}, ' '),
                              w -> w IN {tuple(_STOPWORDS)!r})) AS n_stop,
              len(regexp_extract_all(text, '[0-9]')) AS n_digits,
              len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
@@ -940,7 +924,7 @@ _CMS_CELL_SQL = (
 @register(
     "cms_heavy_hitters",
     f"""
-    WITH norm AS (SELECT {_NORM} AS t FROM documents),
+    WITH norm AS (SELECT {_NORM_SQL} AS t FROM documents),
     words AS (
       SELECT unnest(list_filter(string_split(t, ' '), w -> w <> '')) AS word
       FROM norm
@@ -1033,7 +1017,7 @@ VOCAB_K = 16  # small enough to bite on the 31-word synthetic vocab; a real corp
 @register(
     "vocab_oov_rates",
     f"""
-    WITH norm AS (SELECT source, {_NORM} AS t FROM documents),
+    WITH norm AS (SELECT source, {_NORM_SQL} AS t FROM documents),
     toks AS (
       SELECT source,
              unnest(list_filter(string_split(t, ' '), w -> w <> '')) AS word
@@ -1108,7 +1092,7 @@ def vocab_oov_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_bigram_surprisal",
     f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split({_NORM}, ' '), w -> w <> '') AS ws
+      SELECT doc_id, {_NORM_WORDS_SQL} AS ws
       FROM documents
     ),
     bigrams AS (
@@ -1174,7 +1158,7 @@ def quality_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH toks AS (
       SELECT source,
-             unnest(list_filter(string_split({_NORM}, ' '), w -> w <> '')) AS word
+             unnest({_NORM_WORDS_SQL}) AS word
       FROM documents
     ),
     cnt AS (SELECT source, word, COUNT(*) AS c FROM toks GROUP BY source, word),
@@ -1244,8 +1228,8 @@ def source_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH feat AS (
       SELECT doc_id,
              length(text) AS n_chars_actual,
-             len(list_filter(string_split({_NORM}, ' '), w -> w <> '')) AS n_tokens,
-             len(list_filter(string_split({_NORM}, ' '),
+             len({_NORM_WORDS_SQL}) AS n_tokens,
+             len(list_filter(string_split({_NORM_SQL}, ' '),
                              w -> w IN {tuple(_STOPWORDS)!r})) AS n_stop,
              len(regexp_extract_all(text, '[0-9]')) AS n_digits,
              len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
@@ -1455,7 +1439,7 @@ LOGODDS_A0 = 100  # prior strength (pseudo-token budget)
     f"""
     WITH toks AS (
       SELECT source,
-             unnest(list_filter(string_split({_NORM}, ' '), w -> w <> ''))
+             unnest({_NORM_WORDS_SQL})
                AS word
       FROM documents
     ),
@@ -1562,7 +1546,7 @@ HILL_K = 100
     f"""
     WITH counts AS (
       SELECT word, COUNT(*) AS f FROM (
-        SELECT unnest(list_filter(string_split({_NORM}, ' '), w -> w <> ''))
+        SELECT unnest({_NORM_WORDS_SQL})
           AS word
         FROM documents
       ) GROUP BY word

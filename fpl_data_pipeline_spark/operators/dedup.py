@@ -37,12 +37,22 @@ from fpl_data_pipeline_spark.registry import ORACLE_SQL, register
 from fpl_data_pipeline_spark.tables import table
 
 
+# --- the text front-end ------------------------------------------------------
+# What counts as the same text: whitespace runs collapsed, trimmed,
+# lowercased, split into words, cut into space-joined word n-grams. Defined
+# once per engine — Spark Columns here, DuckDB SQL fragments below for the
+# oracles — and imported by every text module, so oracle parity cannot drift
+# through one missed copy.
+
+
 def _norm_text(col):
     """Whitespace-collapsed, lowercased view of a text column."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
 def _words(col):
+    """Non-empty tokens of an already-normalized column: with _norm_text,
+    the two-pass reference the tests check _norm_words against."""
     return F.filter(F.split(col, " "), lambda w: w != "")
 
 
@@ -57,6 +67,45 @@ def _norm_words(col):
     the sf0.1 corpus; the tokenize stage is the largest shared cost of
     every shingle/winnowing/quality pipeline)."""
     return F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
+
+
+def _word_ngrams(ws, n: int):
+    """Space-joined word n-grams of the token list ``ws``, in order (with
+    repeats). Guards short docs: Spark's sequence(1, 0) is DESCENDING
+    ([1, 0]), so an unguarded transform would evaluate element_at(ws, 0)
+    and abort the job for any doc with fewer than n words. CASE WHEN
+    short-circuits per row and yields NULL, and explode(NULL) emits no rows
+    — matching the oracles' end-exclusive range (short docs contribute zero
+    n-grams). ``ws`` must be a projected column, not an inline tokenizer:
+    inlining re-runs the regex split once per element_at reference."""
+    return F.when(
+        F.size(ws) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+            lambda i: F.concat_ws(" ", *[F.element_at(ws, i + k) for k in range(n)]),
+        ),
+    )
+
+
+# DuckDB twins for the oracles: the normalized ``text`` column, its word list
+# and the word-3-gram of position i in a word list ``ws``.
+_NORM_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
+_NORM_WORDS_SQL = f"list_filter(string_split({_NORM_SQL}, ' '), w -> w <> '')"
+_TRIGRAM_SQL = "ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]"
+# norm -> words -> grams: the CTE chain of the word-3-gram set oracles;
+# ``grams.gs`` is each doc's distinct word-3-gram list.
+_GRAMS_SQL = f"""norm AS (
+      SELECT doc_id, {_NORM_SQL} AS t
+      FROM documents
+    ),
+    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
+    grams AS (
+      SELECT doc_id,
+             list_distinct(list_transform(
+               range(1, greatest(len(ws) - 1, 1)),
+               i -> {_TRIGRAM_SQL})) AS gs
+      FROM words
+    )"""
 
 
 def _ensure_parallel(df: DataFrame) -> DataFrame:
@@ -177,20 +226,7 @@ def shingles(
     (the multi-family-consumer tokenize-once path)."""
     if words is None:
         words = doc_words(df, text_col)
-    # Guard short docs: Spark's sequence(1, 0) is DESCENDING ([1, 0]), so an
-    # unguarded transform would evaluate element_at(ws, 0) and abort the job
-    # for any doc with fewer than n words. CASE WHEN short-circuits per row,
-    # and explode(NULL) emits no rows — matching the oracle's end-exclusive
-    # range semantics (short docs contribute zero shingles).
-    grams = F.when(
-        F.size("ws") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("ws"), i + k) for k in range(n)]
-            ),
-        ),
-    )
+    grams = _word_ngrams(F.col("ws"), n)
     return words.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
@@ -213,8 +249,8 @@ def capped_shingles(
 # --- exact dedup: md5-keyed group, keep lowest doc_id -----------------------
 @register(
     "dedup_exact_groups",
-    """
-    SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+    f"""
+    SELECT md5({_NORM_SQL}) AS fp,
            MIN(doc_id) AS keep_doc_id,
            COUNT(*) AS n_copies
     FROM documents
@@ -233,9 +269,9 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- document fingerprinting (reference P13 string-extraction analog) -------
 @register(
     "doc_fingerprints",
-    """
+    f"""
     SELECT doc_id,
-           substr(md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))), 1, 16) AS fingerprint,
+           substr(md5({_NORM_SQL}), 1, 16) AS fingerprint,
            length(text) AS n_bytes
     FROM documents
     """,
@@ -261,30 +297,21 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # df = 7, so results are unchanged there — tests/test_operators.py proves
 # the bound with a planted hot shingle).
 SHINGLE_DF_CAP = 1000
-
-
-@register(
-    "dedup_ngram_jaccard",
-    f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
+# grams -> the df-capped (doc_id, shingle) relation ``exploded``.
+_CAPPED_SHINGLES_SQL = f"""exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
     freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
     exploded AS (
       SELECT e.doc_id, e.shingle
       FROM exploded0 e JOIN freq USING (shingle)
       WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    )"""
+
+
+@register(
+    "dedup_ngram_jaccard",
+    f"""
+    WITH {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -871,25 +898,8 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
 @register(
     "dedup_clusters_exact",
     f"""
-    WITH RECURSIVE norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    WITH RECURSIVE {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS u, b.doc_id AS v, COUNT(*) AS n_common
@@ -986,15 +996,7 @@ def ordered_shingles(
     optionally supplies a precomputed doc_words(df) relation."""
     if words is None:
         words = doc_words(df, text_col)
-    grams = F.when(
-        F.size("ws") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("ws"), i + k) for k in range(n)]
-            ),
-        ),
-    )
+    grams = _word_ngrams(F.col("ws"), n)
     return words.select("doc_id", F.posexplode(grams).alias("pos", "shingle"))
 
 
@@ -1002,7 +1004,7 @@ def ordered_shingles(
     "dedup_winnowing_pairs",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
@@ -1010,7 +1012,7 @@ def ordered_shingles(
       SELECT doc_id,
              unnest(list_transform(
                range(1, greatest(len(ws) - 1, 1)),
-               i -> {{'pos': i - 1, 'h': substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 15)}}
+               i -> {{'pos': i - 1, 'h': substr(md5({_TRIGRAM_SQL}), 1, 15)}}
              )) AS u
       FROM words
       WHERE len(ws) >= 3
@@ -1216,18 +1218,7 @@ def _pmh_band_sql(b: int) -> str:
 @register(
     "dedup_minhash_portable",
     f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
+    WITH {_GRAMS_SQL},
     hashed AS (
       SELECT doc_id,
              ('0x' || substr(md5(unnest(gs)), 1, 15))::BIGINT AS h0
@@ -1279,18 +1270,7 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PMH_COMMON_SQL = f"""
-    WITH RECURSIVE norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
+    WITH RECURSIVE {_GRAMS_SQL},
     hashed AS (
       SELECT doc_id,
              ('0x' || substr(md5(unnest(gs)), 1, 15))::BIGINT AS h0
@@ -1389,7 +1369,7 @@ PSH_KEYED_SQL = f"""
     psh_toks AS (
       SELECT doc_id,
              ('0x' || substr(md5(unnest(list_filter(
-                string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+                string_split({_NORM_SQL}, ' '),
                 w -> w <> ''))), 1, 15))::BIGINT AS h
       FROM documents
     ),
@@ -1738,7 +1718,7 @@ CHAR_NGRAM = 8
     "dedup_charngram_jaccard",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     grams AS (
@@ -1810,24 +1790,8 @@ def dedup_charngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment_pairs",
     f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    WITH {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -1891,19 +1855,12 @@ def _consensus_oracle_sql() -> str:
         f"CASE WHEN am{i} = bm{i} THEN 1 ELSE 0 END" for i in range(PMH_HASHES)
     )
     cand_cols = ", ".join(f"a.m{i} AS am{i}, b.m{i} AS bm{i}" for i in range(PMH_HASHES))
+    # the n-gram family's CTEs carry an ng_ prefix next to the other families'
+    ng_capped = _CAPPED_SHINGLES_SQL.replace("exploded", "ng_exploded").replace(
+        "freq", "ng_freq"
+    )
     return f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
+    WITH {_GRAMS_SQL},
     hashed AS (
       SELECT doc_id, ('0x' || substr(md5(unnest(gs)), 1, 15))::BIGINT AS h0
       FROM grams
@@ -1920,13 +1877,7 @@ def _consensus_oracle_sql() -> str:
       SELECT doc_id_a, doc_id_b FROM mh_cand
       WHERE CAST(({match_sum}) AS DOUBLE) / {PMH_HASHES} >= {CONSENSUS_EST_JACCARD}
     ),
-    ng_exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    ng_freq AS (SELECT shingle, COUNT(*) AS df FROM ng_exploded0 GROUP BY shingle),
-    ng_exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM ng_exploded0 e JOIN ng_freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    {ng_capped},
     ng_sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM ng_exploded GROUP BY doc_id),
     ng_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -2062,7 +2013,7 @@ SEG_WORDS = 8
     "dedup_segment_boilerplate",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
@@ -2148,25 +2099,8 @@ def dedup_segment_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dupgraph_degree_stats",
     f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    WITH {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -2339,7 +2273,7 @@ SPAN_DF_CAP = 1000  # same anti-skew role as SHINGLE_DF_CAP / WINNOW_FP_CAP
     "dedup_span_matches",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
@@ -2348,7 +2282,7 @@ SPAN_DF_CAP = 1000  # same anti-skew role as SHINGLE_DF_CAP / WINNOW_FP_CAP
              unnest(list_transform(
                range(1, greatest(len(ws) - {SPAN_N - 2}, 1)),
                i -> {{'pos': i - 1,
-                      'h': substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+                      'h': substr(md5({_TRIGRAM_SQL}
                                   || ' ' || ws[i+3] || ' ' || ws[i+4]), 1, 16)}}
              )) AS u
       FROM words
@@ -2485,25 +2419,8 @@ def span_pair_spans(d: DataFrame, df_cap: int = SPAN_DF_CAP) -> DataFrame:
 @register(
     "dedup_threshold_sweep",
     f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    WITH {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -2554,18 +2471,7 @@ PF_NUM, PF_DEN = 7, 10
 @register(
     "dedup_prefix_filter_pairs",
     f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
+    WITH {_GRAMS_SQL},
     ex AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
     freq AS (SELECT shingle, COUNT(*) AS df FROM ex GROUP BY shingle),
     ranked AS (
@@ -2777,7 +2683,7 @@ INTRA_SEG_WORDS = 2  # segment width; production corpora use 8+ (see docstring)
     "dedup_intradoc_segments",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
@@ -2871,10 +2777,10 @@ def dedup_intradoc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- cross-source duplication matrix (feed-mirroring attribution) -----------
 @register(
     "dedup_cross_source_matrix",
-    """
+    f"""
     WITH fp AS (
       SELECT doc_id, source,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+             md5({_NORM_SQL}) AS fp
       FROM documents
     ),
     pairs AS (
@@ -2949,13 +2855,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lsh_operating_point",
     _PMH_COMMON_SQL
     + f"""
-    , exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    , {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common
@@ -3074,7 +2974,7 @@ CDC_G = 8  # expected words per chunk
     "dedup_cdc_chunks",
     f"""
     WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+      SELECT doc_id, {_NORM_SQL} AS t
       FROM documents
     ),
     toks AS (

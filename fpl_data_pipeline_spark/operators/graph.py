@@ -34,7 +34,8 @@ from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 from fpl_data_pipeline_spark.functions.exact import portable_round
 from fpl_data_pipeline_spark.operators.dedup import (
-    SHINGLE_DF_CAP,
+    _CAPPED_SHINGLES_SQL,
+    _GRAMS_SQL,
     _ngram_jaccard_pairs,
 )
 
@@ -47,25 +48,8 @@ _R = 10**12  # 12-dp portable rounding factor carried through iterations
 # dupgraph_degree_stats / dedup_clusters_exact use (SQL mirror of
 # dedup._ngram_jaccard_pairs).
 _EDGES_SQL = f"""
-    WITH norm AS (
-      SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
-      FROM documents
-    ),
-    words AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      FROM words
-    ),
-    exploded0 AS (SELECT doc_id, unnest(gs) AS shingle FROM grams),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM exploded0 GROUP BY shingle),
-    exploded AS (
-      SELECT e.doc_id, e.shingle
-      FROM exploded0 e JOIN freq USING (shingle)
-      WHERE df <= {SHINGLE_DF_CAP}
-    ),
+    WITH {_GRAMS_SQL},
+    {_CAPPED_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM exploded GROUP BY doc_id),
     pair_inter AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS n_common

@@ -14,6 +14,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from fpl_data_pipeline_spark.operators.dedup import (
+    _NORM_SQL,
+    _norm_text,
+    _norm_words,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -474,7 +479,7 @@ LS_TEST_CUT = "cc"  # first md5 byte < 0xcc -> train (~80/20), same as splits
     f"""
     WITH fp AS (
       SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS grp
+             md5({_NORM_SQL}) AS grp
       FROM documents
     ),
     assigned AS (
@@ -522,7 +527,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the exact fp — assignment stays one map-side expression
     over the labeled corpus."""
     d = table(spark, sf_dir, "documents")
-    grp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    grp = F.md5(_norm_text(F.col("text")))
     assigned = d.select(
         "doc_id",
         grp.alias("grp"),
@@ -728,7 +733,7 @@ LEN_BUCKET = 32  # token-length bucket width
     WITH toks AS (
       SELECT doc_id,
              len(list_filter(string_split(
-               lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+               {_NORM_SQL}, ' '),
                w -> w <> '')) AS n
       FROM documents
     ),
@@ -771,8 +776,6 @@ def length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is integer-exact; the bucketed ranking window partitions by
     length bucket (bounded, never global)."""
     d = table(spark, sf_dir, "documents")
-    from fpl_data_pipeline_spark.operators.dedup import _norm_words
-
     toks = d.select(
         "doc_id", F.size(_norm_words(F.col("text"))).alias("n")
     )
@@ -1138,7 +1141,7 @@ KFOLDS = 5
     f"""
     WITH fps AS (
       SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+             md5({_NORM_SQL}) AS fp
       FROM documents
     ),
     folded AS (
@@ -1164,7 +1167,7 @@ def kfold_group_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-fold assignment keyed on the duplicate-group fingerprint: per-fold
     doc/group counts plus the in-query zero-torn-groups proof."""
     d = table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))))
+    fp = F.md5(_norm_text(F.col("text")))
     folded = d.select("doc_id", fp.alias("fp")).withColumn(
         "fold",
         F.pmod(
@@ -1404,12 +1407,7 @@ def mixture_temperature_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized and boost = p_temp / p_raw is both the sampling multiplier
     and the epoch count at a one-total-pass budget."""
     d = table(spark, sf_dir, "documents")
-    n_toks = F.size(
-        F.filter(
-            F.split(F.lower("text"), r"\s+"),
-            lambda w: w != "",
-        )
-    )
+    n_toks = F.size(_norm_words(F.col("text")))
     shares = (
         d.select("source", n_toks.alias("n_toks"))
         .groupBy("source")

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
-from fpl_data_pipeline_spark.operators.dedup import _ensure_parallel, _norm_words
+from fpl_data_pipeline_spark.operators.dedup import (
+    _NORM_SQL,
+    _ensure_parallel,
+    _norm_words,
+    _word_ngrams,
+)
 
 
 def build_positional_index(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -59,11 +64,11 @@ def phrase_match_positions(index: DataFrame, terms: list[str]) -> DataFrame:
 
 @register(
     "phrase_search_topdocs",
-    """
+    f"""
     WITH words AS (
       SELECT doc_id,
              list_filter(string_split(
-               lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+               {_NORM_SQL}, ' '),
                w -> w <> '') AS ws
       FROM documents
     ),
@@ -113,17 +118,8 @@ def phrase_search_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 7.4 s of the query's 9.2 s before this round-6 fix). Fan the
     # single-split scan out first so the transform parallelizes.
     wsd = _ensure_parallel(d).select(_norm_words(F.col("text")).alias("ws"))
-    bigram = F.when(
-        F.size("ws") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ws") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("ws"), i), F.element_at(F.col("ws"), i + 1)
-            ),
-        ),
-    )
     top = (
-        wsd.select(F.explode(bigram).alias("bigram"))
+        wsd.select(F.explode(_word_ngrams(F.col("ws"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram").asc())

@@ -123,12 +123,6 @@ def _hyperplanes(n_planes: int = 8, dim: int = DIM) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def _plane_bit(vec_col, plane: list[float]):
-    """Spark sign-bit of v . plane (plane as literal doubles, JVM-side)."""
-    h = F.array(*[F.lit(float(x)) for x in plane])
-    return F.when(_dot(F.col(vec_col) if isinstance(vec_col, str) else vec_col, h) >= 0, 1).otherwise(0)
-
-
 def _plane_dot_spark_sql(col: str, plane: list[float]) -> str:
     """Spark-SQL string twin of ``_dot(col, array(<plane lits>))``: the same
     zip_with/aggregate double fold over the same literal doubles (``repr``
@@ -2453,6 +2447,8 @@ from fpl_data_pipeline_spark.operators.dedup import (  # noqa: E402
     SPAN_N,
     WINNOW_FP_CAP,
     WINNOW_W,
+    _NORM_SQL,
+    _TRIGRAM_SQL,
     _pmh_perm_sql,
     _portable_simhash_chunks,
     doc_words,
@@ -2493,11 +2489,11 @@ from fpl_data_pipeline_spark.plans.advanced_relational import (  # noqa: E402
 )
 
 # shared normalized-words CTE for the document-keyed families below
-_AUDIT_WORDS_SQL = """
+_AUDIT_WORDS_SQL = f"""
     audit_words AS (
       SELECT doc_id,
              list_filter(string_split(
-               lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+               {_NORM_SQL}, ' '),
                w -> w <> '') AS ws
       FROM documents
     )"""
@@ -2561,7 +2557,7 @@ _CAP_FAMILY_AGG_SQL = """
         SELECT doc_id,
                unnest(list_distinct(list_transform(
                  range(1, greatest(len(ws) - 1, 1)),
-                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS shingle
+                 i -> {_TRIGRAM_SQL}))) AS shingle
         FROM audit_words WHERE len(ws) >= 3
       ) GROUP BY shingle HAVING COUNT(*) >= 2
     ),
@@ -2571,7 +2567,7 @@ _CAP_FAMILY_AGG_SQL = """
                unnest(list_transform(
                  range(1, greatest(len(ws) - 1, 1)),
                  i -> {{'pos': i - 1,
-                        'h': substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 15)}}
+                        'h': substr(md5({_TRIGRAM_SQL}), 1, 15)}}
                )) AS u
         FROM audit_words WHERE len(ws) >= 3
       )
@@ -2593,7 +2589,7 @@ _CAP_FAMILY_AGG_SQL = """
         SELECT doc_id,
                unnest(list_transform(
                  range(1, greatest(len(ws) - {SPAN_N - 2}, 1)),
-                 i -> substr(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+                 i -> substr(md5({_TRIGRAM_SQL}
                              || ' ' || ws[i+3] || ' ' || ws[i+4]), 1, 16))) AS h
         FROM audit_words WHERE len(ws) >= {SPAN_N}
       ) GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
@@ -2655,7 +2651,7 @@ _CAP_FAMILY_AGG_SQL = """
       SELECT doc_id,
              ('0x' || substr(md5(unnest(list_distinct(list_transform(
                range(1, greatest(len(ws) - 1, 1)),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])))), 1, 15))::BIGINT AS h0
+               i -> {_TRIGRAM_SQL})))), 1, 15))::BIGINT AS h0
       FROM audit_words WHERE len(ws) >= 3
     ),
     mh_sigs AS (

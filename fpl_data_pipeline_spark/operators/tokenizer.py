@@ -32,6 +32,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from fpl_data_pipeline_spark.operators.dedup import (
+    _NORM_SQL,
+    _NORM_WORDS_SQL,
+    _norm_words,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -102,7 +107,7 @@ _VOCAB_VALUES = ", ".join(f"('{u}')" for u in VOCAB_UNITS)
     toks AS (
       SELECT source,
              unnest(list_filter(string_split(
-               lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
+               {_NORM_SQL}, ' '),
                w -> w <> '')) AS word
       FROM documents
     ),
@@ -151,8 +156,6 @@ def wordpiece_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenizer (dedup._norm_words, round-11: token-identical by the
     # split-on-runs == collapse-then-split-on-space argument, A/B-verified
     # corpus-wide) — one regex pass, no materialized collapsed string.
-    from fpl_data_pipeline_spark.operators.dedup import _norm_words
-
     toks = d.select(
         "source", F.explode(_norm_words(F.col("text"))).alias("word")
     )
@@ -277,10 +280,7 @@ def _bpe_merge_oracle() -> str:
 
 @register(
     "bpe_train_merges",
-    _bpe_merge_oracle().format(
-        words="list_filter(string_split(lower(trim(regexp_replace("
-        "text, '\\s+', ' ', 'g'))), ' '), w -> w <> '')"
-    ),
+    _bpe_merge_oracle().format(words=_NORM_WORDS_SQL),
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned BPE merge table after BPE_MERGES training rounds:
@@ -307,12 +307,7 @@ def bpe_vocab(d: DataFrame) -> DataFrame:
     lazily checkpointed so every training round reads the collapsed table,
     never the corpus. Only [a-z0-9]+ words are trainable units."""
     words = d.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("word")
+        F.explode(_norm_words(F.col("text"))).alias("word")
     )
     return (
         words.filter(F.col("word").rlike("^[a-z0-9]+$"))
@@ -471,10 +466,7 @@ def _bpe_fertility_oracle() -> str:
 
 @register(
     "bpe_encode_fertility",
-    _bpe_fertility_oracle().format(
-        words="list_filter(string_split(lower(trim(regexp_replace("
-        "text, '\\s+', ' ', 'g'))), ' '), w -> w <> '')"
-    ),
+    _bpe_fertility_oracle().format(words=_NORM_WORDS_SQL),
 )
 def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source encode fertility under the LEARNED BPE merge table:
@@ -485,12 +477,7 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("word"),
+        F.explode(_norm_words(F.col("text"))).alias("word"),
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     # the one corpus-sized pass; everything downstream is vocab-sized
     swf = (

@@ -1167,19 +1167,16 @@ NEIGH_M = 20
 # longs, so up to this many ROWS it broadcasts (removing the shuffle of
 # the |train|-sized candidate side); past it the plan falls back to the
 # shuffle join unchanged. 5M rows ~ 120 MB built — comfortably inside the
-# 8 GB / 512M-row broadcast cap and this box's driver heap; env-tunable
-# for bigger drivers. n_items is bounded by the part table's row count
-# (items are l_partkey FKs), a footer-metadata count.
+# 8 GB / 512M-row broadcast cap and the driver heap. n_items is bounded
+# by the part table's row count (items are l_partkey FKs), a
+# footer-metadata count.
 CF_CO_BROADCAST_ROWS = 5_000_000
 
 
 def _co_broadcast_ok(n_items_bound: int) -> bool:
     """True when the truncated co-model's row bound fits the broadcast
     budget — split out so the boundary is unit-testable."""
-    import os
-
-    budget = int(os.environ.get("SPARK_GRAFT_CF_BCAST_ROWS", CF_CO_BROADCAST_ROWS))
-    return n_items_bound * NEIGH_M <= budget
+    return n_items_bound * NEIGH_M <= CF_CO_BROADCAST_ROWS
 
 
 @register(

@@ -175,14 +175,6 @@ from fpl_data_pipeline_spark.registry import register as _register
 from fpl_data_pipeline_spark.tables import table as _table
 
 
-def route_dead_letters(parsed: "DataFrame", parsed_col: str, raw_col: str):
-    """(good, dead) split of a PERMISSIVE-parsed frame: rows whose struct
-    is NULL carry their raw payload to the dead-letter side."""
-    good = parsed.filter(F.col(parsed_col).isNotNull())
-    dead = parsed.filter(F.col(parsed_col).isNull()).select(raw_col)
-    return good, dead
-
-
 @_register(
     "json_dead_letter_summary",
     """

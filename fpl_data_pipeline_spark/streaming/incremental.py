@@ -313,13 +313,6 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-# whitespace-canonicalized content fingerprint — the SAME expression
-# dedup_incremental_batch registers (functions/corpus_queries.py), so the
-# streaming loop and the offline query agree byte-for-byte on what counts
-# as a duplicate
-_FP = "md5(lower(trim(regexp_replace(text, '\\\\s+', ' '))))"
-
-
 def run_fingerprint_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -349,7 +342,7 @@ def run_fingerprint_ingest(
     Exactly-once, both outputs: labels are overwritten per batch_id path;
     the probe reads base UNION unfolded deltas EXCLUDING the batch's own,
     so a replayed batch recomputes the identical 'new' set and re-publishes
-    nothing (publish_fingerprint_delta no-ops on the published dir or the
+    nothing (publish_band_delta no-ops on the published dir or the
     durable applied-set). Publishing only the fps that probed 'new' keeps
     the state a true SET — no duplicate fp rows accumulate even though the
     fold itself never dedups.
@@ -362,11 +355,12 @@ def run_fingerprint_ingest(
     to the operator by the offline-parity test) and the 'new' delta
     (hit-is-null filter). The fold is the only state-sized rewrite and
     runs on a cadence."""
+    from fpl_data_pipeline_spark.operators.dedup import _norm_text
     from fpl_data_pipeline_spark.operators.incremental_state import (
-        fold_fingerprint_deltas,
+        fold_band_deltas,
         gc_band_state_generations,
-        publish_fingerprint_delta,
-        read_fingerprint_state,
+        publish_band_delta,
+        read_band_state,
     )
 
     droot = delta_dir or os.path.join(out_dir, "_state_deltas")
@@ -374,9 +368,11 @@ def run_fingerprint_ingest(
 
     def probe_and_publish(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        fps = batch_df.select("doc_id", F.expr(_FP).alias("fp"))
-        state = read_fingerprint_state(sp, state_table, droot,
-                                       exclude_batch=batch_id)
+        # the content fingerprint dedup_incremental_batch computes, so the
+        # streaming loop and the offline query agree on what is a duplicate
+        fp = F.md5(_norm_text(F.col("text")))
+        fps = batch_df.select("doc_id", fp.alias("fp"))
+        state = read_band_state(sp, state_table, droot, exclude_batch=batch_id)
         hit = fps.join(
             state.select("fp").withColumn("hit", F.lit(1)), "fp", "left"
         ).localCheckpoint()
@@ -388,7 +384,7 @@ def run_fingerprint_ingest(
         )
         labels.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
         new_fps = hit.filter(F.col("hit").isNull()).select("fp").distinct()
-        publish_fingerprint_delta(new_fps, droot, batch_id)
+        publish_band_delta(new_fps, droot, batch_id)
 
     q = (
         stream.writeStream.outputMode("append")
@@ -403,8 +399,8 @@ def run_fingerprint_ingest(
         gen = 0
         while os.path.exists(os.path.join(base, f"gen-{gen}")):
             gen += 1
-        fold_fingerprint_deltas(spark, state_table, droot,
-                                os.path.join(base, f"gen-{gen}"))
+        fold_band_deltas(spark, state_table, droot,
+                         os.path.join(base, f"gen-{gen}"))
         if gc:
             gc_band_state_generations(spark, state_table, base,
                                       delta_root=droot)

@@ -102,9 +102,9 @@ def test_fp_streaming_replay_is_exactly_once(spark, doc_batches, tmp_path):
     own delta) and the state never gains a duplicate fp row, through the
     replay and through the eventual fold."""
     from fpl_data_pipeline_spark.operators.incremental_state import (
-        fold_fingerprint_deltas,
-        publish_fingerprint_delta,
-        read_fingerprint_state,
+        fold_band_deltas,
+        publish_band_delta,
+        read_band_state,
     )
     from fpl_data_pipeline_spark.streaming.incremental import (
         run_fingerprint_ingest,
@@ -126,12 +126,12 @@ def test_fp_streaming_replay_is_exactly_once(spark, doc_batches, tmp_path):
         run_fingerprint_ingest(spark, src, tbl, out, ckpt, fold=False)
         assert _labels(spark, out, 0) == first  # byte-identical labels
         # state view (base + published deltas) exact: 3 boot + 2 new, once
-        assert read_fingerprint_state(spark, tbl, droot).count() == 5
+        assert read_band_state(spark, tbl, droot).count() == 5
         # and the durable applied-set refuses a re-publish even after fold
-        fold_fingerprint_deltas(spark, tbl, droot, str(tmp_path / "gen0"))
+        fold_band_deltas(spark, tbl, droot, str(tmp_path / "gen0"))
         assert spark.table(tbl).count() == 5
         new_fps = _fps(b2).select("fp").distinct()
-        assert publish_fingerprint_delta(new_fps, droot, 0) is False
+        assert publish_band_delta(new_fps, droot, 0) is False
         assert spark.table(tbl).count() == 5
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -222,9 +222,9 @@ def test_fp_gc_reads_fold_delta_root_from_marker(spark, doc_batches,
     (the marker names the loop's delta_root), and a mismatched explicit
     delta_root is rejected rather than silently trusted."""
     from fpl_data_pipeline_spark.operators.incremental_state import (
-        fold_fingerprint_deltas,
+        fold_band_deltas,
         gc_band_state_generations,
-        publish_fingerprint_delta,
+        publish_band_delta,
     )
 
     b1, b2, _ = doc_batches
@@ -239,9 +239,8 @@ def test_fp_gc_reads_fold_delta_root_from_marker(spark, doc_batches,
             _fps(b2).join(spark.table(tbl), "fp", "left_anti")
             .select("fp").distinct()
         )
-        publish_fingerprint_delta(new_fps, droot, 0)
-        fold_fingerprint_deltas(spark, tbl, droot,
-                                os.path.join(gen_base, "gen-0"))
+        publish_band_delta(new_fps, droot, 0)
+        fold_band_deltas(spark, tbl, droot, os.path.join(gen_base, "gen-0"))
         manifest = os.path.join(droot, "_fold_manifest.json")
         with open(manifest, "w") as f:
             f.write("{}")  # plant the post-rename crash evidence
@@ -297,8 +296,8 @@ def test_fp_fold_protocol_random_crash_interleavings(
     from fpl_data_pipeline_spark.operators.incremental_state import (
         _applied_set,
         _InjectedCrash,
-        fold_fingerprint_deltas,
-        publish_fingerprint_delta,
+        fold_band_deltas,
+        publish_band_delta,
         published_batches,
     )
 
@@ -328,18 +327,18 @@ def test_fp_fold_protocol_random_crash_interleavings(
                 b, next_id = next_id, next_id + 1
                 if arg:  # crash between staging write and publish rename
                     with pytest.raises(_InjectedCrash):
-                        publish_fingerprint_delta(frame(rows_of(b)), droot, b,
-                                                  _fail_after="staging")
-                assert publish_fingerprint_delta(
+                        publish_band_delta(frame(rows_of(b)), droot, b,
+                                           _fail_after="staging")
+                assert publish_band_delta(
                     frame(rows_of(b)), droot, b
                 ) is True
             else:
                 try:
-                    fold_fingerprint_deltas(spark, tbl, droot, gen(),
-                                            _fail_after=arg)
+                    fold_band_deltas(spark, tbl, droot, gen(),
+                                     _fail_after=arg)
                 except _InjectedCrash:
                     pass
-        fold_fingerprint_deltas(spark, tbl, droot, gen())  # final clean fold
+        fold_band_deltas(spark, tbl, droot, gen())  # final clean fold
         got = sorted(r["fp"] for r in spark.table(tbl).collect())
         want = sorted(
             [fp for (fp,) in boot]

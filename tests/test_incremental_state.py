@@ -539,6 +539,47 @@ def test_fold_band_deltas_folds_and_cleans(spark, three_batches, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def test_fold_refuses_a_second_delta_root(spark, three_batches, tmp_path):
+    """A fold-loop table is bound to the delta_root of its first fold: a
+    fold from a second root would double-apply across the two applied-sets,
+    so it raises before touching the table, either root's published deltas
+    or either applied-set."""
+    from fpl_data_pipeline_spark.operators.incremental_state import (
+        _applied_set,
+        fold_band_deltas,
+        publish_band_delta,
+        published_batches,
+    )
+
+    _, _, b3 = three_batches
+    tbl = "inc_fold_two_roots_t"
+    try:
+        root_a = _fold_fixture(spark, three_batches, tmp_path, tbl)
+        fold_band_deltas(spark, tbl, root_a, str(tmp_path / "gen0"))
+        root_b = str(tmp_path / "deltas_b")
+        assert publish_band_delta(band_state_long(lsh_doc_band_keys(b3)), root_b, 0)
+
+        def snapshot():
+            return (
+                sorted(spark.table(tbl).collect()),
+                published_batches(root_a),
+                published_batches(root_b),
+                _applied_set(root_a),
+                _applied_set(root_b),
+            )
+
+        before = snapshot()
+        # root A: folded and applied; root B: published, never folded
+        assert before[1] == {} and before[3] == {0}
+        assert list(before[2]) == [0] and before[4] == set()
+        with pytest.raises(ValueError, match="bound to delta_root"):
+            fold_band_deltas(spark, tbl, root_b, str(tmp_path / "gen1"))
+        assert snapshot() == before
+        assert len(before[0]) == 2 * (40 + 31)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
 def test_fold_recovery_mid_swap_and_post_swap(spark, three_batches, tmp_path):
     """Crash-point injection for fold_band_deltas' manifest protocol,
     replicated by hand up to the crash: (a) tmp written + manifest written

@@ -62,16 +62,16 @@ def test_kmeans_fit_empty_corpus(spark, empty_dir):
 
 def test_cf_co_broadcast_guard_boundary(monkeypatch):
     """The co-model broadcast guard flips exactly at the row budget and
-    honors the env override (round-12: broadcast with explicit scale
+    follows the budget constant (round-12: broadcast with explicit scale
     guard, shuffle fallback past it)."""
     from fpl_data_pipeline_spark.plans import advanced_relational as AR
 
     at_budget = AR.CF_CO_BROADCAST_ROWS // AR.NEIGH_M
     assert AR._co_broadcast_ok(at_budget)
     assert not AR._co_broadcast_ok(at_budget + 1)
-    monkeypatch.setenv("SPARK_GRAFT_CF_BCAST_ROWS", "0")
+    monkeypatch.setattr(AR, "CF_CO_BROADCAST_ROWS", 0)
     assert not AR._co_broadcast_ok(1)
-    monkeypatch.setenv("SPARK_GRAFT_CF_BCAST_ROWS", str(10 * AR.NEIGH_M))
+    monkeypatch.setattr(AR, "CF_CO_BROADCAST_ROWS", 10 * AR.NEIGH_M)
     assert AR._co_broadcast_ok(10)
     assert not AR._co_broadcast_ok(11)
 
@@ -80,12 +80,12 @@ def test_cf_holdout_broadcast_fallback_same_result(spark, monkeypatch):
     """cf_holdout_hitrate computes identical values through the broadcast
     plan and the shuffle fallback (the guard changes strategy, never
     results)."""
+    from fpl_data_pipeline_spark.plans import advanced_relational as AR
     from fpl_data_pipeline_spark.plans.advanced_relational import cf_holdout_hitrate
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.delenv("SPARK_GRAFT_CF_BCAST_ROWS", raising=False)
     with_bcast = cf_holdout_hitrate(spark, sf).collect()
-    monkeypatch.setenv("SPARK_GRAFT_CF_BCAST_ROWS", "0")
+    monkeypatch.setattr(AR, "CF_CO_BROADCAST_ROWS", 0)
     without = cf_holdout_hitrate(spark, sf).collect()
     assert with_bcast == without
     assert with_bcast[0]["n_eval_customers"] > 0
