@@ -18,7 +18,7 @@ derived key):
 - clusters:    near-dup edges -> connected components (min-label, with a
                recursive-CTE oracle twin)
 - portable variants (md5 hash family, *_portable): the SAME minhash/simhash/
-  cluster pipelines with an engine-agnostic hash so every stage is
+  cluster code with the hash family passed in as a value, so every stage is
   value-checked against DuckDB; xxhash64 twins stay the production default.
 
 All near-dup queries return a deterministic top-k of the most similar pairs
@@ -29,9 +29,10 @@ so the result is non-trivial on any corpus and stable under ties.
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from fpl_data_pipeline_spark.registry import ORACLE_SQL, register
 from fpl_data_pipeline_spark.tables import table
@@ -566,11 +567,22 @@ def _ngram_jaccard_pairs(d: DataFrame, words: DataFrame | None = None) -> DataFr
     )
 
 
-# --- MinHash + LSH (deterministic; rows-only driver check) ------------------
-N_HASHES = 32
-N_BANDS = 8
-ROWS_PER_BAND = N_HASHES // N_BANDS
-# Band-membership cap for BOTH minhash twins (round 7): a band group's
+# --- MinHash and SimHash sketches: one banded-candidate routine ---------------
+# Each sketch is a per-doc signature, a set of band keys over it, and a pair
+# score. The hash family is a value: xxhash64 (fastest JVM hash; sketch
+# values engine-specific, so its queries are rows-only) or md5 (identical in
+# every implementation, so the *_portable queries are value-checked against
+# DuckDB). Both families run the same signature function, key function and
+# _banded_pairs; only the hashes and widths differ. The md5 widths below are
+# also spelled out in the DuckDB oracles.
+PMH_HASHES = 16
+PMH_BANDS = 4
+PMH_ROWS = PMH_HASHES // PMH_BANDS
+PSH_BITS = 60
+PSH_CHUNKS = 4
+PSH_CHUNK_BITS = PSH_BITS // PSH_CHUNKS
+
+# Band-membership cap for every MinHash family (round 7): a band group's
 # membership is bounded only by duplicate-family size, which a 100 TB
 # boilerplate corpus makes unbounded — the count-agg pre-pass drops
 # over-cap bands before the member collect (exact dedup owns identical
@@ -578,135 +590,6 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 # test corpora produce (~10 members), so results here are unchanged;
 # candidate_cap_audit's mh_band family reports when it fires.
 MH_BAND_CAP = 10_000
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id -> array<long> of 32 min-hashes over word-3-gram shingles.
-
-    Permutations are simulated by hashing the shingle ONCE (variable-length
-    string hash, the expensive step) and deriving the 32 permutation values
-    by re-hashing that fixed 8-byte value with the permutation index — the
-    standard one-hash + cheap-mixer MinHash family. Fully deterministic (no
-    RNG state, reproducible across runs/clusters); ~30% faster than hashing
-    the string 32x. One explode + one groupBy: shuffle cost is O(total
-    shingles).
-    """
-    sh = shingles(df, text_col).withColumn("h0", F.xxhash64("shingle"))
-    sigs = sh.groupBy("doc_id").agg(
-        F.array(
-            *[F.min(F.xxhash64("h0", F.lit(i))) for i in range(N_HASHES)]
-        ).alias("sig")
-    )
-    return sigs
-
-
-def _minhash_pair_estimates(sigs: DataFrame) -> DataFrame:
-    """(doc_id_a, doc_id_b, est_jaccard) for every pair sharing >= 1 LSH
-    band — the candidate half shared by dedup_minhash_pairs and
-    dedup_clusters.
-
-    Banding: 8 bands of 4 rows; band key = xxhash64(band values). Candidate
-    generation uses the in-array group expansion (ARCHITECTURE.md §7): ONE
-    groupBy on (band_id, band_key) collects the sorted (doc_id, sig) set
-    per band group, pairs explode map-side, and the estimate is computed
-    per candidate occurrence so only the 8-byte estimate — not two 32-long
-    signatures — rides the pair-dedup shuffle (first() over identical
-    values replaces dropDuplicates). The old cache + self-join shape
-    shuffled the band relation twice as join sides plus the wide
-    (sig_a, sig_b) candidate set a third time to dedupe; this shuffles the
-    band relation once and then only narrow pair rows.
-
-    MH_BAND_CAP (round 7 — the minhash twins were the last band family
-    without it): per-group membership is "the true duplicate-group size",
-    which at 100 TB is unbounded — a million-copy boilerplate document is
-    a million-member band group buffering a million signature arrays in ONE
-    aggregation buffer, and its C(m, 2) candidates are redundant anyway
-    (exact dedup owns identical text; an over-cap band is
-    non-discriminative). Bands over the cap are dropped by the standard
-    count-agg PRE-pass on BOTH engines; the cap is far above any band this
-    corpus produces, so results here are unchanged, and candidate_cap_audit
-    reports when it fires.
-
-    Round-11 pin: ``sigs`` (the shingle-explode + 32-min-agg pipeline, the
-    family's most expensive stage) feeds TWO consumers below — the alive
-    count-agg pre-pass and the member-collect join — and no ReusedExchange
-    bridges them, so without pinning the whole signature build compiled and
-    RAN twice (2 parquet scans in the r11 before-plan). The checkpointed
-    relation is ONE narrow row per doc (doc_id + 32 longs), the cheapest
-    point in the pipeline to materialize — bands re-derive from it map-side
-    per consumer. Same rationale as winnowing's round-8 pin."""
-    sigs = sigs.localCheckpoint(eager=False)
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * ROWS_PER_BAND + r + 1)
-                                for r in range(ROWS_PER_BAND)
-                            ]
-                        ).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_key")
-    alive = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter((F.col("bs") >= 2) & (F.col("bs") <= MH_BAND_CAP))
-        .drop("bs")
-    )
-    groups = (
-        bands.join(alive, ["band_id", "band_key"])
-        .groupBy("band_id", "band_key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sig"))).alias("members"))
-        .repartition(sigs.sparkSession.sparkContext.defaultParallelism)
-    )
-    return (
-        _expand_member_pairs_streaming(groups)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            (
-                F.aggregate(
-                    F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                ).cast("double")
-                / F.lit(float(N_HASHES))
-            ).alias("est_jaccard"),
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.first("est_jaccard").alias("est_jaccard"))
-    )
-
-
-@register("dedup_minhash_pairs")
-def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-banded MinHash near-dup candidates, top-20 by estimated Jaccard.
-
-    At 100 TB the band groupBy is a shuffle on band keys whose fan-out
-    tracks true duplicate density, never n^2 (see _minhash_pair_estimates).
-    No oracle entry: MinHash estimates are engine-specific (rows-only);
-    the md5-family twin dedup_minhash_portable value-proves the machinery.
-    """
-    d = table(spark, sf_dir, "documents")
-    est = _minhash_pair_estimates(minhash_signatures(d))
-    return est.orderBy(
-        F.col("est_jaccard").desc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc()
-    ).limit(20)
-
-
-# --- SimHash (deterministic; rows-only driver check) ------------------------
-SIMHASH_BITS = 64
-CHUNKS = 4
-CHUNK_BITS = SIMHASH_BITS // CHUNKS
 
 # Chunk-group cap for the SimHash banding (round-6 advice finding): the
 # chunk key space is FIXED (4 chunks x 2^16 values for the production hash,
@@ -722,100 +605,239 @@ CHUNK_BITS = SIMHASH_BITS // CHUNKS
 SIMHASH_CHUNK_CAP = 10_000
 
 
-def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id -> 64-bit SimHash of the word multiset.
+def _md5_60(col):
+    """60-bit int from the first 15 hex chars of md5: fits signed 64-bit on
+    both engines (DuckDB twin: ``('0x' || substr(md5(x), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
-    Per bit b: sign of sum over tokens of (+1 if bit b of xxhash64(token) else
-    -1). Expressed entirely in built-ins: explode + 64 conditional sums +
-    bit assembly — one shuffle (the groupBy), JVM-side codegen throughout.
-    """
-    toks = _ensure_parallel(df).select(
-        "doc_id", F.explode(_norm_words(F.col(text_col))).alias("tok")
+
+class MinHashFamily(NamedTuple):
+    """A MinHash hash family and its banding widths."""
+
+    base: Callable  # shingle -> long: the one variable-length string hash
+    perm: Callable  # (h0, i) -> long: permutation i of the base hash
+    band: Callable  # [band's mins] -> band key
+    n_hashes: int
+    n_bands: int
+
+
+class SimHashFamily(NamedTuple):
+    """A SimHash token hash, its bit width and its chunk count."""
+
+    token: Callable  # token -> long
+    bits: int
+    chunks: int
+
+
+XX_MINHASH = MinHashFamily(
+    base=F.xxhash64,
+    perm=lambda h0, i: F.xxhash64(h0, F.lit(i)),
+    band=lambda mins: F.xxhash64(*mins),
+    n_hashes=32,
+    n_bands=8,
+)
+MD5_MINHASH = MinHashFamily(
+    base=_md5_60,
+    perm=lambda h0, i: _md5_60(F.concat(h0.cast("string"), F.lit(f":{i}"))),
+    band=lambda mins: F.md5(F.concat_ws(",", *[m.cast("string") for m in mins])),
+    n_hashes=PMH_HASHES,
+    n_bands=PMH_BANDS,
+)
+XX_SIMHASH = SimHashFamily(token=F.xxhash64, bits=64, chunks=4)
+MD5_SIMHASH = SimHashFamily(token=_md5_60, bits=PSH_BITS, chunks=PSH_CHUNKS)
+
+
+def minhash_signatures(
+    df: DataFrame, family: MinHashFamily = XX_MINHASH, words: DataFrame | None = None
+) -> DataFrame:
+    """(doc_id, sig): array<long> of ``family.n_hashes`` min-hashes over the
+    doc's word-3-gram shingles.
+
+    Permutations are simulated by hashing the shingle ONCE (variable-length
+    string hash, the expensive step) and deriving each permutation value by
+    re-hashing that fixed value with the permutation index — the standard
+    one-hash + cheap-mixer MinHash family. Fully deterministic (no RNG
+    state, reproducible across runs/clusters); ~30% faster than hashing the
+    string n times. One explode + one groupBy: shuffle cost is O(total
+    shingles). ``words`` optionally supplies a precomputed doc_words(df)
+    relation (the multi-family tokenize-once path)."""
+    hashed = shingles(df, words=words).select(
+        "doc_id", family.base(F.col("shingle")).alias("h0")
     )
-    h = F.xxhash64("tok")
-    agg_bits = toks.groupBy("doc_id").agg(
+    return hashed.groupBy("doc_id").agg(
+        F.array(
+            *[F.min(family.perm(F.col("h0"), i)) for i in range(family.n_hashes)]
+        ).alias("sig")
+    )
+
+
+def minhash_band_keys(family: MinHashFamily) -> Column:
+    """Generator Column (band, key) over a ``sig`` column: one row per band,
+    keyed by the family's hash of that band's rows of mins."""
+    rows = family.n_hashes // family.n_bands
+    keys = [
+        family.band([F.element_at("sig", b * rows + r + 1) for r in range(rows)])
+        for b in range(family.n_bands)
+    ]
+    return F.posexplode(F.array(*keys)).alias("band", "key")
+
+
+def simhash(
+    df: DataFrame, family: SimHashFamily = XX_SIMHASH, words: DataFrame | None = None
+) -> DataFrame:
+    """(doc_id, simhash): the ``family.bits``-bit SimHash of the word multiset.
+
+    Per bit b: sign of sum over tokens of (+1 if bit b of the token hash
+    else -1). Expressed entirely in built-ins: explode + one conditional sum
+    per bit + bit assembly — one shuffle (the groupBy), JVM-side codegen
+    throughout. ``words`` optionally supplies a precomputed doc_words(df)
+    relation."""
+    if words is None:
+        words = doc_words(df)
+    hashed = words.select("doc_id", F.explode("ws").alias("tok")).select(
+        "doc_id", family.token(F.col("tok")).alias("h")
+    )
+    agg_bits = hashed.groupBy("doc_id").agg(
         *[
             F.sum(
-                F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+                F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"b{b}")
-            for b in range(SIMHASH_BITS)
+            for b in range(family.bits)
         ]
     )
-    sim = agg_bits.select(
+    return agg_bits.select(
         "doc_id",
         sum(
             [
-                F.when(F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-                for b in range(SIMHASH_BITS)
+                F.when(F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
+                    F.lit(0).cast("long")
+                )
+                for b in range(family.bits)
             ],
             F.lit(0).cast("long"),
         ).alias("simhash"),
     )
-    return sim
+
+
+def simhash_chunk_keys(family: SimHashFamily) -> Column:
+    """Generator Column (band, key) over a ``simhash`` column: one row per
+    chunk, keyed by that chunk's bits. Pigeonhole: two sketches within
+    hamming < ``family.chunks`` agree on at least one chunk."""
+    width = family.bits // family.chunks
+    keys = [
+        F.shiftright("simhash", c * width).bitwiseAND(F.lit((1 << width) - 1))
+        for c in range(family.chunks)
+    ]
+    return F.posexplode(F.array(*keys)).alias("band", "key")
+
+
+def _banded_pairs(
+    per_doc: DataFrame, keys: Column, payload: str, cap: int, score: Callable
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, <score>) for every pair of docs sharing >= 1
+    band key — the candidate half of every MinHash and SimHash query.
+
+    ``per_doc`` is (doc_id, payload), ``keys`` the sketch's band-key
+    generator Column over the payload, ``score(a, b)`` an aliased Column
+    over two payloads, evaluated per candidate occurrence.
+
+    Shape (ARCHITECTURE.md §7, in-array group expansion): a count-agg
+    PRE-pass keeps band groups of 2..cap members (an over-cap group is
+    non-discriminative, and the post-collect filter is the round-5 OOM
+    shape; candidate_cap_audit reports when the cap fires), ONE groupBy
+    collects each surviving group's sorted (doc_id, payload) members, pairs
+    stream out map-side (per-row memory O(m) even at the cap), and only the
+    narrow score rides the pair-dedup shuffle (first() over identical
+    values replaces dropDuplicates).
+
+    Pin (round 11): the per-doc relation — the shingle/token explode plus
+    one aggregation, the family's most expensive stage — feeds TWO
+    consumers (the pre-pass and the member-collect join); unpinned, only a
+    runtime exchange reuse keeps the signature build from running twice
+    (the r11 before-plan scanned the corpus twice). One narrow row per doc
+    is the cheapest point to materialize; the keys re-explode from it
+    map-side per consumer."""
+    per_doc = per_doc.localCheckpoint(eager=False)
+    keyed = per_doc.select("doc_id", payload, keys)
+    alive = (
+        keyed.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter((F.col("n") >= 2) & (F.col("n") <= cap))
+        .drop("n")
+    )
+    groups = (
+        keyed.join(alive, ["band", "key"])
+        .groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list(F.struct("doc_id", payload))).alias("members"))
+        .repartition(per_doc.sparkSession.sparkContext.defaultParallelism)
+    )
+    scored = _expand_member_pairs_streaming(groups).select(
+        F.col("a.doc_id").alias("doc_id_a"),
+        F.col("b.doc_id").alias("doc_id_b"),
+        score(F.col(f"a.{payload}"), F.col(f"b.{payload}")),
+    )
+    name = scored.columns[-1]
+    return scored.groupBy("doc_id_a", "doc_id_b").agg(F.first(name).alias(name))
+
+
+def minhash_pairs(
+    d: DataFrame, family: MinHashFamily, words: DataFrame | None = None
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, est_jaccard): MinHash-LSH candidate pairs, the
+    estimate being the fraction of equal signature positions."""
+
+    def est(a, b):
+        matches = F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        )
+        return (matches.cast("double") / F.lit(float(family.n_hashes))).alias("est_jaccard")
+
+    sigs = minhash_signatures(d, family, words=words)
+    return _banded_pairs(sigs, minhash_band_keys(family), "sig", MH_BAND_CAP, est)
+
+
+def simhash_pairs(
+    d: DataFrame, family: SimHashFamily, words: DataFrame | None = None
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, hamming): SimHash chunk-banded candidate pairs
+    with their exact hamming distance."""
+    return _banded_pairs(
+        simhash(d, family, words=words),
+        simhash_chunk_keys(family),
+        "simhash",
+        SIMHASH_CHUNK_CAP,
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)).alias("hamming"),
+    )
+
+
+@register("dedup_minhash_pairs")
+def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-banded MinHash near-dup candidates (xxhash64, 32 hashes in 8
+    bands of 4), top-20 by estimated Jaccard.
+
+    At 100 TB the band groupBy is a shuffle on band keys whose fan-out
+    tracks true duplicate density, never n^2 (see _banded_pairs).
+    No oracle entry: MinHash estimates are engine-specific (rows-only);
+    the md5-family twin dedup_minhash_portable runs the same code and
+    value-proves it.
+    """
+    d = table(spark, sf_dir, "documents")
+    return minhash_pairs(d, XX_MINHASH).orderBy(
+        F.col("est_jaccard").desc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc()
+    ).limit(20)
 
 
 @register("dedup_simhash_pairs")
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup candidates via 16-bit chunk banding, top-20 by
-    hamming distance ascending. Pigeonhole: pairs with hamming <= 3 always
-    share at least one of the 4 chunks, so the equi-join on (chunk_id,
-    chunk_value) finds them without n^2 work. Rows-only check (hash design is
-    engine-specific)."""
+    """SimHash near-dup candidates (xxhash64, 64 bits) via 16-bit chunk
+    banding, top-20 by hamming distance ascending. Pigeonhole: pairs with
+    hamming <= 3 always share at least one of the 4 chunks, so the band
+    groups find them without n^2 work. Rows-only check (hash design is
+    engine-specific); dedup_simhash_portable runs the same code with md5."""
     d = table(spark, sf_dir, "documents")
-    sim = simhash(d)
-    chunks = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright("simhash", c * CHUNK_BITS)
-                        .bitwiseAND(F.lit((1 << CHUNK_BITS) - 1))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(CHUNKS)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-    # in-array group expansion (ARCHITECTURE.md §7): one groupBy on the
-    # chunk key replaces the old cache + self-join + dropDuplicates (which
-    # shuffled the chunk relation twice and the pair set a third time);
-    # hamming is computed map-side and only the 1-byte distance rides the
-    # pair-dedup shuffle. The count-agg pre-pass drops over-cap chunk
-    # groups before the collect (sizes is bounded by the 2^18 key space, so
-    # it broadcasts and the filter runs map-side); the streaming expansion
-    # keeps per-row memory O(m) even at the cap. localCheckpoint pins the
-    # chunk relation: it feeds BOTH the pre-pass and the join, and the
-    # tokenize + 64-conditional-sum simhash above it is far costlier than
-    # materializing 4 narrow rows per doc (AQE exchange reuse is a runtime
-    # maybe, not a plan guarantee).
-    chunks = chunks.localCheckpoint(eager=False)
-    sizes = (
-        chunks.groupBy("chunk_id", "chunk_val")
-        .agg(F.count(F.lit(1)).alias("cs"))
-        .filter((F.col("cs") >= 2) & (F.col("cs") <= SIMHASH_CHUNK_CAP))
-        .drop("cs")
-    )
-    groups = (
-        chunks.join(F.broadcast(sizes), ["chunk_id", "chunk_val"])
-        .groupBy("chunk_id", "chunk_val")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("members"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    pairs = (
-        _expand_member_pairs_streaming(groups)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.first("hamming").alias("hamming"))
-    )
-    return pairs.orderBy(
+    return simhash_pairs(d, XX_SIMHASH).orderBy(
         F.col("hamming").asc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc()
     ).limit(20)
 
@@ -895,6 +917,18 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
+def _cluster_summary(pairs: DataFrame) -> DataFrame:
+    """Top-20 (cluster_id, cluster_size) of the components of ``pairs``,
+    largest first: the shared tail of the dedup_clusters* queries."""
+    return (
+        connected_components(pairs)
+        .groupBy("cluster_id")
+        .agg(F.count(F.lit(1)).alias("cluster_size"))
+        .orderBy(F.col("cluster_size").desc(), F.col("cluster_id").asc())
+        .limit(20)
+    )
+
+
 @register(
     "dedup_clusters_exact",
     f"""
@@ -941,13 +975,7 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _ngram_jaccard_pairs(d).filter(F.col("jaccard") >= 0.5).select(
         "doc_id_a", "doc_id_b"
     )
-    comps = connected_components(pairs)
-    return (
-        comps.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .orderBy(F.col("cluster_size").desc(), F.col("cluster_id").asc())
-        .limit(20)
-    )
+    return _cluster_summary(pairs)
 
 
 @register("dedup_clusters")
@@ -958,15 +986,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific); the component operator itself is unit-tested on
     planted graphs (tests/test_operators.py)."""
     d = table(spark, sf_dir, "documents")
-    est = _minhash_pair_estimates(minhash_signatures(d))
-    pairs = est.filter(F.col("est_jaccard") >= 0.5)
-    comps = connected_components(pairs)
-    return (
-        comps.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .orderBy(F.col("cluster_size").desc(), F.col("cluster_id").asc())
-        .limit(20)
-    )
+    pairs = minhash_pairs(d, XX_MINHASH).filter(F.col("est_jaccard") >= 0.5)
+    return _cluster_summary(pairs)
 
 
 # --- winnowing fingerprints (Schleimer/Wilkerson/Aiken local sampling) ------
@@ -1188,18 +1209,11 @@ def winnowing_candidate_pairs(d: DataFrame, fp_cap: int = WINNOW_FP_CAP) -> Data
 
 
 # --- portable MinHash (md5 permutation family): oracle-checkable end-to-end --
-# The production MinHash above uses xxhash64 (fastest JVM hash; sketch values
-# engine-specific -> rows-only check). This variant swaps the hash family for
-# md5 — identical in every implementation — so the ENTIRE pipeline
-# (signatures -> banding -> candidates -> estimated Jaccard) is reproduced
-# bit-for-bit by the DuckDB oracle. Same algorithm, same banding, ~3x the
-# per-shingle hash cost: the value-level proof that the sketch machinery is
-# correct, while the xxhash64 path stays the 100 TB default.
-PMH_HASHES = 16
-PMH_BANDS = 4
-PMH_ROWS = PMH_HASHES // PMH_BANDS
-
-
+# minhash_pairs(d, MD5_MINHASH) runs the production code with the md5 family
+# — identical in every implementation — so the ENTIRE pipeline (signatures
+# -> banding -> candidates -> estimated Jaccard) is reproduced bit-for-bit
+# by the DuckDB oracle below. ~3x the per-shingle hash cost of xxhash64,
+# which stays the 100 TB default.
 def _pmh_perm_sql(i: int) -> str:
     """DuckDB: permutation-i hash of the shingle's base hash h0 (decimal
     string), 60-bit int (15 hex chars: fits signed 64-bit on both engines)."""
@@ -1208,7 +1222,7 @@ def _pmh_perm_sql(i: int) -> str:
 
 def _pmh_band_sql(b: int) -> str:
     """DuckDB: one band's projection — band id, md5 band key over the band's
-    ROWS_PER_BAND signature mins (comma-joined decimal strings), all mins."""
+    PMH_ROWS signature mins (comma-joined decimal strings), all mins."""
     sep = " || ',' || "
     key = sep.join(f"CAST(m{b * PMH_ROWS + r} AS VARCHAR)" for r in range(PMH_ROWS))
     mins = ", ".join(f"m{i}" for i in range(PMH_HASHES))
@@ -1260,10 +1274,10 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-permutation mins, band keys, candidate join, estimated Jaccard — is
     deterministic and identical in DuckDB, giving the sketch pipeline a
     value-level parity row. Production corpora use dedup_minhash_pairs
-    (xxhash64, same shape, ~3x faster hashing)."""
+    (xxhash64, same code, ~3x faster hashing)."""
     d = table(spark, sf_dir, "documents")
     return (
-        _portable_minhash_candidates(d)
+        minhash_pairs(d, MD5_MINHASH)
         .orderBy(F.col("est_jaccard").desc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc())
         .limit(20)
     )
@@ -1340,24 +1354,14 @@ def dedup_clusters_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation — sanctioned rows-only)."""
     d = table(spark, sf_dir, "documents")
     pairs = (
-        _portable_minhash_candidates(d)
+        minhash_pairs(d, MD5_MINHASH)
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_id_a", "doc_id_b")
     )
-    comps = connected_components(pairs)
-    return (
-        comps.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .orderBy(F.col("cluster_size").desc(), F.col("cluster_id").asc())
-        .limit(20)
-    )
+    return _cluster_summary(pairs)
 
 
 # --- portable SimHash (md5, 60 bits): oracle-checkable ----------------------
-PSH_BITS = 60
-PSH_CHUNKS = 4
-PSH_CHUNK_BITS = PSH_BITS // PSH_CHUNKS
-
 # Portable-SimHash keyed-chunk relation as a reusable WITH-fragment (md5
 # hash family — reproducible on both engines). Composed by the
 # dedup_simhash_portable oracle and similarity.candidate_cap_audit, so both
@@ -1428,95 +1432,9 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     production default."""
     d = table(spark, sf_dir, "documents")
     return (
-        _portable_simhash_pairs(d)
+        simhash_pairs(d, MD5_SIMHASH)
         .orderBy(F.col("hamming").asc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc())
         .limit(20)
-    )
-
-
-def _portable_simhash_chunks(d: DataFrame, words: DataFrame | None = None) -> DataFrame:
-    """(doc_id, simhash, chunk_id, chunk_val) — the portable-SimHash keyed
-    chunk relation (md5 family), shared by _portable_simhash_pairs and
-    similarity.candidate_cap_audit (mirrored in SQL by PSH_KEYED_SQL).
-    ``words`` optionally supplies a precomputed doc_words(d) relation."""
-    if words is None:
-        words = doc_words(d)
-    toks = words.select("doc_id", F.explode("ws").alias("tok"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    agg_bits = toks.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("h", bb).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{bb}")
-            for bb in range(PSH_BITS)
-        ]
-    )
-    sim = agg_bits.select(
-        "doc_id",
-        sum(
-            [
-                F.when(F.col(f"b{bb}") > 0, F.shiftleft(F.lit(1).cast("long"), bb)).otherwise(
-                    F.lit(0).cast("long")
-                )
-                for bb in range(PSH_BITS)
-            ],
-            F.lit(0).cast("long"),
-        ).alias("simhash"),
-    )
-    chunks = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright("simhash", c * PSH_CHUNK_BITS)
-                        .bitwiseAND(F.lit((1 << PSH_CHUNK_BITS) - 1))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(PSH_CHUNKS)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-    return chunks
-
-
-def _portable_simhash_pairs(d: DataFrame, words: DataFrame | None = None) -> DataFrame:
-    """(doc_id_a, doc_id_b, hamming) for every chunk-banded candidate pair —
-    the portable-SimHash engine half shared by dedup_simhash_portable and
-    dedup_consensus_pairs. ``words`` optionally supplies a precomputed
-    doc_words(d) relation (the multi-family tokenize-once path)."""
-    # localCheckpoint: same two-consumer pinning rationale as the
-    # production pipeline above (pre-pass + join both read chunks)
-    chunks = _portable_simhash_chunks(d, words=words).localCheckpoint(eager=False)
-    # in-array group expansion (ARCHITECTURE.md §7) — same shape as the
-    # production dedup_simhash_pairs, including the SIMHASH_CHUNK_CAP
-    # count-agg pre-pass (mirrored in the oracle's sizes CTE) and the
-    # streaming expansion; the oracle keeps its equi-join formulation
-    # (engines need not share plan shapes, only values).
-    sizes = (
-        chunks.groupBy("chunk_id", "chunk_val")
-        .agg(F.count(F.lit(1)).alias("cs"))
-        .filter((F.col("cs") >= 2) & (F.col("cs") <= SIMHASH_CHUNK_CAP))
-        .drop("cs")
-    )
-    groups = (
-        chunks.join(F.broadcast(sizes), ["chunk_id", "chunk_val"])
-        .groupBy("chunk_id", "chunk_val")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("members"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism)
-    )
-    return (
-        _expand_member_pairs_streaming(groups)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int").alias("hamming"),
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.first("hamming").alias("hamming"))
     )
 
 
@@ -1533,86 +1451,6 @@ _PMH_DOT_BB = (
     "list_reduce(list_transform(range(1, 65), "
     "i -> eb.embedding[i]::DOUBLE * eb.embedding[i]::DOUBLE), (x, y) -> x + y)"
 )
-
-
-def portable_minhash_bands(d: DataFrame, words: DataFrame | None = None) -> DataFrame:
-    """(doc_id, ms, band_id, band_key): portable md5-MinHash signatures +
-    exploded band keys — the keyed relation under the portable candidate
-    generator, split out so candidate_cap_audit can report MH_BAND_CAP
-    drops from the same code."""
-    sh = shingles(d, words=words)
-    h0 = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h0.alias("h0"))
-    perm = lambda i: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat(F.col("h0").cast("string"), F.lit(f":{i}"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    sigs = hashed.groupBy("doc_id").agg(
-        *[F.min(perm(i)).alias(f"m{i}") for i in range(PMH_HASHES)]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat_ws(",", *[F.col(f"m{b * PMH_ROWS + r}").cast("string") for r in range(PMH_ROWS)])
-            ).alias("band_key"),
-        )
-        for b in range(PMH_BANDS)
-    ]
-    return sigs.select(
-        "doc_id",
-        F.array(*[F.col(f"m{i}") for i in range(PMH_HASHES)]).alias("ms"),
-        F.explode(F.array(*band_structs)).alias("band"),
-    ).select("doc_id", "ms", "band.band_id", "band.band_key")
-
-
-def _portable_minhash_candidates(
-    d: DataFrame, words: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id_a, doc_id_b, est_jaccard) candidate pairs via the portable
-    md5 MinHash family — the shared engine half of dedup_minhash_portable /
-    dedup_hybrid_verify. ``words`` optionally supplies a precomputed
-    doc_words(d) relation (the multi-family tokenize-once path)."""
-    # NOT pinned: the pre-pass count and the member-collect join share the
-    # same exchange on (band_id, band_key), which AQE's ReusedExchange
-    # dedups at runtime — an interleaved A/B of none/sigs-pin/bands-pin at
-    # sf0.1 measured all three identical (~1.8-2.0 s on the prod twin).
-    bands = portable_minhash_bands(d, words=words)
-    # in-array group expansion (ARCHITECTURE.md §7) — same shape as the
-    # production _minhash_pair_estimates; the signature vector rides the
-    # group array once and the match count is computed map-side, so only
-    # the 8-byte estimate reaches the pair-dedup shuffle. The oracle keeps
-    # its equi-join formulation (values, not plan shapes, are the contract).
-    alive = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter((F.col("bs") >= 2) & (F.col("bs") <= MH_BAND_CAP))
-        .drop("bs")
-    )
-    groups = (
-        bands.join(alive, ["band_id", "band_key"])
-        .groupBy("band_id", "band_key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "ms"))).alias("members"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism)
-    )
-    return (
-        _expand_member_pairs_streaming(groups)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            (
-                F.aggregate(
-                    F.zip_with("a.ms", "b.ms", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                ).cast("double")
-                / PMH_HASHES
-            ).alias("est_jaccard"),
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.first("est_jaccard").alias("est_jaccard"))
-    )
 
 
 @register(
@@ -1643,7 +1481,7 @@ def dedup_hybrid_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
-    cands = _portable_minhash_candidates(d)
+    cands = minhash_pairs(d, MD5_MINHASH)
     ea = emb.select(F.col("vec_id").alias("doc_id_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("doc_id_b"), F.col("embedding").alias("vb"))
     cos = (_dot("va", "vb") / (_norm("va") * _norm("vb"))).alias("cosine")
@@ -1694,7 +1532,7 @@ def dedup_apply_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch pipeline and the recursive-CTE components."""
     d = table(spark, sf_dir, "documents")
     pairs = (
-        _portable_minhash_candidates(d)
+        minhash_pairs(d, MD5_MINHASH)
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_id_a", "doc_id_b")
     )
@@ -1974,7 +1812,7 @@ def dedup_consensus_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram/hash/band logic is byte-identical.
     words = doc_words(d).localCheckpoint(eager=False)
     mh = (
-        _portable_minhash_candidates(d, words=words)
+        minhash_pairs(d, MD5_MINHASH, words=words)
         .filter(F.col("est_jaccard") >= CONSENSUS_EST_JACCARD)
         .select("doc_id_a", "doc_id_b", F.lit("minhash").alias("signal"))
     )
@@ -1984,7 +1822,7 @@ def dedup_consensus_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id_a", "doc_id_b", F.lit("ngram").alias("signal"))
     )
     sh = (
-        _portable_simhash_pairs(d, words=words)
+        simhash_pairs(d, MD5_SIMHASH, words=words)
         .filter(F.col("hamming") <= CONSENSUS_MAX_HAMMING)
         .select("doc_id_a", "doc_id_b", F.lit("simhash").alias("signal"))
     )
@@ -2206,7 +2044,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # pinned: the candidate relation now feeds the semi-join bound below
     # AND the est/exact join — one banding pass, not two
-    cand = _portable_minhash_candidates(d).localCheckpoint(eager=False)
+    cand = minhash_pairs(d, MD5_MINHASH).localCheckpoint(eager=False)
     sh = shingles(d).localCheckpoint(eager=False)
     # Round-11: exact verification via per-doc shingle ARRAYS +
     # array_intersect (the prefix-filter round-8 shape) instead of joining
@@ -2906,7 +2744,7 @@ def lsh_operating_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     stats = _set_overlap_stats(shingles(d), "shingle", ids=d)
     cand = (
-        _portable_minhash_candidates(d)
+        minhash_pairs(d, MD5_MINHASH)
         .select("doc_id_a", "doc_id_b")
         .withColumn("is_cand", F.lit(1))
     )

@@ -2437,6 +2437,8 @@ def emb_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # space (more planes / wider chunks), not to raise the cap.
 
 from fpl_data_pipeline_spark.operators.dedup import (  # noqa: E402
+    MD5_MINHASH,
+    MD5_SIMHASH,
     MH_BAND_CAP,
     PMH_BANDS,
     PMH_HASHES,
@@ -2450,16 +2452,18 @@ from fpl_data_pipeline_spark.operators.dedup import (  # noqa: E402
     _NORM_SQL,
     _TRIGRAM_SQL,
     _pmh_perm_sql,
-    _portable_simhash_chunks,
     doc_words,
-    portable_minhash_bands,
+    minhash_band_keys,
+    minhash_signatures,
     shingles,
+    simhash,
+    simhash_chunk_keys,
     span_positional_hashes,
     winnow_doc_fingerprints,
 )
 
 # one band's (doc_id, band_id, band_key) projection for the audit's
-# mh_band family — the oracle-side mirror of portable_minhash_bands
+# mh_band family — the oracle-side mirror of minhash_band_keys(MD5_MINHASH)
 # (same key formula as dedup._pmh_band_sql, over the audit's sigs CTE)
 def _audit_mh_band_sql(b: int) -> str:
     from fpl_data_pipeline_spark.operators.dedup import PMH_ROWS
@@ -2774,7 +2778,13 @@ def candidate_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("nd_band1", sizes(ids, "k1"), ND_BAND_CAP),
         (
             "simhash_chunk",
-            sizes(_portable_simhash_chunks(docs, words=words), "chunk_id", "chunk_val"),
+            sizes(
+                simhash(docs, MD5_SIMHASH, words=words).select(
+                    simhash_chunk_keys(MD5_SIMHASH)
+                ),
+                "band",
+                "key",
+            ),
             SIMHASH_CHUNK_CAP,
         ),
         ("shingle_df", sizes(shingles(docs, words=words), "shingle"), SHINGLE_DF_CAP),
@@ -2799,11 +2809,11 @@ def candidate_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             "mh_band",
             sizes(
-                portable_minhash_bands(docs, words=words).select(
-                    "doc_id", "band_id", "band_key"
+                minhash_signatures(docs, MD5_MINHASH, words=words).select(
+                    minhash_band_keys(MD5_MINHASH)
                 ),
-                "band_id",
-                "band_key",
+                "band",
+                "key",
             ),
             MH_BAND_CAP,
         ),

@@ -14,10 +14,13 @@ Three properties are pinned per cap family:
       round 6 drop the full-pair ``.distinct()`` exchange).
 
 The xxhash64 production twins (rows-only under DuckDB forever, since
-xxhash64 is not reproducible there) get planted-pair VALUE checks here:
-on a fixture with known near-dup structure, the production pipelines must
-recover exactly the same pair/cluster sets as their md5 portable twins,
-which ARE oracle-checked.
+xxhash64 is not reproducible there) run the same code as their md5
+portable twins, which ARE oracle-checked: one signature function per sketch
+and one ``_banded_pairs``, with the hash family passed in as a value. Two
+checks pin that here: the twins' optimized plans have the same operator
+sequence (only hash expressions and literals differ), and on a fixture
+with known near-dup structure both families recover exactly the same
+pair/cluster sets.
 """
 
 from __future__ import annotations
@@ -71,13 +74,13 @@ def test_lsh_band_cap_is_count_prepass(spark):
 
 
 def test_simhash_chunk_cap_is_count_prepass(spark):
-    from fpl_data_pipeline_spark.operators.dedup import _portable_simhash_pairs
+    from fpl_data_pipeline_spark.operators.dedup import MD5_SIMHASH, simhash_pairs
 
     d = spark.createDataFrame(
         [(i, f"word{i} common tail text here") for i in range(8)],
         "doc_id long, text string",
     )
-    _assert_count_prepass(_optimized_plan(_portable_simhash_pairs(d)))
+    _assert_count_prepass(_optimized_plan(simhash_pairs(d, MD5_SIMHASH)))
 
 
 def test_hv_block_cap_is_count_prepass(spark):
@@ -211,17 +214,17 @@ def test_cf_basket_cap_silences_prolific_customer(spark, tmp_path):
 def test_mh_band_cap_is_count_prepass(spark):
     """MH_BAND_CAP must be a count pre-pass on BOTH minhash twins."""
     from fpl_data_pipeline_spark.operators.dedup import (
-        _minhash_pair_estimates,
-        _portable_minhash_candidates,
-        minhash_signatures,
+        MD5_MINHASH,
+        XX_MINHASH,
+        minhash_pairs,
     )
 
     d = spark.createDataFrame(
         [(i, f"alpha beta gamma delta doc{i} tail words here") for i in range(6)],
         "doc_id long, text string",
     )
-    _assert_count_prepass(_optimized_plan(_minhash_pair_estimates(minhash_signatures(d))))
-    _assert_count_prepass(_optimized_plan(_portable_minhash_candidates(d)))
+    _assert_count_prepass(_optimized_plan(minhash_pairs(d, XX_MINHASH)))
+    _assert_count_prepass(_optimized_plan(minhash_pairs(d, MD5_MINHASH)))
 
 
 def test_mh_band_cap_silences_boilerplate_band(spark):
@@ -237,8 +240,8 @@ def test_mh_band_cap_silences_boilerplate_band(spark):
     orig = D.MH_BAND_CAP
     D.MH_BAND_CAP = 4
     try:
-        prod = D._minhash_pair_estimates(D.minhash_signatures(d)).collect()
-        port = D._portable_minhash_candidates(d).collect()
+        prod = D.minhash_pairs(d, D.XX_MINHASH).collect()
+        port = D.minhash_pairs(d, D.MD5_MINHASH).collect()
     finally:
         D.MH_BAND_CAP = orig
     for rows in (prod, port):
@@ -470,6 +473,39 @@ def test_clusters_prod_twin_matches_portable(spark, tmp_path):
     ]
     assert prod == port
     assert (27, 3) in prod and (23, 2) in prod and (25, 2) in prod
+
+
+def _operator_sequence(plan: str) -> list[str]:
+    """Operator node names of a plan tree, top-down: tree glyphs,
+    expressions and literals dropped."""
+    import re
+
+    return [re.match(r"[\s:+\-|]*(\w+)", line).group(1) for line in plan.splitlines()]
+
+
+@pytest.mark.parametrize(
+    "rows_only, oracled",
+    [
+        ("dedup_minhash_pairs", "dedup_minhash_portable"),
+        ("dedup_simhash_pairs", "dedup_simhash_portable"),
+    ],
+)
+def test_rows_only_twin_runs_the_oracled_plan(spark, tmp_path, rows_only, oracled):
+    """A rows-only xxhash64 query and its value-oracled md5 twin build the
+    same optimized plan: same operator nodes in the same order, above the
+    same pinned per-doc signature relation."""
+    from fpl_data_pipeline_spark.registry import QUERIES, load_all
+
+    load_all()
+    sf_dir = _write_documents(spark, tmp_path, _near_dup_corpus()[0])
+    plans = [
+        _operator_sequence(_optimized_plan(QUERIES[q](spark, sf_dir)))
+        for q in (rows_only, oracled)
+    ]
+    assert plans[0] == plans[1]
+    # both band-group consumers (count pre-pass, member collect) read the
+    # one per-doc pin
+    assert plans[0].count("LogicalRDD") == 2
 
 
 # --- directed containment expansion (advice finding 3) ------------------------

@@ -58,11 +58,17 @@ def test_dedup_operators_on_degenerate_corpora(spark):
     import pyspark.sql.functions as F
 
     from fpl_data_pipeline_spark.operators.dedup import (
+        MD5_MINHASH,
+        MD5_SIMHASH,
+        XX_MINHASH,
+        XX_SIMHASH,
         capped_shingles,
+        minhash_pairs,
         minhash_signatures,
         ordered_shingles,
         shingles,
         simhash,
+        simhash_pairs,
     )
 
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -87,6 +93,22 @@ def test_dedup_operators_on_degenerate_corpora(spark):
     assert len({tuple(r["sig"]) for r in sigs}) == 1  # one signature class
     sh = {r["doc_id"]: r["simhash"] for r in simhash(same).collect()}
     assert len(set(sh.values())) == 1
+
+    # _banded_pairs under all four hash families: nothing to pair in the
+    # empty and all-short corpora; 5 identical docs pair C(5, 2) = 10 ways
+    # at the exact-duplicate score
+    all_pairs = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    for pairs, family, score, dup_score in (
+        (minhash_pairs, XX_MINHASH, "est_jaccard", 1.0),
+        (minhash_pairs, MD5_MINHASH, "est_jaccard", 1.0),
+        (simhash_pairs, XX_SIMHASH, "hamming", 0),
+        (simhash_pairs, MD5_SIMHASH, "hamming", 0),
+    ):
+        assert pairs(empty, family).count() == 0, family
+        assert pairs(degenerate, family).count() == 0, family
+        rows = pairs(same, family).collect()
+        assert sorted((r["doc_id_a"], r["doc_id_b"]) for r in rows) == all_pairs, family
+        assert {r[score] for r in rows} == {dup_score}, family
 
 
 def test_corpus_operators_on_degenerate_docs(spark, tmp_path):

@@ -288,38 +288,22 @@ def test_streaming_neardup_ingest_gc_reclaims_superseded_gens(
 
 def test_minhash_band_state_rides_the_same_story(spark, tmp_path):
     """The text-minhash family's deploy state is the SAME shape: its
-    (doc_id, band_id, band_key) band relation is already long-form, so a
+    (doc_id, band, key) band relation is already long-form, so a
     rename feeds it through the shared persist/probe/append path — one
     deploy-state story across text-minhash and embedding-LSH (round-8
-    verdict task #5, extended)."""
+    verdict task #5, extended). The band keys come from the engine's own
+    minhash_band_keys, the function minhash_pairs bands with."""
     from fpl_data_pipeline_spark.operators.dedup import (
         MH_BAND_CAP,
+        XX_MINHASH,
+        minhash_band_keys,
         minhash_signatures,
-        N_BANDS,
-        ROWS_PER_BAND,
     )
 
     def band_keys(docs):
-        sigs = minhash_signatures(docs)
-        return sigs.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("sig", b * ROWS_PER_BAND + r + 1)
-                                    for r in range(ROWS_PER_BAND)
-                                ]
-                            ).alias("k"),
-                        )
-                        for b in range(N_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(F.col("doc_id").alias("vec_id"), "bk.band", "bk.k")
+        return minhash_signatures(docs, XX_MINHASH).select(
+            F.col("doc_id").alias("vec_id"), minhash_band_keys(XX_MINHASH)
+        ).select("vec_id", "band", F.col("key").alias("k"))
 
     base_text = "the quick brown fox jumps over the lazy dog again and again today"
     corpus = spark.createDataFrame(

@@ -26,8 +26,9 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from fpl_data_pipeline_spark import get_spark  # noqa: E402
 from fpl_data_pipeline_spark.operators.dedup import (  # noqa: E402
+    MD5_MINHASH,
     _ngram_jaccard_pairs,
-    _portable_minhash_candidates,
+    minhash_pairs,
     prefix_candidate_pairs,
     span_pair_spans,
     winnowing_candidate_pairs,
@@ -252,7 +253,7 @@ def probe(spark, sf_dir: str) -> dict:
         ("span_matches", span_pair_spans(docs)),
         ("prefix_filter", prefix_candidate_pairs(docs)),
         ("emb_neardup", emb_neardup_candidates(emb)),
-        ("minhash", _portable_minhash_candidates(docs)),
+        ("minhash", minhash_pairs(docs, MD5_MINHASH)),
         ("cf_pairs", cf_candidate_pairs(spark, sf_dir)),
         ("semdedup", semdedup_candidate_pairs(spark, sf_dir)),
     ):
