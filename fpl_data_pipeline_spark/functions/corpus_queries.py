@@ -22,6 +22,7 @@ from fpl_data_pipeline_spark.operators.dedup import (
     _word_ngrams,
     shingles,
 )
+from fpl_data_pipeline_spark.operators.vectors import _cos, _cos_sql
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -958,10 +959,6 @@ HS_B = 0.75
 HS_LEX_TOPN = 20
 HS_FINAL_K = 10
 _HS_TERMS_SQL = "(" + ", ".join(f"'{t}'" for t in HS_TERMS) + ")"
-_HS_DOT = (
-    "list_reduce(list_transform(range(1, 65), "
-    "i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE), (x, y) -> x + y)"
-)
 
 
 @register(
@@ -1005,9 +1002,7 @@ _HS_DOT = (
     ),
     qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0)
     SELECT l.doc_id, l.bm25,
-           {_HS_DOT.format(a='e.embedding', b='qv.q')}
-             / (sqrt({_HS_DOT.format(a='e.embedding', b='e.embedding')})
-                * sqrt({_HS_DOT.format(a='qv.q', b='qv.q')})) AS cosine
+           {_cos_sql('e.embedding', 'qv.q')} AS cosine
     FROM lex l
     JOIN embeddings e ON e.vec_id = l.doc_id
     CROSS JOIN qv
@@ -1141,23 +1136,13 @@ def hybrid_search(
             F.col("embedding").alias("q")
         )
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     j = (
         F.broadcast(lex)
         .join(emb, F.col("vec_id") == F.col("doc_id"))
         .crossJoin(F.broadcast(qv))
     )
-    cos = _dot("embedding", "q") / (
-        F.sqrt(_dot("embedding", "embedding")) * F.sqrt(_dot("q", "q"))
-    )
     return (
-        j.select("doc_id", "bm25", cos.alias("cosine"))
+        j.select("doc_id", "bm25", _cos("embedding", "q").alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
         .limit(final_k)
     )

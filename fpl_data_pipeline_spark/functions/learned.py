@@ -501,7 +501,8 @@ def nb_alpha_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # - per-doc residuals quantize to integer micro-units BEFORE the gradient
 #   sum (a raw double sum is partition-order-dependent);
 # - weights are integer micro-unit vectors updated by floor(eta*mean+0.5),
-#   so every step's state is exact integers (the kmp_assign convention).
+#   so every step's state is exact integers (similarity.LLOYD_EXACT6's
+#   convention).
 #
 # Scale shape: one tokenization pass reduces to the (doc, bucket, n)
 # feature relation (pinned; every step reuses it); each step is one

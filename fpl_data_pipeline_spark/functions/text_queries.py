@@ -18,6 +18,7 @@ from fpl_data_pipeline_spark.operators.dedup import (
     _word_ngrams,
     _words,  # noqa: F401  (re-exported next to _norm_text)
 )
+from fpl_data_pipeline_spark.operators.vectors import _cos
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
 
@@ -521,20 +522,11 @@ def text_hash_vector_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fa = fv.select(F.col("doc_id").alias("doc_id_a"), F.col("fv").alias("fa"))
     fb = fv.select(F.col("doc_id").alias("doc_id_b"), F.col("fv").alias("fb"))
-    dot = F.aggregate(
-        F.zip_with("fa", "fb", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(
-        F.aggregate(F.transform("fa", lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform("fb", lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
     return (
         pairs.join(fa, "doc_id_a")
         .join(fb, "doc_id_b")
         .select(
-            "doc_id_a", "doc_id_b", F.round(dot / (na * nb), 6).alias("cosine")
+            "doc_id_a", "doc_id_b", F.round(_cos("fa", "fb"), 6).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col("doc_id_a").asc(), F.col("doc_id_b").asc())
         .limit(20)

@@ -34,6 +34,7 @@ from typing import Callable, NamedTuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from fpl_data_pipeline_spark.operators.vectors import _cos, _cos_sql
 from fpl_data_pipeline_spark.registry import ORACLE_SQL, register
 from fpl_data_pipeline_spark.tables import table
 
@@ -908,6 +909,10 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         if changed == 0:
             converged = True
             break
+    # every round's labels are eagerly checkpointed, so nothing downstream
+    # reads `edges`: release it, or each call leaves a cached relation that
+    # later calls over the same pairs plan are served from
+    edges.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge within {max_iters} "
@@ -1438,28 +1443,12 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB dot products for the hybrid query (same fold order as Spark)
-_PMH_DOT = (
-    "list_reduce(list_transform(range(1, 65), "
-    "i -> ea.embedding[i]::DOUBLE * eb.embedding[i]::DOUBLE), (x, y) -> x + y)"
-)
-_PMH_DOT_AA = (
-    "list_reduce(list_transform(range(1, 65), "
-    "i -> ea.embedding[i]::DOUBLE * ea.embedding[i]::DOUBLE), (x, y) -> x + y)"
-)
-_PMH_DOT_BB = (
-    "list_reduce(list_transform(range(1, 65), "
-    "i -> eb.embedding[i]::DOUBLE * eb.embedding[i]::DOUBLE), (x, y) -> x + y)"
-)
-
-
 @register(
     "dedup_hybrid_verify",
     _PMH_COMMON_SQL
     + f"""
     SELECT s.doc_id_a, s.doc_id_b, s.est_jaccard,
-           {_PMH_DOT}
-             / (sqrt({_PMH_DOT_AA}) * sqrt({_PMH_DOT_BB})) AS cosine
+           {_cos_sql('ea.embedding', 'eb.embedding')} AS cosine
     FROM scored s
     JOIN embeddings ea ON ea.vec_id = s.doc_id_a
     JOIN embeddings eb ON eb.vec_id = s.doc_id_b
@@ -1477,14 +1466,12 @@ def dedup_hybrid_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     thing stays linear in candidate count. Docs without embeddings drop out
     (inner join) — at sf0.1 only the embedded subset participates, same on
     both engines."""
-    from fpl_data_pipeline_spark.operators.similarity import _dot, _norm
-
     d = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
     cands = minhash_pairs(d, MD5_MINHASH)
     ea = emb.select(F.col("vec_id").alias("doc_id_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("doc_id_b"), F.col("embedding").alias("vb"))
-    cos = (_dot("va", "vb") / (_norm("va") * _norm("vb"))).alias("cosine")
+    cos = _cos("va", "vb").alias("cosine")
     return (
         cands.join(ea, "doc_id_a")
         .join(eb, "doc_id_b")

@@ -15,27 +15,23 @@ path shuffles on bucket keys whose fan-out tracks cluster density.
 
 from __future__ import annotations
 
-import numpy as np
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Callable, NamedTuple
 
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+
+from fpl_data_pipeline_spark.operators.vectors import (
+    DIM,
+    _cos,
+    _cos_sql,
+    _dot,
+    _dot_sql,
+    _hyperplanes,
+    _sign_key_spark_sql,
+    _sign_key_sql,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table
-
-DIM = 64
-
-
-def _dot(a, b):
-    """Sequential double-accumulation dot product (order-deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
 
 
 def cosine_topk(
@@ -44,21 +40,11 @@ def cosine_topk(
     """Engine operator: exact top-k cosine neighbors of ``query`` (one row,
     column qv/q_id) against ``emb`` (vec_id, embedding)."""
     j = emb.crossJoin(F.broadcast(query))
-    cos = (_dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))).alias("cosine")
+    cos = _cos("embedding", "qv").alias("cosine")
     out = j.select("vec_id", "q_id", cos)
     if exclude_self:
         out = out.filter(F.col("vec_id") != F.col("q_id"))
     return out.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
-
-
-_DOT_SQL = (
-    "list_reduce(list_transform(range(1, {dim}+1), "
-    "i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE), (x, y) -> x + y)"
-)
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return _DOT_SQL.format(a=a, b=b, dim=DIM)
 
 
 @register(
@@ -66,9 +52,7 @@ def _dot_sql(a: str, b: str) -> str:
     f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id = 0)
     SELECT e.vec_id, q.q_id,
-           {_dot_sql('e.embedding', 'q.qv')}
-             / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                * sqrt({_dot_sql('q.qv', 'q.qv')})) AS cosine
+           {_cos_sql('e.embedding', 'q.qv')} AS cosine
     FROM embeddings e, q
     WHERE e.vec_id <> q.q_id
     ORDER BY cosine DESC, e.vec_id ASC
@@ -89,9 +73,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
     scored AS (
       SELECT q.q_id, e.vec_id,
-             {_dot_sql('e.embedding', 'q.qv')}
-               / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                  * sqrt({_dot_sql('q.qv', 'q.qv')})) AS cosine
+             {_cos_sql('e.embedding', 'q.qv')} AS cosine
       FROM embeddings e, q
       WHERE e.vec_id <> q.q_id
     )
@@ -111,70 +93,18 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
     j = emb.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
-    cos = (_dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))).alias("cosine")
+    cos = _cos("embedding", "qv").alias("cosine")
     scored = j.select("q_id", "vec_id", cos)
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
 
 
-def _hyperplanes(n_planes: int = 8, dim: int = DIM) -> list[list[float]]:
-    """Deterministic random hyperplanes (seed 42) shared by all executors."""
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def _plane_dot_spark_sql(col: str, plane: list[float]) -> str:
-    """Spark-SQL string twin of ``_dot(col, array(<plane lits>))``: the same
-    zip_with/aggregate double fold over the same literal doubles (``repr``
-    round-trips every float64 and the ``D`` suffix parses as DOUBLE), but
-    built as ONE ``F.expr`` parse on the JVM instead of ~65 py4j round trips
-    per plane — the round-11 profile charged ~1.4 s of emb_neardup_pairs'
-    construction to exactly this chatter (guide §7.3: don't generate giant
-    expression trees in driver loops)."""
-    arr = "array(" + ",".join(f"{float(x)!r}D" for x in plane) + ")"
-    return (
-        f"aggregate(zip_with(`{col}`, {arr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _band_key_spark_sql(col: str, planes: list[list[float]], lo: int, n: int) -> str:
-    """Packed sign-bit key over ``planes[lo:lo+n]`` as a Spark-SQL string —
-    bit j = sign(v . plane[lo+j]), identical CASE/int arithmetic to the
-    Column-built fold it replaces (integer ops are exact, so emission order
-    is irrelevant to the value)."""
-    terms = [
-        f"(CASE WHEN {_plane_dot_spark_sql(col, planes[lo + j])} >= 0"
-        f" THEN 1 ELSE 0 END) * {2 ** j}"
-        for j in range(n)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _plane_dot_sql(col: str, plane: list[float]) -> str:
-    """DuckDB dot product of ``col`` with a literal plane as an explicit
-    left-associated sum — the same accumulation order as the Spark fold, so
-    the doubles are bitwise identical (repr round-trips every float64)."""
-    return "(" + " + ".join(f"{col}[{i + 1}]::DOUBLE * ({x!r})" for i, x in enumerate(plane)) + ")"
-
-
-def _bucket_sql(col: str, planes: list[list[float]]) -> str:
-    """DuckDB mirror of the sign-bit bucket id over literal planes."""
-    terms = [
-        f"(CASE WHEN {_plane_dot_sql(col, p)} >= 0 THEN 1 ELSE 0 END) * {2 ** i}"
-        for i, p in enumerate(planes)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def lsh_bucket(df: DataFrame, vec_col: str = "embedding", n_planes: int = 8):
     """Append a sign-bit LSH bucket id: bit p = sign(v . h_p). Pure column
     expressions over literal hyperplane arrays — JVM-side, no UDF; built as
-    one SQL parse (see _plane_dot_spark_sql)."""
-    planes = _hyperplanes(n_planes)
+    one SQL parse (see vectors._plane_dot_spark_sql)."""
     return df.withColumn(
-        "bucket", F.expr(_band_key_spark_sql(vec_col, planes, 0, n_planes))
+        "bucket", F.expr(_sign_key_spark_sql(vec_col, _hyperplanes(n_planes)))
     )
 
 
@@ -182,14 +112,12 @@ def lsh_bucket(df: DataFrame, vec_col: str = "embedding", n_planes: int = 8):
     "ann_lsh_bucketed",
     f"""
     WITH b AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding', _hyperplanes(8))} AS bucket
+      SELECT vec_id, embedding, {_sign_key_sql('embedding', _hyperplanes(8))} AS bucket
       FROM embeddings
     ),
     q AS (SELECT vec_id AS q_id, embedding AS qv, bucket AS q_bucket FROM b WHERE vec_id = 0)
     SELECT e.vec_id, q.q_id, e.bucket,
-           {_dot_sql('e.embedding', 'q.qv')}
-             / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                * sqrt({_dot_sql('q.qv', 'q.qv')})) AS cosine
+           {_cos_sql('e.embedding', 'q.qv')} AS cosine
     FROM b e, q
     WHERE e.bucket = q.q_bucket AND e.vec_id <> q.q_id
     ORDER BY cosine DESC, e.vec_id ASC
@@ -211,7 +139,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = emb.join(
         F.broadcast(query), emb.bucket == query.q_bucket
     ).filter(F.col("vec_id") != F.col("q_id"))
-    cos = (_dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))).alias("cosine")
+    cos = _cos("embedding", "qv").alias("cosine")
     return (
         j.select("vec_id", "q_id", "bucket", cos)
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
@@ -229,6 +157,11 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_ND_PLANES = 16
 N_ND_BANDS = 2
 ND_BITS_PER_BAND = N_ND_PLANES // N_ND_BANDS
+# the planes of each band, shared by the Spark keys and the oracle keys
+_ND_BAND_PLANES = [
+    _hyperplanes(N_ND_PLANES)[b * ND_BITS_PER_BAND : (b + 1) * ND_BITS_PER_BAND]
+    for b in range(N_ND_BANDS)
+]
 
 
 # Band-size guard for the in-array expansion: the band key space is fixed
@@ -247,15 +180,12 @@ ND_BAND_CAP = 10_000
 
 def lsh_doc_band_keys(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """(vec_id, embedding) -> one row per doc carrying BOTH band keys
-    (``k0``, ``k1``) as columns — the unexploded twin of lsh_band_keys,
-    for consumers that reason about a doc's full band-key tuple at once
-    (the lowest-shared-band pair emission below)."""
-    planes = _hyperplanes(N_ND_PLANES)
+    (``k0``, ``k1``) as columns, for consumers that reason about a doc's
+    full band-key tuple at once (the lowest-shared-band pair emission
+    below)."""
     keys = [
-        F.expr(
-            _band_key_spark_sql(vec_col, planes, band * ND_BITS_PER_BAND, ND_BITS_PER_BAND)
-        ).alias(f"k{band}")
-        for band in range(N_ND_BANDS)
+        F.expr(_sign_key_spark_sql(vec_col, planes)).alias(f"k{band}")
+        for band, planes in enumerate(_ND_BAND_PLANES)
     ]
     return df.select("vec_id", *keys)
 
@@ -353,40 +283,13 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     return p0.unionByName(p1)
 
 
-def lsh_band_keys(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, embedding) -> exploded (vec_id, embedding, band_id, band_key):
-    one row per band, band_key = the band's sign bits packed into an int."""
-    planes = _hyperplanes(N_ND_PLANES)
-    band_cols = []
-    for band in range(N_ND_BANDS):
-        key = F.expr(
-            _band_key_spark_sql(vec_col, planes, band * ND_BITS_PER_BAND, ND_BITS_PER_BAND)
-        )
-        band_cols.append(
-            F.struct(F.lit(band).alias("band_id"), key.alias("band_key"))
-        )
-    return df.select(
-        "vec_id", F.col(vec_col).alias("embedding"), F.explode(F.array(*band_cols)).alias("b")
-    ).select("vec_id", "embedding", "b.band_id", "b.band_key")
-
-
-def _nd_band_sql(col: str, band: int) -> str:
-    planes = _hyperplanes(N_ND_PLANES)
-    terms = [
-        f"(CASE WHEN {_plane_dot_sql(col, planes[band * ND_BITS_PER_BAND + j])} >= 0"
-        f" THEN 1 ELSE 0 END) * {2 ** j}"
-        for j in range(ND_BITS_PER_BAND)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 @register(
     "emb_neardup_pairs",
     f"""
     WITH b AS (
       SELECT vec_id, embedding,
-             {_nd_band_sql('embedding', 0)} AS k0,
-             {_nd_band_sql('embedding', 1)} AS k1
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[0])} AS k0,
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[1])} AS k1
       FROM embeddings
     ),
     s0 AS (SELECT k0 FROM b GROUP BY k0 HAVING COUNT(*) <= {ND_BAND_CAP}),
@@ -401,9 +304,7 @@ def _nd_band_sql(col: str, band: int) -> str:
       JOIN b y ON x.k1 = y.k1 AND x.vec_id < y.vec_id
     )
     SELECT c.vec_id_a, c.vec_id_b,
-           {_dot_sql('ea.embedding', 'eb.embedding')}
-             / (sqrt({_dot_sql('ea.embedding', 'ea.embedding')})
-                * sqrt({_dot_sql('eb.embedding', 'eb.embedding')})) AS cosine
+           {_cos_sql('ea.embedding', 'eb.embedding')} AS cosine
     FROM cand c
     JOIN embeddings ea ON ea.vec_id = c.vec_id_a
     JOIN embeddings eb ON eb.vec_id = c.vec_id_b
@@ -421,7 +322,7 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _lsh_candidate_pairs(emb)
     ea = emb.select(F.col("vec_id").alias("vec_id_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("vec_id_b"), F.col("embedding").alias("vb"))
-    cos = (_dot("va", "vb") / (_norm("va") * _norm("vb"))).alias("cosine")
+    cos = _cos("va", "vb").alias("cosine")
     return (
         pairs.join(ea, "vec_id_a")
         .join(eb, "vec_id_b")
@@ -450,7 +351,7 @@ def ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (max cosine): broadcast
     the centroid block, score in one scan, keep argmax per vector."""
     j = emb.crossJoin(F.broadcast(cents))
-    cos = (_dot("embedding", "cv") / (_norm("embedding") * _norm("cv"))).alias("ccos")
+    cos = _cos("embedding", "cv").alias("ccos")
     scored = j.select("vec_id", "embedding", "c_id", cos)
     w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("c_id").asc())
     return (
@@ -503,9 +404,7 @@ def emb_cluster_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT e.vec_id, e.embedding, c.c_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_dot_sql('e.embedding', 'c.cv')}
-                            / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                               * sqrt({_dot_sql('c.cv', 'c.cv')})) DESC,
+                 ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC,
                           c.c_id ASC) AS rn
         FROM embeddings e, cents c
       ) WHERE rn = 1
@@ -515,17 +414,13 @@ def emb_cluster_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT q_id, qv, c_id AS list_id FROM (
         SELECT q.q_id, q.qv, c.c_id
         FROM q, cents c
-        ORDER BY {_dot_sql('q.qv', 'c.cv')}
-                   / (sqrt({_dot_sql('q.qv', 'q.qv')})
-                      * sqrt({_dot_sql('c.cv', 'c.cv')})) DESC,
+        ORDER BY {_cos_sql('q.qv', 'c.cv')} DESC,
                  c.c_id ASC
         LIMIT {N_PROBE}
       )
     )
     SELECT a.vec_id, p.q_id, a.list_id,
-           {_dot_sql('a.embedding', 'p.qv')}
-             / (sqrt({_dot_sql('a.embedding', 'a.embedding')})
-                * sqrt({_dot_sql('p.qv', 'p.qv')})) AS cosine
+           {_cos_sql('a.embedding', 'p.qv')} AS cosine
     FROM assigned a JOIN probe p ON a.list_id = p.list_id
     WHERE a.vec_id <> p.q_id
     ORDER BY cosine DESC, a.vec_id ASC
@@ -546,7 +441,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
-    qcos = (_dot("qv", "cv") / (_norm("qv") * _norm("cv"))).alias("qcos")
+    qcos = _cos("qv", "cv").alias("qcos")
     probe_lists = (
         query.crossJoin(F.broadcast(cents))
         .select("q_id", "qv", "c_id", qcos)
@@ -557,7 +452,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = assigned.join(F.broadcast(probe_lists), "list_id").filter(
         F.col("vec_id") != F.col("q_id")
     )
-    cos = (_dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))).alias("cosine")
+    cos = _cos("embedding", "qv").alias("cosine")
     return (
         j.select("vec_id", "q_id", "list_id", cos)
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
@@ -566,17 +461,30 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- iterative k-means (Lloyd) over the embedding column --------------------
-KM_K = 8
-KM_ITERS = 3
-
-
-def _sq_dist(a, b):
-    """Squared euclidean distance between two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# One Lloyd loop, two arithmetics. kmeans_embeddings runs it in double
+# arithmetic and stays rows-only (accumulation order makes the last bits
+# engine- and partitioning-dependent). kmeans_portable and semdedup_prune
+# run it in exact integers over vectors quantized to 6-dp integers FIRST,
+# so every distance is an exact bigint sum, every argmin is an exact
+# integer comparison, and every centroid update is floor(sum/count + 0.5)
+# on a < 2^53 exact numerator — bit-identical on any engine. Their DuckDB
+# oracles unroll the 3 seeded iterations as CTEs (the pagerank_dupgraph
+# technique), and because only the arithmetic differs, the rows-only query
+# runs the loop those oracles prove.
+KMP_K = 8
+KMP_ITERS = 3
+# Upper bound on any DERIVED cluster count (the corpus-scaled semdedup
+# path): the Lloyd loop collects k x dim centroid longs per iteration, so
+# an unclamped k = n/target_pop would make driver traffic corpus-
+# proportional around n ~ 2e9 vectors. At the clamp the collect is ~2 MB;
+# past it, population exceeds the target and the cap tripwire reports.
+KMP_K_MAX = 4096
+# Largest k the Lloyd argmin inlines as a centroid array literal (k·dim
+# literal leaves per iteration — cheap to plan at 64·64, runaway past a few
+# hundred); derived-k clusterings above it use the crossJoin +
+# partial-aggregated min(struct) fallback instead (one narrow exchange,
+# no window sort). Both paths are value-identical.
+KMP_ARGMIN_LITERAL_K = 64
 
 
 def _double_sql(v: float) -> str:
@@ -592,106 +500,164 @@ def _double_sql(v: float) -> str:
     return f"{v!r}D"
 
 
-def kmeans_fit(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS) -> DataFrame:
-    """Lloyd's k-means: the engine's representative *iterative* algorithm
-    (SURVEY.md driver contract: genuinely non-SQL-expressible, rows-only).
+class LloydArith(NamedTuple):
+    """The arithmetic a Lloyd loop runs in: ``encode`` builds the vector
+    column ``col`` from ``embedding``; ``lit`` spells one centroid element
+    as a SQL literal; ``update`` is the per-element centroid aggregate over
+    a cluster's ``{col}[{j}]`` (SQL [] is 0-based: ``v[j] ==
+    element_at(v, j+1)``); ``sql_type`` is the element type of vectors,
+    centroids and d2."""
+
+    col: str
+    encode: Callable[[Column], Column]
+    lit: Callable[[float], str]
+    update: str
+    sql_type: str
+
+
+LLOYD_DOUBLE = LloydArith(
+    col="embedding",
+    encode=lambda e: e,
+    lit=_double_sql,
+    update="avg(embedding[{j}])",
+    sql_type="double",
+)
+LLOYD_EXACT6 = LloydArith(
+    col="v6",
+    encode=lambda e: F.transform(
+        e, lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast("long")
+    ),
+    lit="{}L".format,
+    update="cast(floor(cast(sum(v6[{j}]) AS double) / count(1) + 0.5D) AS bigint)",
+    sql_type="bigint",
+)
+
+
+def lloyd_assign(
+    emb: DataFrame,
+    arith: LloydArith,
+    k: int = KMP_K,
+    iters: int = KMP_ITERS,
+    target_pop: int | None = None,
+) -> DataFrame:
+    """(vec_id, <arith.col>, c_id, d2): the final Lloyd assignment after
+    ``iters`` iterations in ``arith``, seeded from the first k vectors by
+    vec_id, ties broken by the lowest c_id, no RNG.
 
     Driver/executor split per iteration — the canonical Spark formulation:
-    the centroid block (k x dim floats, bytes) is collected to the driver and
-    re-broadcast; assignments and the per-(cluster, dimension) means stay
-    fully distributed (posexplode + one shuffle on (cluster, pos)). Nothing
-    driver-side ever scales with the data. Deterministic: seeded from the
-    first k vectors by vec_id, ties broken by cluster id, no RNG.
-    """
-    emb = emb.select("vec_id", "embedding").cache()
-    cents = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in emb.orderBy("vec_id").limit(k).collect()
-    ]
-    dim = len(cents[0][1]) if cents else 0
+    only the k x dim centroid block is collected to the driver and inlined
+    into the next argmin; assignments and the per-(cluster, dimension)
+    updates stay distributed. Nothing driver-side ever scales with the
+    data.
+
+    ``target_pop`` is the corpus-scaled mode: k = max(k, ceil(n /
+    target_pop)) in exact integer arithmetic, so cluster populations stay
+    ~target_pop at ANY corpus size instead of growing with it (the round-7
+    failure mode: fixed k=8 pushed every cluster over SEM_CLUSTER_CAP at
+    the 10x probe and the pair scan degenerated to 0 executed pairs). The
+    one extra job is a count over the cached vectors."""
+    spark = emb.sparkSession
+    col = arith.col
+    vecs = emb.select("vec_id", arith.encode(F.col("embedding")).alias(col)).cache()
+    if target_pop is not None:
+        n = vecs.count()
+        # ceil via integer arithmetic — the oracle's (COUNT(*) + p-1) // p
+        # must reproduce this bit-for-bit, so no float ceil on either side;
+        # clamped at KMP_K_MAX so the per-iteration centroid collect stays
+        # driver-bounded (k x dim longs, ~2 MB at the clamp) at ANY corpus
+        # — beyond it cluster population grows past target_pop and the
+        # consumer's SEM_CLUSTER_CAP tripwire fires observably, with
+        # two-level clustering as the documented next step
+        k = min(max(k, (n + target_pop - 1) // target_pop), KMP_K_MAX)
+    cents = [list(r[col]) for r in vecs.orderBy("vec_id").limit(k).collect()]
     if not cents:
-        # empty corpus -> no centroids: best_of would emit SQL 'array()'
-        # (VOID element type) and zip_with fails analysis — the same
-        # hazard kmp_assign's score() guards (round-11 ADVICE). Emit the
-        # zero-row assignment with the non-empty path's column types;
-        # ``emb`` has no rows here so no values are fabricated.
-        return emb.select(
+        # empty corpus -> no centroids: an empty array literal is VOID-typed
+        # and zip_with fails analysis (the round-7b empty-corpus guard
+        # test). Emit the zero-row assignment with the non-empty path's
+        # column types; ``vecs`` has no rows so no values are fabricated.
+        vecs.unpersist()
+        return vecs.select(
             "vec_id",
-            F.lit(None).cast("int").alias("cluster_id"),
-            F.lit(None).cast("double").alias("sq_dist"),
+            col,
+            F.lit(None).cast("int").alias("c_id"),
+            F.lit(None).cast(arith.sql_type).alias("d2"),
+        )
+    d2 = (
+        f"aggregate(zip_with({col}, c, (x, y) -> (x - y) * (x - y)),"
+        f" CAST(0 AS {arith.sql_type}), (acc, v) -> acc + v)"
+    )
+
+    def assign(cents_list):
+        # Round-11 (guide §2.4 "remove shuffles outright"): the argmin
+        # against a k-row centroid block needs no shuffle at all: inline
+        # the centroids as an array literal, evaluate the k distances per
+        # row, and take array_min of (d2, c_id) structs — struct comparison
+        # is field-order lexicographic, reproducing a (d2 ASC, c_id ASC)
+        # window tiebreak exactly. One parsed SQL string instead of k*dim
+        # F.lit() Columns: the lit path cost 2 py4j round-trips per element
+        # (19 of 25 wall-seconds of kmeans_portable in socket recv on the
+        # driver, guide §7.3). Above KMP_ARGMIN_LITERAL_K the inlined tree
+        # would grow past what Catalyst plans cheaply, so the derived-k
+        # path crossJoins a broadcast centroid relation with a
+        # partial-aggregated min(struct) — one narrow n-row exchange, still
+        # no Sort (same lexicographic struct order, same values).
+        if len(cents_list) <= KMP_ARGMIN_LITERAL_K:
+            carr_sql = ",".join(
+                "array(" + ",".join(arith.lit(x) for x in c) + ")" for c in cents_list
+            )
+            best = F.expr(
+                f"array_min(transform(array({carr_sql}), (c, i) -> struct("
+                f"{d2} AS d2, i AS c_id)))"
+            )
+            return vecs.withColumn("_best", best).select(
+                "vec_id",
+                col,
+                F.col("_best.c_id").alias("c_id"),
+                F.col("_best.d2").alias("d2"),
+            )
+        cdf = spark.createDataFrame(
+            list(enumerate(cents_list)), f"c_id int, c array<{arith.sql_type}>"
+        )
+        scored = vecs.crossJoin(F.broadcast(cdf)).select(
+            "vec_id", col, "c_id", F.expr(d2).alias("d2")
+        )
+        best = F.min(F.struct("d2", "c_id", col)).alias("b")
+        return scored.groupBy("vec_id").agg(best).select(
+            "vec_id",
+            F.col(f"b.{col}").alias(col),
+            F.col("b.c_id").alias("c_id"),
+            F.col("b.d2").alias("d2"),
         )
 
-    def best_of(cents_list):
-        # Round-11 (guide §2.4): map-side argmin against an inlined
-        # centroid literal replaces the crossJoin + per-vec_id window
-        # (an Exchange + Sort of the k-fold-expanded relation per
-        # iteration). Each d2 is the same fixed-order _sq_dist fold on
-        # the same values, and array_min's (d2, c_id) struct comparison
-        # reproduces the (d2 ASC, c_id ASC) window tiebreak — identical
-        # assignment, zero shuffle.
-        # One parsed SQL string instead of k*dim F.lit() Columns: the lit
-        # path cost 2 py4j round-trips per element and put the whole
-        # centroid block's construction on the driver socket (the
-        # kmeans_portable profile read 19 of 25 wall-seconds in py4j
-        # recv). Identical expression tree, identical values.
-        carr_sql = ",".join(
-            "array(" + ",".join(_double_sql(float(v)) for v in cv) + ")"
-            for _, cv in cents_list
-        )
-        return F.expr(
-            f"array_min(transform(array({carr_sql}), (c, i) -> struct("
-            "aggregate(zip_with(embedding, c, (x, y) -> (x - y) * (x - y)),"
-            " 0.0D, (acc, v) -> acc + v) AS d2, i AS c_id)))"
-        )
-
+    # the dim per-element updates partial-aggregate map-side, so the
+    # exchange carries k rows; one parsed string instead of dim*~10 py4j
+    # calls per iteration (same driver fix as the literal argmin)
+    update_sql = (
+        "array(" + ",".join(arith.update.format(j=j) for j in range(len(cents[0]))) + ")"
+    )
     for _ in range(iters):
-        assigned = emb.withColumn("_best", best_of(cents)).select(
-            "vec_id", "embedding", F.col("_best.c_id").alias("c_id")
-        )
-        # per-dimension avg partial-aggregates map-side (k rows of dim
-        # means cross the exchange) instead of shuffling the n·dim
-        # posexplode per iteration
-        # one parsed aggregate string (same py4j-fan-out fix as best_of);
-        # SQL [] is 0-based so embedding[j] == element_at(embedding, j+1)
-        avg_sql = (
-            "array(" + ",".join(f"avg(embedding[{j}])" for j in range(dim)) + ")"
-        )
-        means = (
-            assigned.groupBy("c_id").agg(F.expr(avg_sql).alias("cv")).collect()
-        )
-        new = {int(r["c_id"]): list(r["cv"]) for r in means}
-        cents = [(i, new.get(i, v)) for i, (_, v) in enumerate(cents)]
-    return emb.withColumn("_best", best_of(cents)).select(
-        "vec_id",
-        F.col("_best.c_id").alias("cluster_id"),
-        F.col("_best.d2").alias("sq_dist"),
+        means = assign(cents).groupBy("c_id").agg(F.expr(update_sql).alias("c")).collect()
+        new = {int(r["c_id"]): list(r["c"]) for r in means}
+        cents = [new.get(i, c) for i, c in enumerate(cents)]
+
+    # pin the final assignment and release the iteration cache: without the
+    # unpersist every caller leaks one full-corpus cached vector copy for
+    # the session lifetime; the eager checkpoint keeps the returned
+    # relation one-pass for every consumer
+    out = assign(cents).localCheckpoint()
+    vecs.unpersist()
+    return out
+
+
+def kmeans_fit(emb: DataFrame, k: int = KMP_K, iters: int = KMP_ITERS) -> DataFrame:
+    """Lloyd's k-means in double arithmetic — the engine's representative
+    *iterative* algorithm (SURVEY.md driver contract: genuinely
+    non-SQL-expressible, rows-only): (vec_id, cluster_id, sq_dist)."""
+    return lloyd_assign(emb, LLOYD_DOUBLE, k, iters).select(
+        "vec_id", F.col("c_id").alias("cluster_id"), F.col("d2").alias("sq_dist")
     )
 
 
-# --- portable k-means twin: exact-integer Lloyd with a CTE-unrolled oracle --
-# kmeans_embeddings (above) is the production trainer and stays rows-only
-# (double arithmetic; accumulation order makes the last bits engine- and
-# partitioning-dependent).  This twin quantizes vectors to 6-dp integers
-# FIRST, so every distance is an exact bigint sum, every argmin is an exact
-# integer comparison, and every centroid update is floor(sum/count + 0.5)
-# on a < 2^53 exact numerator — bit-identical on any engine.  The DuckDB
-# oracle unrolls the 3 seeded iterations as CTEs (the pagerank_dupgraph
-# technique), closing the last value-oracle gap in the registry
-# (round-4 verdict #7).
-KMP_K = 8
-KMP_ITERS = 3
-# Upper bound on any DERIVED cluster count (the corpus-scaled semdedup
-# path): the Lloyd loop collects k x dim centroid longs per iteration, so
-# an unclamped k = n/target_pop would make driver traffic corpus-
-# proportional around n ~ 2e9 vectors. At the clamp the collect is ~2 MB;
-# past it, population exceeds the target and the cap tripwire reports.
-KMP_K_MAX = 4096
-# Largest k the Lloyd argmin inlines as a centroid array literal (k·dim
-# literal leaves per iteration — cheap to plan at 64·64, runaway past a few
-# hundred); derived-k clusterings above it use the crossJoin +
-# partial-aggregated min(struct) fallback instead (one narrow exchange,
-# no window sort). Both paths are exact-integer and value-identical.
-KMP_ARGMIN_LITERAL_K = 64
 _KMP_D2_SQL = (
     "list_sum(list_transform(range(1, {dim}+1),"
     " i -> (v.v6[i] - c.c6[i]) * (v.v6[i] - c.c6[i])))"
@@ -772,161 +738,14 @@ def _kmp_oracle() -> str:
     """
 
 
-def kmp_assign(emb: DataFrame, target_pop: int | None = None) -> DataFrame:
-    """(vec_id, v6, c_id, d2): the final exact-integer Lloyd assignment
-    after KMP_ITERS iterations — the engine half shared by
-    kmeans_portable and semdedup_prune (both oracles replay it through
-    the same _kmp_cte_sql). Collects only the k x dim centroid block per
-    iteration (bounded by k, never by the data).
-
-    ``target_pop`` is the corpus-scaled mode: k = max(KMP_K,
-    ceil(n / target_pop)) in exact integer arithmetic, so cluster
-    populations stay ~target_pop at ANY corpus size instead of growing
-    with it (the round-7 failure mode: fixed k=8 pushed every cluster
-    over SEM_CLUSTER_CAP at the 10x probe and the pair scan degenerated
-    to 0 executed pairs). The one extra job is a count over the cached
-    quantized vectors; the per-iteration driver traffic stays k x dim.
-    None keeps the fixed-k twin (kmeans_portable's stable contract)."""
-    spark = emb.sparkSession
-    v6 = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast("long"),
-    )
-    vecs = emb.select("vec_id", v6.alias("v6")).cache()
-    k = KMP_K
-    if target_pop is not None:
-        n = vecs.count()
-        # ceil via integer arithmetic — the oracle's (COUNT(*) + p-1) // p
-        # must reproduce this bit-for-bit, so no float ceil on either side;
-        # clamped at KMP_K_MAX so the per-iteration centroid collect stays
-        # driver-bounded (k x dim longs, ~2 MB at the clamp) at ANY corpus
-        # — beyond it cluster population grows past target_pop and the
-        # consumer's SEM_CLUSTER_CAP tripwire fires observably, with
-        # two-level clustering as the documented next step
-        k = min(max(KMP_K, (n + target_pop - 1) // target_pop), KMP_K_MAX)
-    cents = [list(r["v6"]) for r in vecs.orderBy("vec_id").limit(k).collect()]
-
-    dim = len(cents[0]) if cents else 0
-
-    def score(cents_list):
-        # Round-11 (guide §2.4 "remove shuffles outright"): the old shape
-        # crossJoined every vector with the broadcast centroid block (k
-        # rows per vector) and took rn = 1 of a per-vec_id window — a full
-        # Exchange + Sort of the k-fold-expanded relation PER ITERATION.
-        # The argmin against a k-row broadcast block needs no shuffle at
-        # all: inline the centroids as an array literal, evaluate the k
-        # exact-integer distances per row, and take array_min of
-        # (d2, c_id) structs — struct comparison is field-order
-        # lexicographic, reproducing the (d2 ASC, c_id ASC) window
-        # tiebreak exactly. Zero Exchange, zero Sort, identical values.
-        # Above KMP_ARGMIN_LITERAL_K the inlined expression tree would
-        # grow past what Catalyst plans cheaply (k·dim literals), so the
-        # derived-k path falls back to the crossJoin with a partial-
-        # aggregated min(struct) — one narrow n-row exchange, still no
-        # Sort (same lexicographic struct order, same values).
-        if not cents_list:
-            # empty corpus -> no centroids: an empty F.array() literal is
-            # VOID-typed and zip_with fails analysis (the round-7b
-            # empty-corpus guard test). Emit the empty assignment with the
-            # same column types the non-empty paths produce; ``vecs`` has
-            # zero rows here so no values are fabricated.
-            return vecs.select(
-                "vec_id",
-                "v6",
-                F.lit(None).cast("int").alias("c_id"),
-                F.lit(None).cast("long").alias("d2"),
-            )
-        if len(cents_list) <= KMP_ARGMIN_LITERAL_K:
-            # Round-11 driver fix: the centroid block used to be built as
-            # k*dim F.lit(...).cast(...) Columns — 2 py4j round-trips per
-            # element, 51k gateway commands and 19 of 25 wall-seconds for
-            # kmeans_portable spent in socket recv on the DRIVER (guide
-            # §7.3 "nothing seems to be happening"). One SQL string parses
-            # the whole literal argmin in a single gateway call; the
-            # resulting expression tree (and every value) is identical.
-            carr_sql = ",".join(
-                "array(" + ",".join(f"{int(x)}L" for x in c) + ")"
-                for c in cents_list
-            )
-            best = F.expr(
-                f"array_min(transform(array({carr_sql}), (c, i) -> struct("
-                "aggregate(zip_with(v6, c, (x, y) -> (x - y) * (x - y)), 0L,"
-                " (acc, val) -> acc + val) AS d2, i AS c_id)))"
-            )
-            return vecs.withColumn("_best", best).select(
-                "vec_id",
-                "v6",
-                F.col("_best.c_id").alias("c_id"),
-                F.col("_best.d2").alias("d2"),
-            )
-        cdf = spark.createDataFrame(
-            list(enumerate(cents_list)), "c_id int, c6 array<long>"
-        )
-        d2 = F.aggregate(
-            F.zip_with("v6", "c6", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, val: acc + val,
-        )
-        scored = vecs.crossJoin(F.broadcast(cdf)).select(
-            "vec_id", "v6", "c_id", d2.alias("d2")
-        )
-        best = F.min(F.struct("d2", "c_id", "v6")).alias("b")
-        return scored.groupBy("vec_id").agg(best).select(
-            "vec_id",
-            F.col("b.v6").alias("v6"),
-            F.col("b.c_id").alias("c_id"),
-            F.col("b.d2").alias("d2"),
-        )
-
-    for _ in range(KMP_ITERS):
-        assigned = score(cents)
-        # Round-11: per-(c_id, pos) means via posexplode shuffled n·dim
-        # rows per iteration; dim per-element sums partial-aggregate
-        # map-side instead, so the exchange carries k rows of dim sums.
-        # The floor(sum/count + 0.5) arithmetic is the same double
-        # expression on the same exact-integer sums — bit-identical.
-        # Same driver fix as the literal argmin: the dim per-element sums
-        # and the floor(sum/count + 0.5) array were dim*~10 py4j calls per
-        # iteration; two parsed expression strings build the identical
-        # aggregate (sum(v6[j]) == element_at(v6, j+1): SQL [] is 0-based)
-        # and the identical per-element double arithmetic in two gateway
-        # calls.
-        sums_sql = "array(" + ",".join(f"sum(v6[{j}])" for j in range(dim)) + ")"
-        means = (
-            assigned.groupBy("c_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr(sums_sql).alias("s"),
-            )
-            .selectExpr(
-                "c_id",
-                "transform(s, sj -> cast(floor(cast(sj AS double) / n + 0.5D)"
-                " AS bigint)) AS c6",
-            )
-            .collect()
-        )
-        new = {int(r["c_id"]): list(r["c6"]) for r in means}
-        cents = [new.get(i, c) for i, c in enumerate(cents)]
-
-    # pin the final assignment and release the iteration cache: without the
-    # unpersist every kmp_assign caller leaks one full-corpus cached
-    # quantized-embedding copy for the session lifetime (the refactor gave
-    # this helper multiple consumers); the eager checkpoint keeps the
-    # returned relation one-pass for them all
-    out = score(cents).select("vec_id", "v6", "c_id", "d2").localCheckpoint()
-    vecs.unpersist()
-    return out
-
-
 @register("kmeans_portable", _kmp_oracle())
 def kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster size + inertia after KMP_ITERS exact-integer Lloyd
     iterations (6-dp-quantized vectors, first-k seed) — the value-oracled
-    twin of kmeans_embeddings.  Same driver/executor split as the
-    production trainer: only the k x dim centroid block (bounded by k,
-    never by the data) crosses to the driver between iterations."""
+    twin of kmeans_embeddings: the same lloyd_assign loop, in LLOYD_EXACT6
+    arithmetic."""
     return (
-        kmp_assign(table(spark, sf_dir, "embeddings"))
+        lloyd_assign(table(spark, sf_dir, "embeddings"), LLOYD_EXACT6)
         .groupBy("c_id")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
@@ -947,9 +766,11 @@ def kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("kmeans_embeddings")
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster summary after KM_ITERS Lloyd iterations: per-cluster size and
-    inertia (sum of squared distances). Rows-only driver check — iterative
-    fixpoint computation has no single-statement SQL equivalent."""
+    """Cluster summary after KMP_ITERS Lloyd iterations: per-cluster size
+    and inertia (sum of squared distances). It runs lloyd_assign, the loop
+    kmeans_portable and semdedup_prune prove against DuckDB, with double
+    arithmetic (LLOYD_DOUBLE); the doubles' last bits depend on
+    accumulation order, so the driver checks it rows-only."""
     emb = table(spark, sf_dir, "embeddings")
     assigned = kmeans_fit(emb)
     return (
@@ -977,7 +798,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(list_max(list_transform(embedding,
                  x -> abs(least(greatest(floor(x::DOUBLE / scale + 0.5), -127), 127) * scale
                           - x::DOUBLE))), 9) AS max_abs_err,
-           round({_DOT_SQL.format(a='embedding', b='embedding', dim=DIM)}, 6) AS sq_norm
+           round({_dot_sql('embedding', 'embedding')}, 6) AS sq_norm
     FROM q
     """,
 )
@@ -1032,19 +853,12 @@ def emb_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 RECALL_K = 10
 N_RECALL_QUERIES = 8
 
-# cosine(e.embedding, q.qv) — same sequential-fold shape both engines
-_RECALL_COS_SQL = (
-    f"{_dot_sql('e.embedding', 'q.qv')}"
-    f" / (sqrt({_dot_sql('e.embedding', 'e.embedding')})"
-    f" * sqrt({_dot_sql('q.qv', 'q.qv')}))"
-)
-
 
 @register(
     "ann_recall_eval",
     f"""
     WITH b AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding', _hyperplanes(8))} AS bucket
+      SELECT vec_id, embedding, {_sign_key_sql('embedding', _hyperplanes(8))} AS bucket
       FROM embeddings
     ),
     q AS (
@@ -1056,7 +870,7 @@ _RECALL_COS_SQL = (
         SELECT q.q_id, e.vec_id,
                row_number() OVER (
                  PARTITION BY q.q_id
-                 ORDER BY {_RECALL_COS_SQL} DESC, e.vec_id ASC) AS rn
+                 ORDER BY {_cos_sql('e.embedding', 'q.qv')} DESC, e.vec_id ASC) AS rn
         FROM embeddings e, q
         WHERE e.vec_id <> q.q_id
       ) WHERE rn <= {RECALL_K}
@@ -1066,7 +880,7 @@ _RECALL_COS_SQL = (
         SELECT q.q_id, e.vec_id,
                row_number() OVER (
                  PARTITION BY q.q_id
-                 ORDER BY {_RECALL_COS_SQL} DESC, e.vec_id ASC) AS rn
+                 ORDER BY {_cos_sql('e.embedding', 'q.qv')} DESC, e.vec_id ASC) AS rn
         FROM b e, q
         WHERE e.bucket = q.q_bucket AND e.vec_id <> q.q_id
       ) WHERE rn <= {RECALL_K}
@@ -1111,7 +925,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bucket").alias("q_bucket"),
         )
     )
-    cos = _dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))
+    cos = _cos("embedding", "qv")
     rn = F.row_number().over(
         Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     )
@@ -1172,8 +986,8 @@ SEM_EDGE_THRESHOLD = 0.30
     f"""
     WITH RECURSIVE b AS (
       SELECT vec_id, embedding,
-             {_nd_band_sql('embedding', 0)} AS k0,
-             {_nd_band_sql('embedding', 1)} AS k1
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[0])} AS k0,
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[1])} AS k1
       FROM embeddings
     ),
     s0 AS (SELECT k0 FROM b GROUP BY k0 HAVING COUNT(*) <= {ND_BAND_CAP}),
@@ -1192,9 +1006,7 @@ SEM_EDGE_THRESHOLD = 0.30
       FROM cand c
       JOIN embeddings ea ON ea.vec_id = c.vec_id_a
       JOIN embeddings eb ON eb.vec_id = c.vec_id_b
-      WHERE {_dot_sql('ea.embedding', 'eb.embedding')}
-              / (sqrt({_dot_sql('ea.embedding', 'ea.embedding')})
-                 * sqrt({_dot_sql('eb.embedding', 'eb.embedding')}))
+      WHERE {_cos_sql('ea.embedding', 'eb.embedding')}
             >= {SEM_EDGE_THRESHOLD}
     ),
     edges AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
@@ -1233,7 +1045,7 @@ def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _lsh_candidate_pairs(emb)
     ea = emb.select(F.col("vec_id").alias("vec_id_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("vec_id_b"), F.col("embedding").alias("vb"))
-    cos = _dot("va", "vb") / (_norm("va") * _norm("vb"))
+    cos = _cos("va", "vb")
     pairs = (
         cand.join(ea, "vec_id_a")
         .join(eb, "vec_id_b")
@@ -1276,9 +1088,7 @@ IVF_BATCH_MOD = 5  # vec_id % 5 == 4 stands in for the newly ingested batch
         SELECT e.vec_id, c.c_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_dot_sql('e.embedding', 'c.cv')}
-                            / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                               * sqrt({_dot_sql('c.cv', 'c.cv')})) DESC,
+                 ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC,
                           c.c_id ASC) AS rn
         FROM base e, cents c
       ) WHERE rn = 1
@@ -1288,9 +1098,7 @@ IVF_BATCH_MOD = 5  # vec_id % 5 == 4 stands in for the newly ingested batch
         SELECT e.vec_id, c.c_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_dot_sql('e.embedding', 'c.cv')}
-                            / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                               * sqrt({_dot_sql('c.cv', 'c.cv')})) DESC,
+                 ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC,
                           c.c_id ASC) AS rn
         FROM batch e, cents c
       ) WHERE rn = 1
@@ -1506,7 +1314,7 @@ def bitext_margin(src: DataFrame, tgt: DataFrame, k: int = BITEXT_K) -> DataFram
     Registered instantiation scores the two label partitions brute-force
     with the smaller side broadcast (the eval/rerank baseline, same position
     as cosine_topk); the production path at corpus scale feeds the SAME
-    scoring/normalizer shape from LSH-banded candidates (lsh_band_keys) so
+    scoring/normalizer shape from LSH-banded candidates (lsh_doc_band_keys) so
     neither side is ever self-joined in full.
 
     Determinism: cosines are 9-dp portable-rounded before any aggregation;
@@ -1521,7 +1329,7 @@ def bitext_margin(src: DataFrame, tgt: DataFrame, k: int = BITEXT_K) -> DataFram
             "src_id",
             "tgt_id",
             portable_round(
-                _dot("sv", "tv") / (_norm("sv") * _norm("tv")), 9
+                _cos("sv", "tv"), 9
             ).alias("cos9"),
         )
         .localCheckpoint()
@@ -1570,8 +1378,7 @@ _BTX_MEAN = "CAST(SUM(CAST(cos9 AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)"
     t AS (SELECT vec_id AS tgt_id, embedding AS tv FROM embeddings WHERE label = 1),
     p AS (
       SELECT src_id, tgt_id,
-             FLOOR({_dot_sql('sv', 'tv')}
-                   / (sqrt({_dot_sql('sv', 'sv')}) * sqrt({_dot_sql('tv', 'tv')}))
+             FLOOR({_cos_sql('sv', 'tv')}
                    * 1000000000 + 0.5) / 1000000000 AS cos9
       FROM s CROSS JOIN t
     ),
@@ -1636,9 +1443,7 @@ HN_K = 4  # negatives per anchor
     ),
     scored AS (
       SELECT a.anchor_id, e.vec_id AS neg_id,
-             FLOOR({_dot_sql('a.av', 'e.embedding')}
-                   / (sqrt({_dot_sql('a.av', 'a.av')})
-                      * sqrt({_dot_sql('e.embedding', 'e.embedding')}))
+             FLOOR({_cos_sql('a.av', 'e.embedding')}
                    * 1000000000 + 0.5) / 1000000000 AS cos9
       FROM anchors a JOIN embeddings e
         ON e.label <> a.alabel
@@ -1676,8 +1481,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neg_id"),
             (
                 F.floor(
-                    _dot("av", "embedding")
-                    / (_norm("av") * _norm("embedding"))
+                    _cos("av", "embedding")
                     * 1000000000
                     + F.lit(0.5)
                 )
@@ -1704,10 +1508,6 @@ MRL_QUERIES = 8
 MRL_K = 10
 
 
-def _dot_sql_pfx(a: str, b: str, dim: int) -> str:
-    return _DOT_SQL.format(a=a, b=b, dim=dim)
-
-
 @register(
     "emb_matryoshka_recall",
     f"""
@@ -1717,12 +1517,8 @@ def _dot_sql_pfx(a: str, b: str, dim: int) -> str:
     ),
     scored AS (
       SELECT q.q_id, e.vec_id,
-             {_dot_sql('e.embedding', 'q.qv')}
-               / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                  * sqrt({_dot_sql('q.qv', 'q.qv')})) AS cos_full,
-             {_dot_sql_pfx('e.embedding', 'q.qv', MRL_PREFIX_DIM)}
-               / (sqrt({_dot_sql_pfx('e.embedding', 'e.embedding', MRL_PREFIX_DIM)})
-                  * sqrt({_dot_sql_pfx('q.qv', 'q.qv', MRL_PREFIX_DIM)})) AS cos_pfx
+             {_cos_sql('e.embedding', 'q.qv')} AS cos_full,
+             {_cos_sql('e.embedding', 'q.qv', MRL_PREFIX_DIM)} AS cos_pfx
       FROM embeddings e CROSS JOIN q
       WHERE e.vec_id <> q.q_id
     ),
@@ -1761,44 +1557,10 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            (_dot("embedding", "qv") / (_norm("embedding") * _norm("qv"))).alias(
+            _cos("embedding", "qv").alias(
                 "cos_full"
             ),
-            (
-                F.aggregate(
-                    F.zip_with(
-                        pfx(F.col("embedding")),
-                        pfx(F.col("qv")),
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                / (
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                pfx(F.col("embedding")),
-                                pfx(F.col("embedding")),
-                                lambda x, y: x.cast("double") * y.cast("double"),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        )
-                    )
-                    * F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                pfx(F.col("qv")),
-                                pfx(F.col("qv")),
-                                lambda x, y: x.cast("double") * y.cast("double"),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        )
-                    )
-                )
-            ).alias("cos_pfx"),
+            _cos(pfx(F.col("embedding")), pfx(F.col("qv"))).alias("cos_pfx"),
         )
         .localCheckpoint()
     )
@@ -1834,12 +1596,6 @@ MMR_POOL = 8  # relevance-ranked candidate pool
 MMR_K = 3  # selections (each unrolled as one oracle CTE)
 
 _R9 = "FLOOR(({}) * 1000000000 + 0.5) / 1000000000"
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
-    )
 
 
 @register(
@@ -1901,11 +1657,10 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     r9 = lambda c: F.floor(c * 1000000000 + F.lit(0.5)) / 1000000000  # noqa: E731
-    cos = lambda a, b: _dot(a, b) / (_norm(a) * _norm(b))  # noqa: E731
     cand = (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", "embedding", r9(cos("embedding", "qv")).alias("rel"))
+        .select("vec_id", "embedding", r9(_cos("embedding", "qv")).alias("rel"))
         .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
         .limit(MMR_POOL)
         .localCheckpoint()
@@ -1915,7 +1670,7 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = (
         a.crossJoin(b)
         .filter(F.col("va") != F.col("vb"))
-        .select("va", "vb", r9(cos("ea", "eb")).alias("s"))
+        .select("va", "vb", r9(_cos("ea", "eb")).alias("s"))
         .localCheckpoint()
     )
     lam = MMR_LAMBDA
@@ -2051,7 +1806,7 @@ RANK_K = 10
     ),
     scored AS (
       SELECT q.q_id, q.q_label, e.vec_id, e.label,
-             FLOOR({_RECALL_COS_SQL} * 1000000000 + 0.5) / 1000000000 AS cos9
+             FLOOR({_cos_sql('e.embedding', 'q.qv')} * 1000000000 + 0.5) / 1000000000 AS cos9
       FROM embeddings e CROSS JOIN q
       WHERE e.vec_id <> q.q_id
     ),
@@ -2108,9 +1863,7 @@ def ann_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("label").alias("q_label"),
     )
-    cos = _dot("embedding", "qv") / (
-        F.sqrt(_dot("embedding", "embedding")) * F.sqrt(_dot("qv", "qv"))
-    )
+    cos = _cos("embedding", "qv")
     cos9 = F.floor(cos * 1000000000 + F.lit(0.5)) / 1000000000
     scored = (
         emb.crossJoin(F.broadcast(q))
@@ -2544,8 +2297,8 @@ _CAP_FAMILY_AGG_SQL = """
     f"""
     WITH b AS (
       SELECT vec_id,
-             {_nd_band_sql('embedding', 0)} AS k0,
-             {_nd_band_sql('embedding', 1)} AS k1
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[0])} AS k0,
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[1])} AS k1
       FROM embeddings
     ),
     g0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS gs FROM b GROUP BY k0 HAVING COUNT(*) >= 2),
@@ -3212,7 +2965,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    assigned = kmp_assign(emb, target_pop=SEM_TARGET_POP)
+    assigned = lloyd_assign(emb, LLOYD_EXACT6, target_pop=SEM_TARGET_POP)
     sizes, okm, groups = _sem_capped_groups(assigned)
     n2 = F.aggregate(
         F.zip_with("v6", "v6", lambda x, y: x * y),
@@ -3505,8 +3258,8 @@ INC_BATCH_CUT = "e6"  # md5 2-hex prefix >= 'e6': 26/256 ~ 10% arriving batch
     f"""
     WITH b AS (
       SELECT vec_id, embedding,
-             {_nd_band_sql('embedding', 0)} AS k0,
-             {_nd_band_sql('embedding', 1)} AS k1,
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[0])} AS k0,
+             {_sign_key_sql('embedding', _ND_BAND_PLANES[1])} AS k1,
              substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) AS sp
       FROM embeddings
     ),
@@ -3522,9 +3275,7 @@ INC_BATCH_CUT = "e6"  # md5 2-hex prefix >= 'e6': 26/256 ~ 10% arriving batch
       FROM batch n JOIN s1 ON s1.k1 = n.k1 JOIN corpus c ON c.k1 = n.k1
     )
     SELECT d.new_id, d.dup_of,
-           {_dot_sql('ea.embedding', 'eb.embedding')}
-             / (sqrt({_dot_sql('ea.embedding', 'ea.embedding')})
-                * sqrt({_dot_sql('eb.embedding', 'eb.embedding')})) AS cosine
+           {_cos_sql('ea.embedding', 'eb.embedding')} AS cosine
     FROM cand d
     JOIN embeddings ea ON ea.vec_id = d.new_id
     JOIN embeddings eb ON eb.vec_id = d.dup_of
@@ -3559,7 +3310,7 @@ def emb_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probe_band_state(ck, bk, ND_BAND_CAP)
     ea = emb.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("dup_of"), F.col("embedding").alias("vb"))
-    cos = (_dot("va", "vb") / (_norm("va") * _norm("vb"))).alias("cosine")
+    cos = _cos("va", "vb").alias("cosine")
     return (
         cand.join(ea, "new_id")
         .join(eb, "dup_of")

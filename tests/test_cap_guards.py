@@ -621,34 +621,6 @@ def test_cap_audit_reports_drops_when_cap_fires(spark, tmp_path):
         assert rows[fam]["n_dropped"] == 0 and rows[fam]["drop_frac"] == 0.0, fam
 
 
-def test_doc_band_keys_agree_with_exploded_band_keys(spark):
-    """lsh_doc_band_keys (unexploded, used by the candidate generator and
-    the cap audit) and lsh_band_keys (exploded, used by bucket analytics)
-    must assign identical band keys — if they drift, the audit would report
-    on different buckets than the candidates are drawn from."""
-    import random
-
-    from fpl_data_pipeline_spark.operators.similarity import (
-        lsh_band_keys,
-        lsh_doc_band_keys,
-    )
-
-    rnd = random.Random(21)
-    emb = spark.createDataFrame(
-        [(i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    wide = {
-        r["vec_id"]: (r["k0"], r["k1"]) for r in lsh_doc_band_keys(emb).collect()
-    }
-    tall = {}
-    for r in lsh_band_keys(emb).collect():
-        tall.setdefault(r["vec_id"], {})[r["band_id"]] = r["band_key"]
-    assert set(wide) == set(tall)
-    for vid, (k0, k1) in wide.items():
-        assert tall[vid] == {0: k0, 1: k1}
-
-
 def test_lsh_candidate_pairs_guards_band_count(spark, monkeypatch):
     """The 2-band suppression chain must fail loud — not silently drop
     bands — if the banding is ever widened."""

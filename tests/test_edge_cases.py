@@ -140,3 +140,78 @@ def test_corpus_operators_on_degenerate_docs(spark, tmp_path):
               for r in QUERIES["quality_filter_funnel"](spark, sf_dir).collect()}
     # empty-text doc never reaches the divide-by-zero rules: caught by too_short
     assert funnel.get("too_short", 0) >= 2
+
+
+def test_lloyd_loop_on_degenerate_corpora(spark):
+    """Both Lloyd arithmetics run one loop, so both meet the same
+    degenerate inputs: an empty corpus gives a typed zero-row assignment,
+    a single vector is its own centroid, and identical vectors tie to the
+    lowest c_id."""
+    from fpl_data_pipeline_spark.operators.similarity import (
+        DIM,
+        LLOYD_DOUBLE,
+        LLOYD_EXACT6,
+        lloyd_assign,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame([(7, [0.5] * DIM)], schema)
+    same = spark.createDataFrame([(i, [0.25] * DIM) for i in range(4)], schema)
+    for arith in (LLOYD_DOUBLE, LLOYD_EXACT6):
+        out = lloyd_assign(empty, arith, k=8)
+        assert out.collect() == [], arith.col
+        types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+        assert list(types) == ["vec_id", arith.col, "c_id", "d2"], arith.col
+        assert (types["vec_id"], types["c_id"], types["d2"]) == (
+            "bigint", "int", arith.sql_type,
+        ), arith.col
+        rows = lloyd_assign(one, arith, k=8).collect()
+        assert [(r["vec_id"], r["c_id"], r["d2"]) for r in rows] == [(7, 0, 0)], arith.col
+        rows = lloyd_assign(same, arith, k=8).collect()
+        assert sorted((r["vec_id"], r["c_id"], r["d2"]) for r in rows) == [
+            (i, 0, 0) for i in range(4)
+        ], arith.col
+
+
+def test_lloyd_arithmetics_agree_where_both_are_exact(spark):
+    """On integer-valued coordinates whose cluster means are integers,
+    every distance and centroid update is exact in both arithmetics, so
+    the double loop (kmeans_embeddings) and the exact-integer loop
+    (kmeans_portable's, which the DuckDB oracle replays) must assign every
+    vector identically, with d2_exact == d2_double * 1e12."""
+    from fpl_data_pipeline_spark.operators.similarity import (
+        DIM,
+        LLOYD_DOUBLE,
+        LLOYD_EXACT6,
+        lloyd_assign,
+    )
+
+    def vec(center_axis, offset):
+        v = [0.0] * DIM
+        if center_axis is not None:
+            v[center_axis] = 10.0
+        v[5] = float(offset)
+        return v
+
+    # three clusters of four members at offsets +-1, +-2 around an integer
+    # center; vec_ids 0..2 (the seeds) are one member of each cluster
+    centers = (None, 0, 1)
+    rows, vid = [], 0
+    for off in (1, -1, 2, -2):
+        for axis in centers:
+            rows.append((vid, vec(axis, off)))
+            vid += 1
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {}
+    for arith in (LLOYD_DOUBLE, LLOYD_EXACT6):
+        got[arith.col] = {
+            r["vec_id"]: (r["c_id"], r["d2"])
+            for r in lloyd_assign(emb, arith, k=3).collect()
+        }
+    dbl, ex = got["embedding"], got["v6"]
+    assert set(dbl) == set(ex) == set(range(12))
+    for v in range(12):
+        assert dbl[v][0] == ex[v][0] == v % 3, v
+        assert ex[v][1] == dbl[v][1] * 1e12, v
+    assert sorted({d for _, d in dbl.values()}) == [1.0, 4.0]

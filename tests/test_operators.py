@@ -255,11 +255,32 @@ def test_connected_components_raises_on_nonconvergence(spark):
     assert set(got.values()) == {1}
 
 
+def test_cluster_and_kmeans_queries_release_their_caches(spark):
+    """connected_components and the Lloyd loop cache their inputs while
+    they iterate and release them before returning, so a query leaves the
+    session's CacheManager as it found it (a leaked cache serves later
+    calls over the same plan and skews every timing after the first)."""
+    from fpl_data_pipeline_spark.operators.dedup import connected_components
+    from fpl_data_pipeline_spark.registry import QUERIES, load_all
+
+    load_all()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "doc_id_a long, doc_id_b long"
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert cache.isEmpty()
+    QUERIES["kmeans_embeddings"](spark, "/root/testdata/sf0.001")
+    assert cache.isEmpty()
+
+
 def test_banded_lsh_16_planes_finds_planted_neighbor(spark):
     """Banded sign-bit LSH (16 planes, 2 bands x 8 bits): a planted
     near-identical pair must share at least one band key; an antipodal pair
-    must share none (operators/similarity.py::lsh_band_keys)."""
-    from fpl_data_pipeline_spark.operators.similarity import lsh_band_keys
+    must share none (operators/similarity.py::lsh_doc_band_keys)."""
+    from fpl_data_pipeline_spark.operators.similarity import lsh_doc_band_keys
 
     base = [1.0, -0.5, 0.25, 0.8] * 16
     near = [v * 1.01 for v in base]
@@ -267,9 +288,9 @@ def test_banded_lsh_16_planes_finds_planted_neighbor(spark):
     emb = spark.createDataFrame(
         [(0, base), (1, near), (2, anti)], ["vec_id", "embedding"]
     )
-    keys = {}
-    for r in lsh_band_keys(emb).collect():
-        keys.setdefault(r["vec_id"], {})[r["band_id"]] = r["band_key"]
+    keys = {
+        r["vec_id"]: {0: r["k0"], 1: r["k1"]} for r in lsh_doc_band_keys(emb).collect()
+    }
     assert all(len(v) == 2 for v in keys.values())  # 2 bands per vector
     shared_near = [b for b in keys[0] if keys[0][b] == keys[1][b]]
     shared_anti = [b for b in keys[0] if keys[0][b] == keys[2][b]]

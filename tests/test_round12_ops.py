@@ -48,7 +48,8 @@ def test_expand_carry_collision_raises(spark):
 def test_kmeans_fit_empty_corpus(spark, empty_dir):
     """kmeans_fit on an empty corpus returns a correctly-typed zero-row
     assignment instead of failing analysis on a VOID-typed empty array
-    literal (round-11 ADVICE — the kmp_assign guard's float twin)."""
+    literal (round-11 ADVICE; lloyd_assign's one guard serves both
+    arithmetics)."""
     from fpl_data_pipeline_spark.operators.similarity import kmeans_fit
 
     out = kmeans_fit(table(spark, empty_dir, "embeddings"))

@@ -273,8 +273,9 @@ def test_semdedup_prunes_planted_duplicates(spark, semdup_dir):
     import math
 
     from fpl_data_pipeline_spark.operators.similarity import (
+        LLOYD_EXACT6,
         SEM_TAU,
-        kmp_assign,
+        lloyd_assign,
         semdedup_prune,
     )
     from fpl_data_pipeline_spark.tables import table
@@ -283,7 +284,7 @@ def test_semdedup_prunes_planted_duplicates(spark, semdup_dir):
     got = semdedup_prune(spark, sf_dir).collect()
     assert sum(r["capped"] for r in got) == 0
     # brute-force the same rule from the same assignment
-    a = kmp_assign(table(spark, sf_dir, "embeddings")).collect()
+    a = lloyd_assign(table(spark, sf_dir, "embeddings"), LLOYD_EXACT6).collect()
     members = {}
     for r in a:
         members.setdefault(r["c_id"], []).append((r["vec_id"], list(r["v6"])))
@@ -444,7 +445,7 @@ def test_semdedup_cluster_cap_is_count_prepass(spark):
     from fpl_data_pipeline_spark.operators.similarity import _sem_capped_groups
 
     # the SHARED helper the query and the scale probe both consume, over a
-    # local assignment stand-in (kmp_assign itself runs driver collects,
+    # local assignment stand-in (lloyd_assign itself runs driver collects,
     # which a plan-shape test must not trigger)
     assigned = spark.createDataFrame(
         [(i, i % 3) for i in range(12)], "vec_id long, c_id int"

@@ -101,12 +101,12 @@ def test_semdedup_scaled_k_oracle_parity(spark, scaled_semdup_dir, monkeypatch):
 
 
 def test_kmp_assign_fixed_twin_unchanged(spark, scaled_semdup_dir):
-    """kmeans_portable's contract: kmp_assign with NO target_pop still
+    """kmeans_portable's contract: lloyd_assign with NO target_pop still
     seeds exactly KMP_K centroids regardless of corpus size."""
     from fpl_data_pipeline_spark.tables import table
 
     sf_dir, _ = scaled_semdup_dir
-    a = S.kmp_assign(table(spark, sf_dir, "embeddings"))
+    a = S.lloyd_assign(table(spark, sf_dir, "embeddings"), S.LLOYD_EXACT6)
     assert a.agg({"c_id": "max"}).first()[0] < S.KMP_K
 
 
@@ -528,7 +528,7 @@ def test_emb_incremental_neardup_finds_planted_arrival(spark, tmp_path):
 
 
 def test_kmp_argmin_fallback_matches_literal_path(spark, monkeypatch):
-    """Round-11: kmp_assign's Lloyd argmin has two value-identical shapes —
+    """Round-11: lloyd_assign's argmin has two value-identical shapes —
     the inlined centroid-literal array_min (k <= KMP_ARGMIN_LITERAL_K, zero
     shuffle) and the crossJoin + partial-aggregated min(struct) fallback for
     derived k past the literal bound. Forcing the fallback must reproduce
@@ -537,7 +537,7 @@ def test_kmp_argmin_fallback_matches_literal_path(spark, monkeypatch):
     from fpl_data_pipeline_spark.tables import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
-    lit = S.kmp_assign(emb).orderBy("vec_id").collect()
+    lit = S.lloyd_assign(emb, S.LLOYD_EXACT6).orderBy("vec_id").collect()
     monkeypatch.setattr(S, "KMP_ARGMIN_LITERAL_K", 0)
-    fb = S.kmp_assign(emb).orderBy("vec_id").collect()
+    fb = S.lloyd_assign(emb, S.LLOYD_EXACT6).orderBy("vec_id").collect()
     assert [tuple(r) for r in lit] == [tuple(r) for r in fb]

@@ -3,9 +3,13 @@
 Runs the query with the Spark event log enabled, then parses the log into a
 stage table: wall time, task-time sum, GC, shuffle read/write bytes, input
 bytes — the UI's Stages tab, terminal edition (get_spark disables
-spark.ui). The session is the engine's own get_spark(), so plans match the
-bench; the event log is switched on by a run-owned spark-defaults.conf
-found through SPARK_CONF_DIR, set before the JVM starts.
+spark.ui). Each rep prints its construction seconds and jobs (the DAG
+scheduler's job-id delta around building the DataFrame) apart from its
+execution seconds; rep0 carries JIT warm-up, so the summary line is the
+median of reps 1 and on. The session is the engine's own get_spark(), so
+plans match the bench; the event log is switched on by a run-owned
+spark-defaults.conf found through SPARK_CONF_DIR, set before the JVM
+starts.
 
 Usage: python tools/profile_stages.py <query> [reps]
 """
@@ -49,19 +53,36 @@ def main() -> None:
 
     from fpl_data_pipeline_spark import get_spark
     from fpl_data_pipeline_spark.registry import QUERIES, load_all
+    from fplbench.probe import median, next_job_id
 
     load_all()
     spark = get_spark(f"profile_{name}")
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["topk_basic"](spark, sf_dir).count()  # warm-up
-    # py4j auto-unboxes the AtomicInteger to a plain int
-    warm_end_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    warm_end_job = next_job_id(spark)
 
+    construct_s, construct_jobs, exec_s = [], [], []
     for i in range(reps):
         spark.sparkContext.setJobDescription(f"profile {name} rep{i}")
+        j0 = next_job_id(spark)
         t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        print(f"rep{i}: {time.perf_counter() - t0:.3f}s")
+        df = QUERIES[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        construct_jobs.append(next_job_id(spark) - j0)
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        construct_s.append(t1 - t0)
+        exec_s.append(t2 - t1)
+        print(
+            f"rep{i}{' (warm-up)' if i == 0 else ''}: construct {t1 - t0:.3f}s"
+            f" ({construct_jobs[-1]} jobs), exec {t2 - t1:.3f}s, total {t2 - t0:.3f}s"
+        )
+    if reps > 1:
+        print(
+            f"median of reps 1-{reps - 1}: construct {median(construct_s[1:]):.3f}s"
+            f" ({median(construct_jobs[1:]):g} jobs), exec {median(exec_s[1:]):.3f}s,"
+            f" total {median([c + e for c, e in zip(construct_s[1:], exec_s[1:])]):.3f}s"
+        )
     spark.stop()
 
     # parse the event log (all post-warm-up stages); one application with

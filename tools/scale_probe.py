@@ -60,20 +60,21 @@ _ASSIGN_MEMO: dict = {}
 def _kmp_assigned(spark, sf_dir):
     """Memoized portable k-means assignment per scale dir, in the
     corpus-scaled mode semdedup_prune itself uses (k = max(KMP_K,
-    ceil(n / SEM_TARGET_POP))) — kmp_assign runs KMP_ITERS collect-driven
+    ceil(n / SEM_TARGET_POP))) — lloyd_assign runs KMP_ITERS collect-driven
     Lloyd rounds, so the two semdedup probes below must share one
     training run, not pay it twice. Note the Lloyd cost lands here at
     construction time, OUTSIDE the per-family 'sec' timing: the probe
     times the candidate expansion, by design."""
     if sf_dir not in _ASSIGN_MEMO:
         from fpl_data_pipeline_spark.operators.similarity import (
+            LLOYD_EXACT6,
             SEM_TARGET_POP,
-            kmp_assign,
+            lloyd_assign,
         )
         from fpl_data_pipeline_spark.tables import table
 
-        _ASSIGN_MEMO[sf_dir] = kmp_assign(
-            table(spark, sf_dir, "embeddings"), target_pop=SEM_TARGET_POP
+        _ASSIGN_MEMO[sf_dir] = lloyd_assign(
+            table(spark, sf_dir, "embeddings"), LLOYD_EXACT6, target_pop=SEM_TARGET_POP
         )
     return _ASSIGN_MEMO[sf_dir]
 
