@@ -12,7 +12,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from fpl_data_pipeline_spark.operators.dedup import (
     _NORM_SQL,
     _NORM_WORDS_SQL,
+    _capped_key_groups,
     _ensure_parallel,
+    _expand_member_pairs_streaming,
     _norm_text,
     _norm_words,
     _word_ngrams,
@@ -489,10 +491,6 @@ def text_hash_vector_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-valued doubles: dot products and norms are exact on both
     engines); production corpora switch hash_fn='xxhash64' for speed with
     identical semantics."""
-    from fpl_data_pipeline_spark.operators.dedup import (
-        _expand_member_pairs_streaming,
-    )
-
     d = table(spark, sf_dir, "documents")
     # localCheckpoint: the vector frame feeds three consumers (the block
     # relation + both score-join sides) — materialize the hash-explode
@@ -502,21 +500,14 @@ def text_hash_vector_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §7): the dense count vectors do NOT ride the expansion — pairs dedup
     # as two longs, then the vectors join back and each distinct pair is
     # scored exactly once (same join-back rationale as _lsh_candidate_pairs).
-    # oksz is bounded by the key space (<= ~dim^2/2 rows at ANY corpus
-    # size), so Catalyst broadcasts it and the cap filter runs map-side.
-    blocks = fv.select("doc_id", "k1", "k2")
-    oksz = (
-        blocks.groupBy("k1", "k2")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter((F.col("bs") >= 2) & (F.col("bs") <= HV_BLOCK_CAP))
-        .drop("bs")
-    )
-    groups = (
-        blocks.join(oksz, ["k1", "k2"])
-        .groupBy("k1", "k2")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("members"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # The block sizes are bounded by the key space (<= ~dim^2/2 rows at ANY
+    # corpus size), so Catalyst broadcasts them and the cap runs map-side.
+    groups = _capped_key_groups(
+        fv.select("doc_id", "k1", "k2"),
+        ["k1", "k2"],
+        F.collect_set("doc_id"),
+        HV_BLOCK_CAP,
+    ).repartition(spark.sparkContext.defaultParallelism)
     pairs = _expand_member_pairs_streaming(groups).select(
         F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
     )

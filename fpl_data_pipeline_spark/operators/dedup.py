@@ -232,22 +232,6 @@ def shingles(
     return words.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
-def capped_shingles(
-    df: DataFrame, text_col: str = "text", n: int = 3, df_cap: int = 0
-) -> DataFrame:
-    """Shingles with document-frequency capping: drop shingles appearing in
-    more than ``df_cap`` documents (default SHINGLE_DF_CAP) BEFORE any
-    self-join — the anti-skew guard for exact-Jaccard candidate generation.
-    One extra groupBy on the shingle key; the filter join shuffles on the
-    same key as the downstream self-join, so AQE coalesces the exchanges."""
-    cap = df_cap or SHINGLE_DF_CAP
-    sh = shingles(df, text_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    return sh.join(freq.filter(F.col("df") <= cap).select("shingle"), "shingle").select(
-        "doc_id", "shingle"
-    )
-
-
 # --- exact dedup: md5-keyed group, keep lowest doc_id -----------------------
 @register(
     "dedup_exact_groups",
@@ -340,25 +324,52 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _capped_key_groups(sh: DataFrame, key_col: str, df_cap: int) -> DataFrame:
-    """Sorted per-key doc arrays for keys whose document frequency is
-    within ``df_cap`` — the count-agg PRE-pass shape shared by every capped
-    candidate family (tests/test_cap_guards.py pins this plan; split out of
-    _set_overlap_stats so the assertion sees the pre-localCheckpoint tree).
-    The groupBy after the join reuses the join's hash partitioning on the
-    key — no third exchange. collect_list suffices: the input is
-    (doc_id, key)-distinct by contract."""
-    keep = (
-        sh.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("dfk"))
-        .filter(F.col("dfk") <= df_cap)
-        .drop("dfk")
-    )
+def _key_group_sizes(
+    keyed: DataFrame, keys: list[str], size: Column | None = None
+) -> DataFrame:
+    """(*keys, n): the size of every key group — ``count(1)`` unless
+    ``size`` says otherwise (span caps distinct docs per hash). The count
+    half of every capped candidate family's pre-pass; candidate_cap_audit
+    reports from the same function, so it counts what the caps count."""
+    n = F.count(F.lit(1)) if size is None else size
+    return keyed.groupBy(*keys).agg(n.alias("n"))
+
+
+def _alive_keys(
+    keyed: DataFrame, keys: list[str], cap: int, lo: int = 2, size: Column | None = None
+) -> DataFrame:
+    """(*keys): the key groups whose size lies in [lo, cap]. ``lo=1`` keeps
+    singletons (callers that also count per-member sizes need them)."""
+    n = F.col("n")
+    bounds = n <= cap if lo <= 1 else (n >= lo) & (n <= cap)
+    return _key_group_sizes(keyed, keys, size).filter(bounds).drop("n")
+
+
+def _capped_key_groups(
+    keyed: DataFrame,
+    keys: list[str],
+    member: Column,
+    cap: int,
+    lo: int = 2,
+    size: Column | None = None,
+) -> DataFrame:
+    """(*keys, members): ``array_sort(member)`` over every key group of
+    ``keyed`` whose size lies in [lo, cap] — the one capped key-group
+    builder under every blocked candidate family (ARCHITECTURE.md §7).
+
+    The cap is a count-agg PRE-pass: group sizes are counted first and
+    joined back, so only surviving groups reach the member collect and an
+    over-cap group never buffers its members in one aggregation buffer
+    (the round-5 OOM shape of a post-collect ``size(members) <= cap``).
+    The collect's groupBy reuses the join's hash partitioning on the keys —
+    no third exchange. ``member`` is the aggregate to sort: collect_list
+    over a (member, key)-distinct input, collect_set where a replayed row
+    must not yield a repeated member (an (x, x) pair downstream)."""
+    alive = _alive_keys(keyed, keys, cap, lo, size)
     return (
-        sh.join(keep, key_col)
-        .groupBy(key_col)
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .select("docs")
+        keyed.join(alive, keys)
+        .groupBy(*keys)
+        .agg(F.array_sort(member).alias("members"))
     )
 
 
@@ -367,6 +378,15 @@ def _capped_key_groups(sh: DataFrame, key_col: str, df_cap: int) -> DataFrame:
 # would wrap in 32 bits and merge unrelated pairs; on bigint ids Catalyst
 # drops the no-op casts and the plan is unchanged.
 PACKED_PAIR_KEY = "shiftleft(cast(a AS bigint), 31) | cast(b AS bigint)"
+
+
+def unpack_pair_key(ab: str, a: str, b: str) -> list[Column]:
+    """The inverse of PACKED_PAIR_KEY: the packed column ``ab`` split back
+    into its two 31-bit halves, aliased ``a`` and ``b``."""
+    return [
+        F.shiftright(ab, 31).alias(a),
+        F.col(ab).bitwiseAND(F.lit((1 << 31) - 1)).alias(b),
+    ]
 
 
 def _pair_pack_ok(ids: DataFrame | None, id_col: str = "doc_id") -> bool:
@@ -400,15 +420,8 @@ def _set_overlap_stats(
     the same grouped relation map-side, and pair intersection counts come
     from the pair explode.
 
-    The df cap is a count-agg PRE-pass (round-7 migration of the last
-    post-collect filters): until round 6 the cap was a ``size(docs) <=
-    df_cap`` filter ABOVE the collect, so a corpus-boilerplate key buffered
-    its whole doc set inside one aggregation buffer before being dropped —
-    the round-5 OOM shape the HV_BLOCK_CAP / ND_BAND_CAP / SIMHASH_CHUNK_CAP
-    families already fixed. Counting first bounds the aggregation state to
-    one long per key; the join back costs one extra exchange of the
-    exploded relation, the price of a bounded buffer at 100 TB. ``sh`` must
-    be (doc_id, key)-distinct — every caller explodes an array_distinct per
+    The df cap is _capped_key_groups' count-agg PRE-pass. ``sh`` must be
+    (doc_id, key)-distinct — every caller explodes an array_distinct per
     doc — so count(1) per key IS the key's document frequency.
 
     ``directed=True`` emits both orientations of each pair (the
@@ -453,21 +466,21 @@ def _set_overlap_stats(
     # shared keys = sum of w over the distinct doc sets containing both.
     # Exact by construction — no hashing, no sampling — and the extra
     # exchange moves only the group relation (MBs), not the pairs (GBs).
+    # lo=1: singleton groups still count towards the per-doc key totals.
+    # collect_list suffices: ``sh`` is (doc_id, key)-distinct.
     wgroups = (
-        _capped_key_groups(sh, key_col, df_cap)
-        .groupBy("docs")
+        _capped_key_groups(sh, [key_col], F.collect_list("doc_id"), df_cap, lo=1)
+        .groupBy("members")
         .agg(F.count(F.lit(1)).alias("w"))
         .localCheckpoint(eager=False)
     )
     sizes = (
-        wgroups.select(F.explode("docs").alias("doc_id"), "w")
+        wgroups.select(F.explode("members").alias("doc_id"), "w")
         .groupBy("doc_id")
         .agg(F.sum("w").alias("n_keys"))
     )
-    pair_groups = (
-        wgroups.filter(F.size("docs") >= 2)
-        .repartition(sh.sparkSession.sparkContext.defaultParallelism)
-        .select(F.col("docs").alias("members"), "w")
+    pair_groups = wgroups.filter(F.size("members") >= 2).repartition(
+        sh.sparkSession.sparkContext.defaultParallelism
     )
     # streaming two-Generate expansion (round 7): a df_cap-sized group under
     # the one-Generate shape materializes C(1000, 2) = 500k pair structs in
@@ -511,11 +524,7 @@ def _set_overlap_stats(
             .repartition(par, "ab")
             .groupBy("ab")
             .agg(F.sum("w").alias("n_common"))
-            .select(
-                F.shiftright("ab", 31).alias("doc_id_a"),
-                F.col("ab").bitwiseAND(F.lit((1 << 31) - 1)).alias("doc_id_b"),
-                "n_common",
-            )
+            .select(*unpack_pair_key("ab", "doc_id_a", "doc_id_b"), "n_common")
         )
     else:
         pair_inter = (
@@ -760,18 +769,9 @@ def _banded_pairs(
     map-side per consumer."""
     per_doc = per_doc.localCheckpoint(eager=False)
     keyed = per_doc.select("doc_id", payload, keys)
-    alive = (
-        keyed.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .drop("n")
-    )
-    groups = (
-        keyed.join(alive, ["band", "key"])
-        .groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", payload))).alias("members"))
-        .repartition(per_doc.sparkSession.sparkContext.defaultParallelism)
-    )
+    groups = _capped_key_groups(
+        keyed, ["band", "key"], F.collect_list(F.struct("doc_id", payload)), cap
+    ).repartition(per_doc.sparkSession.sparkContext.defaultParallelism)
     scored = _expand_member_pairs_streaming(groups).select(
         F.col("a.doc_id").alias("doc_id_a"),
         F.col("b.doc_id").alias("doc_id_b"),
@@ -1167,17 +1167,9 @@ def winnowing_candidate_pairs(d: DataFrame, fp_cap: int = WINNOW_FP_CAP) -> Data
     measured 26 s -> expected ~3x on that stage at 10x (10-partition scan
     on 32 cores). Already-parallel inputs keep their layout."""
     # Candidate pairs use the keyed-pair-generation-without-self-join shape
-    # (ARCHITECTURE.md §7, same as cf_item_similarity): ONE groupBy collects
-    # the sorted distinct doc set per fingerprint.
-    #
-    # fp_cap is a count-agg PRE-pass (round-7 migration, closing the last
-    # explain-audit allowlist entry): the round-4..6 shape capped with
-    # ``size(docs) <= fp_cap`` ABOVE the collect, so one corpus-boilerplate
-    # fingerprint (df in the millions at 100 TB) buffered its entire doc
-    # set in a single aggregation buffer before being dropped. Counting
-    # first bounds aggregation state to one long per fingerprint; the join
-    # back is one extra exchange — the same trade every other capped
-    # family made. collect_list suffices after the distinct.
+    # (ARCHITECTURE.md §7): _capped_key_groups collects the sorted doc set
+    # of every fingerprint within fp_cap. collect_list suffices: the
+    # per-doc fingerprints are distinct.
     # lazy checkpoint (round 8): the pre-pass gave the exploded relation
     # TWO consumers (the df count agg and the join probe) and no
     # ReusedExchange fires (verified: 2 parquet scans in the executed
@@ -1190,23 +1182,14 @@ def winnowing_candidate_pairs(d: DataFrame, fp_cap: int = WINNOW_FP_CAP) -> Data
     # post-collect shape is the join-back exchange — the documented price
     # of a bounded aggregation buffer at 100 TB, re-measured and kept.
     fps = winnow_doc_fingerprints(d).localCheckpoint(eager=False)
-    keep = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dfp"))
-        .filter((F.col("dfp") >= 2) & (F.col("dfp") <= fp_cap))
-        .drop("dfp")
-    )
-    groups = (
-        fps.join(keep, "fp")
-        .groupBy("fp")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        # the array relation is small (AQE coalesces it) but the explode
-        # below multiplies each row by df(df-1)/2 — spread it back across
-        # the executors before the fan-out (ARCHITECTURE.md §7 subtlety)
-        .repartition(d.sparkSession.sparkContext.defaultParallelism)
-    )
+    # the array relation is small (AQE coalesces it) but the explode below
+    # multiplies each row by df(df-1)/2 — spread it back across the
+    # executors before the fan-out (ARCHITECTURE.md §7 subtlety)
+    groups = _capped_key_groups(
+        fps, ["fp"], F.collect_list("doc_id"), fp_cap
+    ).repartition(d.sparkSession.sparkContext.defaultParallelism)
     return (
-        _expand_member_pairs_streaming(groups, "docs")
+        _expand_member_pairs_streaming(groups)
         .select(F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b"))
         .groupBy("doc_id_a", "doc_id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
@@ -2191,26 +2174,17 @@ def span_pair_spans(d: DataFrame, df_cap: int = SPAN_DF_CAP) -> DataFrame:
     # first, so i<j with a.doc_id < b.doc_id enumerates exactly the old
     # join's da<db rows).
     #
-    # The df cap (distinct DOCS per hash, as before) is a count-agg
-    # PRE-pass (round-7 migration): the round-4..6 shape filtered
-    # size(array_distinct(members)) AFTER the collect, buffering a
-    # boilerplate hash's full occurrence set in one aggregation buffer —
-    # the same OOM trap the other capped families already closed. A
-    # single-doc hash (dd=1) can only emit same-doc pairs that the da<db
-    # filter drops, so dd >= 2 in the pre-pass prunes it without changing
-    # the output.
-    keep = (
-        hashed.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("dd"))
-        .filter((F.col("dd") >= 2) & (F.col("dd") <= df_cap))
-        .drop("dd")
-    )
-    groups = (
-        hashed.join(keep, "h")
-        .groupBy("h")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "pos"))).alias("members"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism)
-    )
+    # The df cap counts distinct DOCS per hash in _capped_key_groups'
+    # pre-pass. A single-doc hash can only emit same-doc pairs that the
+    # da<db filter drops, so the pre-pass's lower bound of 2 prunes it
+    # without changing the output.
+    groups = _capped_key_groups(
+        hashed,
+        ["h"],
+        F.collect_list(F.struct("doc_id", "pos")),
+        df_cap,
+        size=F.countDistinct("doc_id"),
+    ).repartition(d.sparkSession.sparkContext.defaultParallelism)
     matched = _expand_member_pairs_streaming(groups).select(
         F.col("a.doc_id").alias("da"),
         F.col("b.doc_id").alias("db"),

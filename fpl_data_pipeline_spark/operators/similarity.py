@@ -217,8 +217,6 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     they broadcast and the filters run map-side. candidate_cap_audit
     reports dropped-group counts / membership fraction when a cap fires —
     recall degradation is observable, not silent."""
-    from fpl_data_pipeline_spark.operators.dedup import _expand_member_pairs_streaming
-
     if N_ND_BANDS != 2:
         # the suppression chain below is written for exactly two bands
         # (band 1 checks band 0); a wider banding needs k0v..k{i-1}v per
@@ -237,39 +235,24 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     # 3 small columns per doc, far cheaper than three extra scan+projection
     # passes at any scale (same pinning rationale as phrase search's post2).
     ids = lsh_doc_band_keys(emb).localCheckpoint(eager=False)
-    alive0 = (
-        ids.groupBy("k0")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter((F.col("bs") >= 2) & (F.col("bs") <= ND_BAND_CAP))
-        .drop("bs")
-    )
-    alive1 = (
-        ids.groupBy("k1")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter((F.col("bs") >= 2) & (F.col("bs") <= ND_BAND_CAP))
-        .drop("bs")
-    )
     # collect_set, not collect_list: a duplicated vec_id upstream
     # (ingestion replay) would otherwise yield [x, x] members and the
     # positional expansion would emit an (x, x) self-pair at cosine 1.0
-    g0 = (
-        ids.join(F.broadcast(alive0), "k0")
-        .groupBy("k0")
-        .agg(F.array_sort(F.collect_set("vec_id")).alias("members"))
-        .repartition(par)
-    )
+    g0 = _capped_key_groups(
+        ids, ["k0"], F.collect_set("vec_id"), ND_BAND_CAP
+    ).repartition(par)
     p0 = _expand_member_pairs_streaming(g0).select(
         F.col("a").alias("vec_id_a"), F.col("b").alias("vec_id_b")
     )
-    marked = ids.join(
-        F.broadcast(alive0.withColumn("_a0", F.lit(True))), "k0", "left"
-    ).select("vec_id", "k1", F.when(F.col("_a0"), F.col("k0")).alias("k0v"))
-    g1 = (
-        marked.join(F.broadcast(alive1), "k1")
-        .groupBy("k1")
-        .agg(F.array_sort(F.collect_set(F.struct("vec_id", "k0v"))).alias("members"))
-        .repartition(par)
+    alive0 = _alive_keys(ids, ["k0"], ND_BAND_CAP).withColumn("_a0", F.lit(True))
+    marked = ids.join(F.broadcast(alive0), "k0", "left").select(
+        "vec_id", "k1", F.when(F.col("_a0"), F.col("k0")).alias("k0v")
     )
+    # band 1 counts over ``marked``: its left join keeps one row per id and
+    # Catalyst drops it from the count, which reads ``ids`` directly
+    g1 = _capped_key_groups(
+        marked, ["k1"], F.collect_set(F.struct("vec_id", "k0v")), ND_BAND_CAP
+    ).repartition(par)
     # keep a band-1 pair unless BOTH ends sit in the same alive band-0
     # group (then band 0 already emitted it); NULL k0v (dead band-0 group)
     # never suppresses — coalesce turns the NULL comparison into "keep".
@@ -435,7 +418,8 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id), argmax assignment and probe selection are deterministic SQL
     with order-identical dot folds on both engines."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = _centroids(emb).cache()
+    # no pin: the second broadcast of the centroid block is a ReusedExchange
+    cents = _centroids(emb)
     assigned = ivf_assign(emb, cents)
 
     query = emb.filter(F.col("vec_id") == 0).select(
@@ -1144,7 +1128,9 @@ def ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % IVF_BATCH_MOD != IVF_BATCH_MOD - 1)
     batch = emb.filter(F.col("vec_id") % IVF_BATCH_MOD == IVF_BATCH_MOD - 1)
-    cents = _centroids(base).cache()
+    # no pin: the batch assignment's centroid broadcast is a ReusedExchange,
+    # and the list spine re-reads only the vec_id column
+    cents = _centroids(base)
     base_counts = (
         ivf_assign(base, cents).groupBy("list_id").agg(F.count(F.lit(1)).alias("base_size"))
     )
@@ -2204,6 +2190,10 @@ from fpl_data_pipeline_spark.operators.dedup import (  # noqa: E402
     WINNOW_W,
     _NORM_SQL,
     _TRIGRAM_SQL,
+    _alive_keys,
+    _capped_key_groups,
+    _expand_member_pairs_streaming,
+    _key_group_sizes,
     _pmh_perm_sql,
     doc_words,
     minhash_band_keys,
@@ -2258,16 +2248,16 @@ _AUDIT_WORDS_SQL = f"""
 
 def _cap_family_row(sizes: DataFrame, family: str, cap: int) -> DataFrame:
     """One summary row for a cap family from its group-size relation
-    (single column ``gs`` = membership of each group with >= 2 members).
+    (single column ``n`` = membership of each group with >= 2 members).
     Global aggregation, so the row exists even when no groups do."""
     agg = sizes.agg(
         F.count(F.lit(1)).alias("n_groups"),
         F.coalesce(
-            F.sum((F.col("gs") > cap).cast("long")), F.lit(0).cast("long")
+            F.sum((F.col("n") > cap).cast("long")), F.lit(0).cast("long")
         ).alias("n_dropped"),
-        F.coalesce(F.sum("gs"), F.lit(0).cast("long")).alias("members_total"),
+        F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias("members_total"),
         F.coalesce(
-            F.sum(F.when(F.col("gs") > cap, F.col("gs")).otherwise(F.lit(0))),
+            F.sum(F.when(F.col("n") > cap, F.col("n")).otherwise(F.lit(0))),
             F.lit(0).cast("long"),
         ).alias("members_dropped"),
     )
@@ -2498,13 +2488,8 @@ def candidate_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    def sizes(keyed: DataFrame, *keys: str) -> DataFrame:
-        return (
-            keyed.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("gs"))
-            .filter(F.col("gs") >= 2)
-            .select("gs")
-        )
+    def sizes(keyed: DataFrame, *keys: str, size: Column | None = None) -> DataFrame:
+        return _key_group_sizes(keyed, list(keys), size).filter(F.col("n") >= 2).select("n")
 
     ids = lsh_doc_band_keys(emb)
     # Round-12 (guide §2.4): the six document-keyed families each ran their
@@ -2515,12 +2500,8 @@ def candidate_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # monitored query uses, so the audit's code-sharing contract holds.
     # (The oracle already shares its audit_words CTE the same way.)
     words = doc_words(docs).localCheckpoint(eager=False)
-    gspan = (
-        span_positional_hashes(docs, words=words)
-        .groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("gs"))
-        .filter(F.col("gs") >= 2)
-        .select("gs")
+    gspan = sizes(
+        span_positional_hashes(docs, words=words), "h", size=F.countDistinct("doc_id")
     )
     geo_cells = customer_points(cust).select(
         F.floor(F.col("lon") / GEO_CELL_DEG).cast("long").alias("jx"),
@@ -2888,18 +2869,15 @@ def _sem_k_sql() -> str:
 def _sem_capped_groups(
     assigned: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(sizes, okm, groups): per-cluster member counts, the cap-filtered
-    assignment, and its sorted member arrays — the count-agg pre-pass
-    subtree shared by semdedup_prune, tools/scale_probe.py and the
-    plan-shape cap-guard test, so the cap rule cannot drift between
-    them."""
-    sizes = assigned.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_members"))
-    ok_ids = sizes.filter(F.col("n_members") <= SEM_CLUSTER_CAP).select("c_id")
-    okm = assigned.join(F.broadcast(ok_ids), "c_id")  # <= k rows broadcast
-    groups = okm.groupBy("c_id").agg(
-        F.array_sort(F.collect_list("vec_id")).alias("members")
-    )
-    return sizes, okm, groups
+    """(sizes, okm, groups): per-cluster member counts ``n``, the
+    cap-filtered assignment, and its sorted member arrays — the count-agg
+    pre-pass subtree shared by semdedup_prune, tools/scale_probe.py and
+    the plan-shape cap-guard test, so the cap rule cannot drift between
+    them. Singleton clusters stay (lo=1): they report their size."""
+    keys, cap = ["c_id"], SEM_CLUSTER_CAP
+    okm = assigned.join(_alive_keys(assigned, keys, cap, lo=1), "c_id")
+    groups = _capped_key_groups(assigned, keys, F.collect_list("vec_id"), cap, lo=1)
+    return _key_group_sizes(assigned, keys), okm, groups
 
 
 def _sem_oracle() -> str:
@@ -2960,10 +2938,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subquery), so uniform corpus growth adds clusters rather than
     cluster population — the cap now fires only on genuine skew, never
     on scale."""
-    from fpl_data_pipeline_spark.operators.dedup import (
-        _expand_member_pairs_streaming,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
     assigned = lloyd_assign(emb, LLOYD_EXACT6, target_pop=SEM_TARGET_POP)
     sizes, okm, groups = _sem_capped_groups(assigned)
@@ -2978,7 +2952,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = okm.select("c_id", "vec_id", "v6", n2.alias("n2")).filter(
         F.col("n2") > 0
     )
-    pairs = _expand_member_pairs_streaming(groups, "members")
+    pairs = _expand_member_pairs_streaming(groups)
     dot = F.aggregate(
         F.zip_with("x", "y", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -3015,15 +2989,12 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes.join(hits, "c_id", "left")
         .select(
             F.col("c_id").cast("long").alias("cluster_id"),
-            "n_members",
-            F.when(F.col("n_members") > SEM_CLUSTER_CAP, 1)
-            .otherwise(0)
-            .alias("capped"),
+            F.col("n").alias("n_members"),
+            F.when(F.col("n") > SEM_CLUSTER_CAP, 1).otherwise(0).alias("capped"),
             F.coalesce(F.col("n_dup_pairs"), F.lit(0)).alias("n_dup_pairs"),
             F.coalesce(F.col("n_pruned"), F.lit(0)).alias("n_pruned"),
             F.round(
-                F.coalesce(F.col("n_pruned"), F.lit(0)).cast("double")
-                / F.col("n_members"),
+                F.coalesce(F.col("n_pruned"), F.lit(0)).cast("double") / F.col("n"),
                 6,
             ).alias("prune_rate"),
         )

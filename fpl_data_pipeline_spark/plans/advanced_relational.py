@@ -16,6 +16,13 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from fpl_data_pipeline_spark.operators.dedup import (
+    PACKED_PAIR_KEY,
+    _capped_key_groups,
+    _expand_member_pairs_streaming,
+    _pair_pack_ok,
+    unpack_pair_key,
+)
 from fpl_data_pipeline_spark.registry import register
 from fpl_data_pipeline_spark.tables import table, views
 
@@ -741,7 +748,7 @@ CF_BASKET_CAP = 10_000
 
 
 def _cf_capped_baskets(li: DataFrame, o: DataFrame) -> DataFrame:
-    """(cust, items): sorted distinct-item basket arrays for customers
+    """(cust, members): sorted distinct-item basket arrays for customers
     within CF_BASKET_CAP — split out of cf_item_similarity so the cap-guard
     plan-shape test sees the pre-localCheckpoint tree (the
     _capped_key_groups precedent). collect_list suffices: the input is
@@ -766,17 +773,8 @@ def _cf_capped_baskets(li: DataFrame, o: DataFrame) -> DataFrame:
         # rows — the cheapest point in this pipeline to materialize.
         .localCheckpoint(eager=False)
     )
-    ok_cust = (
-        inter.groupBy("cust")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter(F.col("bs") <= CF_BASKET_CAP)
-        .drop("bs")
-    )
-    return (
-        inter.join(ok_cust, "cust")
-        .groupBy("cust")
-        .agg(F.array_sort(F.collect_list("item")).alias("items"))
-    )
+    # lo=1: single-item baskets still count towards item popularity
+    return _capped_key_groups(inter, ["cust"], F.collect_list("item"), CF_BASKET_CAP, lo=1)
 
 
 @register(
@@ -837,7 +835,7 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     pop = (
-        baskets_arr.select(F.explode("items").alias("item"))
+        baskets_arr.select(F.explode("members").alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("n_users"))
         # round-11 pin: pop feeds BOTH popularity join sides (pa on item_a,
@@ -852,13 +850,7 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one row; the chained posexplode+slice streams pairs at O(s) per-row
     # memory for identical output (equality pinned by the expansion
     # property test).
-    from fpl_data_pipeline_spark.operators.dedup import (
-        PACKED_PAIR_KEY,
-        _expand_member_pairs_streaming,
-        _pair_pack_ok,
-    )
-
-    pairs = _expand_member_pairs_streaming(baskets_arr, "items")
+    pairs = _expand_member_pairs_streaming(baskets_arr)
     # Round-12 (guide §2.3, the dedup pair engine's packed-key fast path):
     # when every item id provably fits 31 bits (one pruned-single-column
     # min/max over the item FK column itself — no reliance on a catalog
@@ -872,11 +864,7 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("ab")
             .agg(F.count(F.lit(1)).alias("n_common"))
             .filter(F.col("n_common") >= 3)
-            .select(
-                F.shiftright("ab", 31).alias("item_a"),
-                F.col("ab").bitwiseAND(F.lit((1 << 31) - 1)).alias("item_b"),
-                "n_common",
-            )
+            .select(*unpack_pair_key("ab", "item_a", "item_b"), "n_common")
         )
     else:
         co = (
@@ -1332,12 +1320,6 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregated counts: half the generated rows and half the
     # pre-aggregation hash work; the union doubles only the already-tiny
     # (ia, ib, s) relation.
-    from fpl_data_pipeline_spark.operators.dedup import (
-        PACKED_PAIR_KEY,
-        _expand_member_pairs_streaming,
-        _pair_pack_ok,
-    )
-
     half_pairs = _expand_member_pairs_streaming(
         train_arr.select(F.col("items").alias("members"))
     )
@@ -1348,11 +1330,7 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
             half_pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
             .groupBy("ab")
             .agg(F.count(F.lit(1)).alias("s"))
-            .select(
-                F.shiftright("ab", 31).alias("ia"),
-                F.col("ab").bitwiseAND(F.lit((1 << 31) - 1)).alias("ib"),
-                "s",
-            )
+            .select(*unpack_pair_key("ab", "ia", "ib"), "s")
         )
     else:
         co_half = (

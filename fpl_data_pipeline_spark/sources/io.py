@@ -86,15 +86,3 @@ def compact(
     n_files = max(1, math.ceil(total / target_bytes_per_file))
     _publish(spark.read.parquet(path).repartition(n_files), path)
     return n_files
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — the columnar alternative where the surrounding stack is
-    Hive/ORC-native. Same pushdown/pruning contract as parquet: ORC scans
-    support predicate pushdown and column pruning in Spark, so layout
-    guidance (128 MB files, partition columns) carries over unchanged."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)

@@ -496,9 +496,14 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per day. At 100 TB the (day, user) table is the thing you
     materialize; everything after is spine-scale."""
     e = table(spark, sf_dir, "events")
-    day_users = e.select(
-        F.to_date("ts").alias("d"), "user_id"
-    ).distinct().cache()
+    # pinned (not cached): the trailing-week join would reuse the distinct's
+    # shuffle, but Catalyst rebuilds the day spine from a second scan of
+    # the fact; the pin keeps it at one scan
+    day_users = (
+        e.select(F.to_date("ts").alias("d"), "user_id")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
     days = day_users.select("d").distinct()
     dau = day_users.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
     # trailing-week membership as an EQUI-join: explode each spine day into

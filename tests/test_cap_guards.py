@@ -113,7 +113,37 @@ def test_set_overlap_df_cap_is_count_prepass(spark):
         [(i, f"alpha beta gamma delta doc{i} tail words here") for i in range(6)],
         "doc_id long, text string",
     )
-    _assert_count_prepass(_optimized_plan(_capped_key_groups(shingles(d), "shingle", 5)))
+    groups = _capped_key_groups(shingles(d), ["shingle"], F.collect_list("doc_id"), 5, lo=1)
+    _assert_count_prepass(_optimized_plan(groups))
+
+
+def test_capped_key_groups_bounds(spark):
+    """The one capped key-group builder over a hand-built keyed relation:
+    group sizes in [lo, cap] survive with sorted members, an over-cap group
+    and (at lo=2) a singleton are dropped, an empty relation yields
+    nothing, and a countDistinct size counts a key repeated within one doc
+    once."""
+    from fpl_data_pipeline_spark.operators.dedup import _capped_key_groups
+
+    def groups(rows, cap, lo=2, size=None):
+        keyed = spark.createDataFrame(rows, "doc_id long, key string, pos int")
+        out = _capped_key_groups(keyed, ["key"], F.collect_list("doc_id"), cap, lo, size)
+        return {r["key"]: list(r["members"]) for r in out.collect()}
+
+    assert groups([], cap=3) == {}
+    rows = (
+        [(1, "single", 0)]
+        + [(d, "at_cap", 0) for d in (3, 1, 2)]
+        + [(d, "over_cap", 0) for d in (4, 3, 2, 1)]
+    )
+    assert groups(rows, cap=3) == {"at_cap": [1, 2, 3]}
+    assert groups(rows, cap=3, lo=1) == {"single": [1], "at_cap": [1, 2, 3]}
+    assert groups(rows, cap=4) == {"at_cap": [1, 2, 3], "over_cap": [1, 2, 3, 4]}
+    # key "rep" occurs 3x in doc 1 and once in doc 2: 4 rows, 2 distinct docs
+    rep = [(1, "rep", p) for p in range(3)] + [(2, "rep", 0)]
+    assert groups(rep, cap=3) == {}
+    assert groups(rep, cap=3, size=F.countDistinct("doc_id")) == {"rep": [1, 1, 1, 2]}
+    assert groups(rep, cap=1, size=F.countDistinct("doc_id")) == {}
 
 
 def test_span_df_cap_is_count_prepass(spark):
@@ -316,6 +346,7 @@ def test_lsh_pair_set_matches_reference_semantics(spark):
     candidate set."""
     import itertools
     import random
+    from collections import Counter
 
     from fpl_data_pipeline_spark.operators import similarity as S
 
@@ -323,31 +354,33 @@ def test_lsh_pair_set_matches_reference_semantics(spark):
     vecs = [
         (i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(120)
     ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    keys = {
-        r["vec_id"]: (r["k0"], r["k1"])
-        for r in S.lsh_doc_band_keys(emb).collect()
-    }
-    orig = S.ND_BAND_CAP
-    S.ND_BAND_CAP = 8
-    try:
-        rows = S._lsh_candidate_pairs(emb).collect()
-    finally:
-        S.ND_BAND_CAP = orig
     cap = 8
-    from collections import Counter
-
-    c0 = Counter(k0 for k0, _ in keys.values())
-    c1 = Counter(k1 for _, k1 in keys.values())
-    expected = set()
-    for a, b in itertools.combinations(sorted(keys), 2):
-        share0 = keys[a][0] == keys[b][0] and 2 <= c0[keys[a][0]] <= cap
-        share1 = keys[a][1] == keys[b][1] and 2 <= c1[keys[a][1]] <= cap
-        if share0 or share1:
-            expected.add((a, b))
-    got = [(r["vec_id_a"], r["vec_id_b"]) for r in rows]
-    assert len(got) == len(set(got)), "duplicate pair emitted"
-    assert set(got) == expected
+    # the second input replays three rows (an ingestion replay): group
+    # sizes count every row, but no (x, x) self-pair may come out
+    for rows_in in (vecs, vecs + vecs[:3]):
+        emb = spark.createDataFrame(rows_in, "vec_id long, embedding array<double>")
+        band_rows = [
+            (r["vec_id"], r["k0"], r["k1"]) for r in S.lsh_doc_band_keys(emb).collect()
+        ]
+        keys = {v: (k0, k1) for v, k0, k1 in band_rows}
+        orig = S.ND_BAND_CAP
+        S.ND_BAND_CAP = cap
+        try:
+            rows = S._lsh_candidate_pairs(emb).collect()
+        finally:
+            S.ND_BAND_CAP = orig
+        c0 = Counter(k0 for _, k0, _ in band_rows)
+        c1 = Counter(k1 for _, _, k1 in band_rows)
+        expected = set()
+        for a, b in itertools.combinations(sorted(keys), 2):
+            share0 = keys[a][0] == keys[b][0] and 2 <= c0[keys[a][0]] <= cap
+            share1 = keys[a][1] == keys[b][1] and 2 <= c1[keys[a][1]] <= cap
+            if share0 or share1:
+                expected.add((a, b))
+        got = [(r["vec_id_a"], r["vec_id_b"]) for r in rows]
+        assert not [p for p in got if p[0] == p[1]], "self-pair emitted"
+        assert len(got) == len(set(got)), "duplicate pair emitted"
+        assert set(got) == expected
 
 
 def test_hv_block_cap_silences_mega_block(spark, tmp_path):

@@ -62,7 +62,7 @@ def test_dedup_operators_on_degenerate_corpora(spark):
         MD5_SIMHASH,
         XX_MINHASH,
         XX_SIMHASH,
-        capped_shingles,
+        _capped_key_groups,
         minhash_pairs,
         minhash_signatures,
         ordered_shingles,
@@ -73,7 +73,8 @@ def test_dedup_operators_on_degenerate_corpora(spark):
 
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert shingles(empty).count() == 0
-    assert capped_shingles(empty).count() == 0
+    capped = _capped_key_groups(shingles(empty), ["shingle"], F.collect_list("doc_id"), 5)
+    assert capped.count() == 0
     assert ordered_shingles(empty).count() == 0
     assert minhash_signatures(empty).count() == 0
     assert simhash(empty).count() == 0

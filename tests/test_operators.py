@@ -205,23 +205,6 @@ def test_shingles_and_bigrams_short_docs(spark):
     assert {r["doc_id"] for r in sigs} == {4, 5}
 
 
-def test_capped_shingles_drops_hot_shingle(spark):
-    """A shingle planted across many docs is excluded by the document-
-    frequency cap, bounding the candidate join (operators/dedup.py::
-    capped_shingles anti-skew guard)."""
-    from fpl_data_pipeline_spark.operators.dedup import capped_shingles
-
-    hot = "common boiler plate"
-    rows = [(i, f"{hot} unique{i} tail{i} words{i}") for i in range(10)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = capped_shingles(docs, df_cap=5).collect()
-    grams = {r["shingle"] for r in capped}
-    assert hot not in grams  # df=10 > cap=5: dropped
-    assert any("unique3" in g for g in grams)  # rare shingles survive
-    # uncapped keeps it
-    assert hot in {r["shingle"] for r in shingles(docs).collect()}
-
-
 def test_dedup_last_wins_partition_independent(spark):
     """With order_by=None the survivor must not depend on physical layout
     (operators/upsert.py regression: monotonically_increasing_id was
@@ -257,9 +240,10 @@ def test_connected_components_raises_on_nonconvergence(spark):
 
 def test_cluster_and_kmeans_queries_release_their_caches(spark):
     """connected_components and the Lloyd loop cache their inputs while
-    they iterate and release them before returning, so a query leaves the
-    session's CacheManager as it found it (a leaked cache serves later
-    calls over the same plan and skews every timing after the first)."""
+    they iterate and release them before returning, and the IVF and
+    DAU/WAU queries cache nothing, so a query leaves the session's
+    CacheManager as it found it (a leaked cache serves later calls over
+    the same plan and skews every timing after the first)."""
     from fpl_data_pipeline_spark.operators.dedup import connected_components
     from fpl_data_pipeline_spark.registry import QUERIES, load_all
 
@@ -272,8 +256,9 @@ def test_cluster_and_kmeans_queries_release_their_caches(spark):
     got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
     assert cache.isEmpty()
-    QUERIES["kmeans_embeddings"](spark, "/root/testdata/sf0.001")
-    assert cache.isEmpty()
+    for name in ("kmeans_embeddings", "ann_ivf_probe", "ann_ivf_rebalance", "events_dau_wau"):
+        QUERIES[name](spark, "/root/testdata/sf0.001").collect()
+        assert cache.isEmpty(), name
 
 
 def test_banded_lsh_16_planes_finds_planted_neighbor(spark):
@@ -429,46 +414,3 @@ def test_arrow_digest_matches_pandas_path(spark):
     a = sorted(map(tuple, digest_binary_files_arrow(files).collect()))
     p = sorted(map(tuple, digest_binary_files(files).collect()))
     assert a == p and len(a) > 0
-
-
-def test_crypto_shred_laws(spark):
-    """decrypt(encrypt(x)) == x; shredding one subject NULLs exactly that
-    subject's values without touching the fact files; ciphertext differs
-    from plaintext."""
-    from fpl_data_pipeline_spark.operators.crypto_shred import (
-        decrypt_subject_column,
-        derive_keystore,
-        encrypt_subject_column,
-        shred_subjects,
-    )
-
-    facts = spark.createDataFrame(
-        [(u, i, f"email-{u}@example.com") for u in (1, 2, 3) for i in range(4)],
-        "user_id long, row_id long, email string",
-    )
-    ks = derive_keystore(facts, "user_id", "master-secret")
-    enc = encrypt_subject_column(facts, "user_id", "email", ks)
-    enc.cache().count()  # pin ciphertext: GCM nonces differ per evaluation
-
-    # ciphertext is not the plaintext
-    assert all(
-        bytes(r["email"]) != f"email-{r['user_id']}@example.com".encode()
-        for r in enc.collect()
-    )
-    # roundtrip identity with the full keystore
-    dec = {
-        (r["user_id"], r["row_id"]): r["email"]
-        for r in decrypt_subject_column(enc, "user_id", "email", ks).collect()
-    }
-    assert all(
-        dec[(u, i)] == f"email-{u}@example.com" for u in (1, 2, 3) for i in range(4)
-    )
-    # shred subject 2: only their values become NULL
-    ks2 = shred_subjects(ks, "user_id", [2])
-    dec2 = {
-        (r["user_id"], r["row_id"]): r["email"]
-        for r in decrypt_subject_column(enc, "user_id", "email", ks2).collect()
-    }
-    assert all(dec2[(2, i)] is None for i in range(4))
-    assert all(dec2[(u, i)] == f"email-{u}@example.com" for u in (1, 3) for i in range(4))
-    enc.unpersist()

@@ -292,30 +292,3 @@ def test_file_provenance_metadata_column(spark, tmp_path):
     bad = max(per_file, key=per_file.get)
     kept = df.filter(F.col("src_file") != bad)
     assert kept.count() == min(per_file.values())
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC sink/scan round-trip preserves schema and values, and an
-    equality filter reaches the ORC scan as a pushed predicate (the same
-    pruning contract the parquet path relies on)."""
-    from fpl_data_pipeline_spark.sources.io import read_orc, write_orc
-    from fpl_data_pipeline_spark.tables import table
-
-    src = table(spark, "/root/testdata/sf0.001", "orders")
-    p = str(tmp_path / "orders_orc")
-    write_orc(src, p)
-    back = read_orc(spark, p)
-    assert back.schema == src.schema
-    assert back.count() == src.count()
-    import pyspark.sql.functions as F
-
-    a = src.agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s")).first()
-    b = back.agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s")).first()
-    assert a.s == b.s
-    plan = (
-        back.filter(F.col("o_orderstatus") == "F")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "o_orderstatus" in plan

@@ -51,7 +51,7 @@ def cf_candidate_pairs(spark, sf_dir):
     baskets = _cf_capped_baskets(li, o).repartition(
         spark.sparkContext.defaultParallelism
     )
-    return _expand_member_pairs_streaming(baskets, "items")
+    return _expand_member_pairs_streaming(baskets)
 
 
 _ASSIGN_MEMO: dict = {}
