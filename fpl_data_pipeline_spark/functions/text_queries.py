@@ -507,7 +507,7 @@ def text_hash_vector_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["k1", "k2"],
         F.collect_set("doc_id"),
         HV_BLOCK_CAP,
-    ).repartition(spark.sparkContext.defaultParallelism)
+    )
     pairs = _expand_member_pairs_streaming(groups).select(
         F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
     )

@@ -141,10 +141,7 @@ def _expand_member_pairs(groups: DataFrame, members_col: str = "members") -> Dat
     ``members`` is an ``array<struct<...>>`` sorted ascending (struct order
     = first-field order, so sort the identity field first); the result is
     one row per unordered pair, columns ``a`` / ``b`` of the member struct
-    type with ``a < b`` in array order. The explode multiplies each group
-    row by s(s-1)/2 — callers should ``repartition`` the (small) group
-    relation to session parallelism first so the fan-out runs on all cores
-    rather than the 1-2 partitions AQE coalesces it to."""
+    type with ``a < b`` in array order."""
     pair_gen = F.explode(
         F.expr(
             f"flatten(transform({members_col}, (x, i) -> "
@@ -179,12 +176,19 @@ def _expand_member_pairs_streaming(
     streaming shape won the charngram A/B outright (12.2 s flat vs
     17.7-31 s GC-noisy). ``carry`` columns ride through unchanged onto
     every emitted pair row (the weighted-docset expansion's multiplicity
-    column)."""
+    column).
+
+    The fan-out rule lives here (ARCHITECTURE.md §7): the group relation
+    is small, so AQE coalesces it to 1-2 partitions, but the explode
+    multiplies each row by s(s-1)/2 — a round-robin repartition to
+    session parallelism comes first, so the expensive stage runs on every
+    core."""
     reserved = {"a", "b", "_ms", "_i"} & set(carry)
     if reserved:
         # a carried column named like an internal alias would silently
         # shadow/duplicate in the selects below (round-11 ADVICE)
         raise ValueError(f"carry columns collide with internal aliases: {reserved}")
+    groups = groups.repartition(groups.sparkSession.sparkContext.defaultParallelism)
     anchored = groups.select(
         *carry,
         F.col(members_col).alias("_ms"),
@@ -479,9 +483,7 @@ def _set_overlap_stats(
         .groupBy("doc_id")
         .agg(F.sum("w").alias("n_keys"))
     )
-    pair_groups = wgroups.filter(F.size("members") >= 2).repartition(
-        sh.sparkSession.sparkContext.defaultParallelism
-    )
+    pair_groups = wgroups.filter(F.size("members") >= 2)
     # streaming two-Generate expansion (round 7): a df_cap-sized group under
     # the one-Generate shape materializes C(1000, 2) = 500k pair structs in
     # one row — char-8-gram corpora hit near-cap groups routinely, and the
@@ -771,7 +773,7 @@ def _banded_pairs(
     keyed = per_doc.select("doc_id", payload, keys)
     groups = _capped_key_groups(
         keyed, ["band", "key"], F.collect_list(F.struct("doc_id", payload)), cap
-    ).repartition(per_doc.sparkSession.sparkContext.defaultParallelism)
+    )
     scored = _expand_member_pairs_streaming(groups).select(
         F.col("a.doc_id").alias("doc_id_a"),
         F.col("b.doc_id").alias("doc_id_b"),
@@ -1182,12 +1184,7 @@ def winnowing_candidate_pairs(d: DataFrame, fp_cap: int = WINNOW_FP_CAP) -> Data
     # post-collect shape is the join-back exchange — the documented price
     # of a bounded aggregation buffer at 100 TB, re-measured and kept.
     fps = winnow_doc_fingerprints(d).localCheckpoint(eager=False)
-    # the array relation is small (AQE coalesces it) but the explode below
-    # multiplies each row by df(df-1)/2 — spread it back across the
-    # executors before the fan-out (ARCHITECTURE.md §7 subtlety)
-    groups = _capped_key_groups(
-        fps, ["fp"], F.collect_list("doc_id"), fp_cap
-    ).repartition(d.sparkSession.sparkContext.defaultParallelism)
+    groups = _capped_key_groups(fps, ["fp"], F.collect_list("doc_id"), fp_cap)
     return (
         _expand_member_pairs_streaming(groups)
         .select(F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b"))
@@ -2184,7 +2181,7 @@ def span_pair_spans(d: DataFrame, df_cap: int = SPAN_DF_CAP) -> DataFrame:
         F.collect_list(F.struct("doc_id", "pos")),
         df_cap,
         size=F.countDistinct("doc_id"),
-    ).repartition(d.sparkSession.sparkContext.defaultParallelism)
+    )
     matched = _expand_member_pairs_streaming(groups).select(
         F.col("a.doc_id").alias("da"),
         F.col("b.doc_id").alias("db"),

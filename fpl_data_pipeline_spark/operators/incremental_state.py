@@ -31,12 +31,23 @@ from the catalog, and the probe view unions deltas by the base table's
 column names. The text fingerprint state (a 1-column distinct ``fp``
 relation bucketed on fp) runs the SAME functions — publish_band_delta,
 read_band_state, fold_band_deltas over 1-column ``fp`` frames — so a
-streaming text-dedup deployment gets the identical exactly-once delta
-publish, manifest fold, and generation gc the vector family got in round
-10. Publish a batch's NEW fingerprints only (the ones that probed 'new'
+text-dedup deployment gets the identical exactly-once delta publish,
+manifest fold, and generation gc the vector family got in round 10.
+Publish a batch's NEW fingerprints only (the ones that probed 'new'
 against the corpus view excluding the batch's own delta): replays
 recompute the identical 'new' set, and the state never accumulates
 duplicate fp rows.
+
+Who runs it: the registered queries use only the probes. The store's
+publish/read/fold/gc loop has no caller in the engine (the Structured
+Streaming ingest loops that ran it were removed, last at a93dd21);
+tools/fold_scale_probe.py and the tests run it batch by batch — probe
+the state view that excludes the batch's own delta, land the batch's
+output, publish its delta, and fold on a cadence. Batch ids key the
+durable applied-set, so they must never be reused for new data: after
+losing the record of which ids were used, replay to convergence, fold,
+and rebuild the state under a fresh delta root before admitting new
+batches.
 
 Scale shape: state grows O(corpus) rows (x2 bands for vectors) and is
 probed in O(batch x bucket-membership); the over-cap band drop (the
@@ -177,7 +188,7 @@ def compact_band_state(spark: SparkSession, table_name: str,
     transaction log; plain parquet + catalog cannot.)
 
     One maintenance style per table: compact is the OFFLINE loop's
-    optimizer; a table maintained by the streaming publish/fold loop is
+    optimizer; a table maintained by the publish/fold loop is
     compacted by the fold itself. The two crash protocols do not compose
     — recovering a missing table from the wrong tmp copy can resurrect a
     state whose deltas then refold as duplicates — so this refuses to
@@ -283,19 +294,19 @@ class _forced_bucketed_scan:
         return False
 
 
-# --- exactly-once delta publish for the streaming loop (round 10) -----------
+# --- exactly-once delta publish for the ingest loop (round 10) --------------
 # append_band_state above is the OFFLINE loop's fold: a plain table append,
-# simple but NOT idempotent — the round-9 streaming loop that called it from
-# foreachBatch documented an at-least-once state degradation on micro-batch
-# replay. The streaming loop now publishes each micro-batch's keys as a
-# batch_id-versioned DELTA instead:
+# simple but NOT idempotent — the round-9 ingest loop that called it
+# documented an at-least-once state degradation on micro-batch replay. The
+# ingest loop now publishes each micro-batch's keys as a batch_id-versioned
+# DELTA instead:
 #
 #   staging write (mode overwrite -> replay-idempotent)
 #     -> os.rename into published/batch={id}   (atomic; THE commit point)
 #
 # plus a durable applied-set (_applied.json, rewritten whole via tmp+rename)
 # so a batch whose delta was already folded into the base table can never
-# re-publish even when the stream checkpoint itself is lost. Probes read
+# re-publish even when the loop's own commit record is lost. Probes read
 # base table UNION unfolded deltas (the union forfeits the bucketed
 # co-location until the next fold — the reason folds run on a cadence, not
 # never); fold_band_deltas rewrites base+deltas as the new base (one file
@@ -373,9 +384,9 @@ def publish_band_delta(keys: DataFrame, delta_root: str, batch_id: int,
     state relation's columns, e.g. (vec_id, band, k) for the vector family
     or (fp) for the fingerprint family). Returns False (no-op) when the
     batch is already published OR already folded into the base table — the
-    two replay shapes: a crash that lost the stream checkpoint commit but
-    not the publish rename, and a checkpoint lost after a fold cleaned the
-    delta away. The staging write is mode=overwrite (a replayed crash-torn
+    two replay shapes: a crash that lost the loop's commit record but not
+    the publish rename, and a record lost after a fold cleaned the delta
+    away. The staging write is mode=overwrite (a replayed crash-torn
     staging dir is simply rewritten); the publish is one same-filesystem
     directory rename."""
     published = os.path.join(delta_root, f"{_DELTA_PREFIX}{batch_id}")

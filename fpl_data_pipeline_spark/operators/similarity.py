@@ -226,7 +226,6 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
             f"emission; N_ND_BANDS={N_ND_BANDS} requires extending the "
             "suppression chain"
         )
-    par = emb.sparkSession.sparkContext.defaultParallelism
     # localCheckpoint: `ids` feeds FOUR subtrees (alive0, alive1, g0,
     # marked) and has no exchange below it, so without pinning Catalyst
     # compiles the corpus scan + 16 hyperplane dot products (64 dims each)
@@ -238,9 +237,7 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     # collect_set, not collect_list: a duplicated vec_id upstream
     # (ingestion replay) would otherwise yield [x, x] members and the
     # positional expansion would emit an (x, x) self-pair at cosine 1.0
-    g0 = _capped_key_groups(
-        ids, ["k0"], F.collect_set("vec_id"), ND_BAND_CAP
-    ).repartition(par)
+    g0 = _capped_key_groups(ids, ["k0"], F.collect_set("vec_id"), ND_BAND_CAP)
     p0 = _expand_member_pairs_streaming(g0).select(
         F.col("a").alias("vec_id_a"), F.col("b").alias("vec_id_b")
     )
@@ -252,7 +249,7 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     # Catalyst drops it from the count, which reads ``ids`` directly
     g1 = _capped_key_groups(
         marked, ["k1"], F.collect_set(F.struct("vec_id", "k0v")), ND_BAND_CAP
-    ).repartition(par)
+    )
     # keep a band-1 pair unless BOTH ends sit in the same alive band-0
     # group (then band 0 already emitted it); NULL k0v (dead band-0 group)
     # never suppresses — coalesce turns the NULL comparison into "keep".
@@ -1129,7 +1126,7 @@ def ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % IVF_BATCH_MOD != IVF_BATCH_MOD - 1)
     batch = emb.filter(F.col("vec_id") % IVF_BATCH_MOD == IVF_BATCH_MOD - 1)
     # no pin: the batch assignment's centroid broadcast is a ReusedExchange,
-    # and the list spine re-reads only the vec_id column
+    # and the list spine reads only the vec_id column
     cents = _centroids(base)
     base_counts = (
         ivf_assign(base, cents).groupBy("list_id").agg(F.count(F.lit(1)).alias("base_size"))
@@ -1150,7 +1147,13 @@ def ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    tot = per_list.agg(F.sum("new_size").alias("n_total"))
+    # every assigned vector lands on exactly one centroid, so the total is
+    # the two count sums — no second pass over the list spine
+    tot = base_counts.agg(F.sum("base_size").alias("nb")).crossJoin(
+        add_counts.agg(F.sum("added").alias("na"))
+    ).select(
+        (F.coalesce("nb", F.lit(0)) + F.coalesce("na", F.lit(0))).alias("n_total")
+    )
     return per_list.crossJoin(F.broadcast(tot)).select(
         "list_id",
         "base_size",

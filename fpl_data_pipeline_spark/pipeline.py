@@ -82,8 +82,8 @@ def _promote(path: str) -> None:
 
 
 def _publish(df: DataFrame, path: str) -> None:
-    """Materialize fully into a staging dir, publish by atomic rename
-    (the streaming merge's crash-recovery contract, reused batch-side)."""
+    """Materialize fully into a staging dir, publish by atomic rename;
+    ``recover`` restores a crash between the two renames."""
     _write_stage(df, path)
     _promote(path)
 

@@ -777,6 +777,32 @@ def _cf_capped_baskets(li: DataFrame, o: DataFrame) -> DataFrame:
     return _capped_key_groups(inter, ["cust"], F.collect_list("item"), CF_BASKET_CAP, lo=1)
 
 
+def _cf_pair_counts(pairs: DataFrame, li: DataFrame, a: str, b: str,
+                    n: str) -> DataFrame:
+    """(a, b, n): co-occurrence count per unordered item pair of the
+    expanded baskets, shared by both CF queries.
+
+    Round-12 (guide §2.3, the dedup pair engine's packed-key fast path):
+    when every item id provably fits 31 bits (one pruned-single-column
+    min/max over the item FK column itself — no reliance on a catalog
+    table being present), the count groups on ONE packed long instead of
+    two — narrower shuffle rows and a single-word hash key for the
+    C(basket, 2) pair stream, the queries' dominant stage. Out-of-range
+    catalogs fall back to the exact two-column aggregation. Unlike
+    _set_overlap_stats' raw-shuffle sum, this keeps the map-side partial
+    count: OPTIMIZATION_r12 measured that it pays off for CF."""
+    if _pair_pack_ok(li, "l_partkey"):
+        return (
+            pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
+            .groupBy("ab")
+            .agg(F.count(F.lit(1)).alias(n))
+            .select(*unpack_pair_key("ab", a, b), n)
+        )
+    return pairs.groupBy(F.col("a").alias(a), F.col("b").alias(b)).agg(
+        F.count(F.lit(1)).alias(n)
+    )
+
+
 @register(
     "cf_item_similarity",
     f"""
@@ -822,18 +848,9 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accounts BEFORE the collect, bounding both the aggregation buffer and
     # the C(s, 2) fan-out; the distinct (cust, item) relation it needs also
     # replaces collect_set with the cheaper collect_list.
-    baskets_arr = (
-        _cf_capped_baskets(li, o)
-        # the array relation is tiny (AQE coalesces it to ~2 partitions)
-        # but the downstream explode multiplies each row by s(s-1)/2 —
-        # spread the rows back across the executors BEFORE the fan-out so
-        # the expensive stage keeps full parallelism (same rationale as
-        # dedup's _ensure_parallel)
-        .repartition(spark.sparkContext.defaultParallelism)
-        # feeds both the pair explode and the popularity counts; Catalyst
-        # does not reuse the scan+join+agg subtree across the two consumers
-        .localCheckpoint()
-    )
+    # feeds both the pair explode and the popularity counts; Catalyst
+    # does not reuse the scan+join+agg subtree across the two consumers
+    baskets_arr = _cf_capped_baskets(li, o).localCheckpoint()
     pop = (
         baskets_arr.select(F.explode("members").alias("item"))
         .groupBy("item")
@@ -851,28 +868,9 @@ def cf_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory for identical output (equality pinned by the expansion
     # property test).
     pairs = _expand_member_pairs_streaming(baskets_arr)
-    # Round-12 (guide §2.3, the dedup pair engine's packed-key fast path):
-    # when every item id provably fits 31 bits (one pruned-single-column
-    # min/max over the item FK column itself — no reliance on a catalog
-    # table being present), the co-occurrence count groups on ONE packed
-    # long instead of two — narrower shuffle rows and a single-word hash
-    # key for the C(basket, 2) pair stream, the query's dominant stage.
-    # Out-of-range catalogs fall back to the exact two-column aggregation.
-    if _pair_pack_ok(li, "l_partkey"):
-        co = (
-            pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
-            .groupBy("ab")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-            .filter(F.col("n_common") >= 3)
-            .select(*unpack_pair_key("ab", "item_a", "item_b"), "n_common")
-        )
-    else:
-        co = (
-            pairs.select(F.col("a").alias("item_a"), F.col("b").alias("item_b"))
-            .groupBy("item_a", "item_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-            .filter(F.col("n_common") >= 3)
-        )
+    co = _cf_pair_counts(pairs, li, "item_a", "item_b", "n_common").filter(
+        F.col("n_common") >= 3
+    )
     pa = pop.select(F.col("item").alias("item_a"), F.col("n_users").alias("na"))
     pb = pop.select(F.col("item").alias("item_b"), F.col("n_users").alias("nb"))
     sim = F.floor(
@@ -1302,13 +1300,9 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (ARCHITECTURE.md §7): one groupBy collapses each customer's train
     # basket to a sorted array, the (ia != ib) ordered pairs are generated
     # inside codegen, and only the pair partial counts shuffle — the
-    # basket self-join this replaces shuffled train twice more. The
-    # repartition spreads the tiny array relation back across executors
-    # before the s(s-1) fan-out so AQE's coalesce can't serialize it.
-    train_arr = (
-        train.groupBy("cust")
-        .agg(F.array_sort(F.collect_set("item")).alias("items"))
-        .repartition(spark.sparkContext.defaultParallelism)
+    # basket self-join this replaces shuffled train twice more.
+    train_arr = train.groupBy("cust").agg(
+        F.array_sort(F.collect_set("item")).alias("members")
     )
     # Round-11 (guide §2.3 "aggregate before you shuffle"): co-occurrence
     # counts are SYMMETRIC — s(ia, ib) == s(ib, ia) — so the ordered
@@ -1320,23 +1314,8 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregated counts: half the generated rows and half the
     # pre-aggregation hash work; the union doubles only the already-tiny
     # (ia, ib, s) relation.
-    half_pairs = _expand_member_pairs_streaming(
-        train_arr.select(F.col("items").alias("members"))
-    )
-    # Round-12: packed single-long pair key for the co-occurrence count
-    # (same fast path and item-column range guard as cf_item_similarity).
-    if _pair_pack_ok(li, "l_partkey"):
-        co_half = (
-            half_pairs.select(F.expr(PACKED_PAIR_KEY).alias("ab"))
-            .groupBy("ab")
-            .agg(F.count(F.lit(1)).alias("s"))
-            .select(*unpack_pair_key("ab", "ia", "ib"), "s")
-        )
-    else:
-        co_half = (
-            half_pairs.groupBy(F.col("a").alias("ia"), F.col("b").alias("ib"))
-            .agg(F.count(F.lit(1)).alias("s"))
-        )
+    half_pairs = _expand_member_pairs_streaming(train_arr)
+    co_half = _cf_pair_counts(half_pairs, li, "ia", "ib", "s")
     co_full = co_half.unionByName(
         co_half.select(
             F.col("ib").alias("ia"), F.col("ia").alias("ib"), F.col("s")

@@ -63,75 +63,71 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 # driver rows-only check adds nothing over the planted-pair VALUE checks
 # in tests/test_cap_guards.py, which pin them to oracle-checked md5 twins.
 #
-# Round-12 window (anchor + 38 changed + 11 staleness-fillers = 50): the
-# round-11 verdict's task #1 — of the ~30 plans round 11 changed, only 3
-# got driver-side re-verification (the r11 window froze before most
-# optimization commits landed) — plus every plan round 12 itself changed.
-# Slots 2-26: the r11 plan-changed set (tokenizer one-pass, weighted pair
-# expansion, kmeans/abtt/pca driver fixes, percentile arrays, logreg
-# one-pass, CF basket build...). Slots 27-39: the r12 plan-changed set
-# (packed+raw-shuffle pair engine and every consumer, shared-words audit,
-# cf_holdout broadcast/single-DAG, map-side CDC, shared logreg features,
-# the last one-pass tokenizer sites). The 4 rows-only-by-design names
-# stay out as always. The 11 filler slots take the 11 alphabetically-
-# first of the 16 names still last-green in round 5 (histogram over
-# CORRECTNESS_r01-r11: r5 16, r6 38, r7 40, r8 46, r9 47, r10 49,
-# r11 50); the 5 remaining r5 names (source_template_spans,
-# sources_*, ...) lead the next window's fillers.
+# Current window (anchor + 4 changed + 45 staleness-fillers = 50).
+# Slots 2-5 are the plans changed since the last window: the pair-expansion
+# fan-out moved into _expand_member_pairs_streaming, which adds it to
+# semdedup_prune, moves it below the eager basket pin in
+# cf_item_similarity and below a Project in cf_holdout_hitrate; and
+# ann_ivf_rebalance takes its total from the two count sums. The fillers
+# are the oldest greens over CORRECTNESS_r01-r12: the 4 names last green
+# in r5 (source_template_spans, which the previous comment also listed,
+# is not a registered query), all 36 last green in r6, and the 5
+# alphabetically-first of the 18 last green in r7. The 4 rows-only names
+# stay out as always.
 DRIVER_WINDOW_PRIORITY = [
     "flagship_customer_activity",
-    # --- r11 plan-changed, not driver-re-verified in the r11 window ---
-    "dedup_minhash_portable",
-    "minhash_estimate_error",
-    "dedup_charngram_jaccard",
-    "dedup_ngram_jaccard",
-    "dedup_consensus_pairs",
-    "dedup_containment_pairs",
-    "dedup_span_matches",
-    "dedup_threshold_sweep",
-    "dedup_prefix_filter_pairs",
-    "dedup_winnowing_pairs",
-    "emb_neardup_pairs",
-    "kmeans_portable",
+    # --- plan-changed since the last window ---
     "semdedup_prune",
-    "emb_abtt_query_shift",
-    "emb_pca_top_component",
-    "logreg_train_weights",
-    "logreg_train_eval",
-    "percentile_prices_by_flag",
-    "text_hash_vector_dups",
     "cf_item_similarity",
-    "hybrid_search_topk",
-    "quality_repetition_signals",
-    "text_quality_scores",
-    "source_token_divergence",
-    "bpe_pair_stats",
-    # --- r12 plan-changed (beyond the overlap above) ---
-    "wordpiece_encode_stats",
-    "lm_heldout_perplexity",
-    "source_js_matrix",
-    "quality_threshold_bias",
-    "candidate_cap_audit",
     "cf_holdout_hitrate",
-    "dedup_cdc_chunks",
-    "dedup_clusters_exact",
-    "dupgraph_degree_stats",
-    "lsh_operating_point",
-    "pagerank_dupgraph",
-    "dupgraph_triangle_stats",
-    "dupgraph_kcore_peel",
-    # --- staleness rotation: 11 alphabetically-first last-green-r5 ---
-    "part_supply_hhi",
-    "poisson_bootstrap_ci",
-    "psi_price_drift",
-    "quality_calibration_bins",
-    "rag_mmr_rerank",
-    "revenue_mix_shift",
-    "revenue_seasonality_index",
-    "sample_weighted_ares",
-    "sequence_gap_audit",
-    "source_distinctive_terms",
-    "source_lexical_diversity",
+    "ann_ivf_rebalance",
+    # --- staleness rotation: every last-green-r5 and -r6 name ---
+    "text_encoding_audit",
+    "trimmed_mean_price",
+    "window_ntile_cume",
+    "zipf_alpha_words",
+    "benford_price_audit",
+    "bitemporal_revenue_asof",
+    "cdc_net_effect_summary",
+    "chi2_term_class_assoc",
+    "compaction_plan",
+    "curriculum_interleave_stats",
+    "customer_survival_curve",
+    "datasource_element_week_totals",
+    "dp_noisy_segment_counts",
+    "dp_user_bounded_counts",
+    "events_ab_mannwhitney",
+    "events_ab_readout",
+    "events_attribution_credit",
+    "events_diff_in_diff",
+    "events_pattern_matches",
+    "events_session_paths",
+    "events_slo_burn",
+    "events_user_entropy",
+    "fact_temporal_dim_join",
+    "global_row_number",
+    "ivm_delta_view",
+    "json_dead_letter_summary",
+    "ks_price_drift",
+    "ldiversity_audit",
+    "nb_alpha_sweep",
+    "nb_lang_train_eval",
+    "pareto_frontier_by_brand",
+    "pareto_frontier_lineitem",
+    "quality_score_auc",
+    "quality_score_auc_by_source",
+    "rollup_routed_revenue",
+    "sample_weighted_reservoir",
+    "sample_weighted_stratified",
+    "scd2_asof_snapshot",
+    "table_content_fingerprints",
+    "woe_source_encoding",
+    # --- then the 5 alphabetically-first last-green-r7 names ---
+    "contamination_overlap",
+    "dedup_apply_summary",
+    "dedup_clusters_portable",
+    "dedup_cross_source_matrix",
+    "dedup_exact_groups",
 ]
 
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
 )
 
@@ -158,115 +157,6 @@ def datasource_bootstrap_top_scorers(spark: SparkSession, sf_dir: str) -> DataFr
         .orderBy(F.col("total_points").desc(), F.col("id").asc())
         .limit(10)
     )
-
-
-# --- streaming variant: week-offset incremental feed -------------------------
-# The reference polls the per-week endpoints and tracks a high-water mark in
-# week_info/data_flow (includes.py get_id_data + the insert_week_* tasks).
-# This source expresses that protocol as a real Structured Streaming source:
-# the offset IS the week number, each micro-batch delivers exactly the weeks
-# landed since the last committed offset, and restarts resume from the
-# checkpoint — exactly-once week delivery without any bespoke bookkeeping.
-
-WEEK_FEED_SCHEMA = "week INT, player_id INT, points INT, minutes INT"
-WEEK_SHARDS = 2
-
-
-class WeekFeedStreamSource(DataSource):
-    """spark.readStream.format('fpl_week_feed').option('path', <dir>) over a
-    directory of week_<n>.json files (the landed per-week pulls)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "fpl_week_feed"
-
-    def schema(self) -> str:
-        return WEEK_FEED_SCHEMA
-
-    def streamReader(self, schema) -> "WeekFeedStreamReader":
-        return WeekFeedStreamReader(self.options)
-
-
-class _WeekShard(InputPartition):
-    def __init__(self, week: int, shard: int):
-        self.week = week
-        self.shard = shard
-
-
-class WeekFeedStreamReader(DataSourceStreamReader):
-    """DataSourceStreamReader contract: offsets are the DELIVERED WEEK SET
-    ({'weeks': sorted list}), not a scalar high-water mark — so a week that
-    lands out of order (week_2.json appearing after a batch already committed
-    week 3) is still delivered in the next batch instead of being silently
-    skipped below a max-week offset. partitions(start, end) plans
-    (week, shard) splits for exactly the weeks in end but not in start; each
-    executor flattens one shard of one week — the same sharding contract as
-    the batch bootstrap source. A week RE-landed after delivery is not
-    re-delivered (its number is already in the committed set): exactly-once
-    per week number is the contract, matching the reference's
-    insert-once-per-week protocol. The set is bounded by the season length
-    (38 weeks), so the offset stays tiny."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("fpl_week_feed source requires .option('path', ...)")
-
-    def _landed_weeks(self) -> list[int]:
-        import os
-        import re
-
-        weeks = []
-        for name in os.listdir(self.path):
-            m = re.fullmatch(r"week_(\d+)\.json", name)
-            if m:
-                weeks.append(int(m.group(1)))
-        return sorted(weeks)
-
-    @staticmethod
-    def _delivered(offset: dict) -> set[int]:
-        # Accept the legacy scalar form {'week': n} (checkpoints written by
-        # the pre-set-offset reader) as "all weeks <= n delivered".
-        if "weeks" in offset:
-            return set(offset["weeks"])
-        return set(range(1, offset.get("week", 0) + 1))
-
-    def initialOffset(self) -> dict:
-        return {"weeks": []}
-
-    def latestOffset(self) -> dict:
-        return {"weeks": self._landed_weeks()}
-
-    def partitions(self, start: dict, end: dict):
-        done = self._delivered(start)
-        return [
-            _WeekShard(w, s)
-            for w in sorted(self._delivered(end) - done)
-            for s in range(WEEK_SHARDS)
-        ]
-
-    def read(self, partition):
-        import json
-        import os
-
-        with open(os.path.join(self.path, f"week_{partition.week}.json")) as f:
-            doc = json.load(f)
-        for e in doc.get("players", []):
-            if e["id"] % WEEK_SHARDS != partition.shard:
-                continue
-            yield (partition.week, e["id"], e.get("points"), e.get("minutes"))
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the stream checkpoint; nothing source-side to ack
-        pass
-
-    def stop(self) -> None:
-        pass
-
-
-def register_week_feed_source(spark) -> None:
-    """Idempotent registration of the streaming week-feed source."""
-    spark.dataSource.register(WeekFeedStreamSource)
 
 
 # --- per-key fan-out source (S2): one fetch per player id --------------------

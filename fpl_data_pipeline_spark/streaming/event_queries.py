@@ -1,16 +1,10 @@
 """Event-stream analytics (SURVEY.md §2.10 scale track).
 
 The reference's "streaming" is a manually-implemented incremental batch
-(high-water mark + idempotent upsert). The engine productizes the semantics
-two ways:
-
-- here: the *batch view* of the streaming computations (tumbling-window
-  aggregation, sessionization, late-data-tolerant stats) — oracle-checked;
-- streaming/incremental.py: the same pipeline as real Structured Streaming
-  (readStream + watermark + foreachBatch upsert), exercised in tests.
-
-Keeping both views identical is the point: a Trigger.AvailableNow run of the
-streaming pipeline must produce exactly these tables.
+(high-water mark + idempotent upsert), and the engine keeps it that way:
+pipeline.run_pipeline is the one load path. This module holds the batch
+view of the event computations (tumbling-window aggregation,
+sessionization, late-data-tolerant stats), each oracle-checked.
 """
 
 from __future__ import annotations
@@ -78,8 +72,7 @@ def events_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization: gap > 30 min starts a new session. The streaming
-    twin is session_window(ts, '30 minutes') in incremental.py."""
+    """Batch sessionization: gap > 30 min starts a new session."""
     e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))

@@ -13,6 +13,8 @@ proving the append really made batch2 part of the corpus.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
@@ -208,41 +210,71 @@ def test_compact_band_state_preserves_probe_and_shrinks_files(
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_streaming_neardup_ingest_two_microbatches(spark, three_batches, tmp_path):
-    """The stream-driven deployment loop (streaming/incremental.py::
-    run_neardup_ingest): micro-batch 1 (b2's vectors) probes the b1-built
-    state and emits the planted b2~b1 candidate; its keys fold into the
-    state table, so micro-batch 2 (b3, a near-copy of a B2 vector) hits —
-    the two-batch sequencing contract, now across Structured Streaming
-    micro-batches with a shared checkpoint."""
-    from fpl_data_pipeline_spark.streaming.incremental import run_neardup_ingest
+def _ingest(spark, vecs, tbl, out, droot, batch_id, cap=ND_BAND_CAP):
+    """One micro-batch of the near-dup ingest loop, composed from the
+    module's protocol: probe the state view that excludes the batch's own
+    delta (so a replay emits identical candidates), land the candidates
+    under out/batch_id=N, then publish the batch's band keys exactly
+    once."""
+    from fpl_data_pipeline_spark.operators.incremental_state import (
+        publish_band_delta,
+        read_band_state,
+    )
 
+    keys = band_state_long(lsh_doc_band_keys(vecs)).localCheckpoint()
+    state = read_band_state(spark, tbl, droot, exclude_batch=batch_id)
+    probe_band_state(state, keys, cap).write.mode("overwrite").parquet(
+        f"{out}/batch_id={batch_id}"
+    )
+    publish_band_delta(keys, droot, batch_id)
+
+
+def _fold(spark, tbl, droot, gc=False):
+    """Fold the published deltas into a FRESH generation dir under
+    droot/_folded_base (never an in-place overwrite of the live files);
+    ``gc`` then reclaims the superseded generations."""
+    from fpl_data_pipeline_spark.operators.incremental_state import (
+        fold_band_deltas,
+        gc_band_state_generations,
+    )
+
+    base = os.path.join(droot, "_folded_base")
+    gen = 0
+    while os.path.exists(os.path.join(base, f"gen-{gen}")):
+        gen += 1
+    fold_band_deltas(spark, tbl, droot, os.path.join(base, f"gen-{gen}"))
+    if gc:
+        gc_band_state_generations(spark, tbl, base, delta_root=droot)
+
+
+def _pairs(spark, path):
+    return {(r["new_id"], r["dup_of"]) for r in spark.read.parquet(path).collect()}
+
+
+def test_streaming_neardup_ingest_two_microbatches(spark, three_batches, tmp_path):
+    """The deployment loop, batch by batch: micro-batch 0 (b2's vectors)
+    probes the b1-built state and emits the planted b2~b1 candidate; its
+    keys fold into the state table, so micro-batch 1 (b3, a near-copy of
+    a B2 vector) hits — the two-batch sequencing contract across
+    publish + fold."""
     b1, b2, b3 = three_batches
     tbl = "inc_band_state_stream_t"
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    out = str(tmp_path / "out")
+    droot = out + "/_state_deltas"
     try:
         write_band_state(
             band_state_long(lsh_doc_band_keys(b1)), tbl, str(tmp_path / "state")
         )
-        b2.coalesce(1).write.mode("append").parquet(src)
-        run_neardup_ingest(spark, src, tbl, out, ckpt)
-        got1 = {
-            (r["new_id"], r["dup_of"])
-            for r in spark.read.parquet(out + "/batch_id=0").collect()
-        }
+        _ingest(spark, b2, tbl, out, droot, 0)
+        _fold(spark, tbl, droot)
+        got1 = _pairs(spark, out + "/batch_id=0")
         assert (1099, 3) in got1
         assert all(d < 1000 for _, d in got1)  # state was b1-only
 
-        b3.coalesce(1).write.mode("append").parquet(src)
-        run_neardup_ingest(spark, src, tbl, out, ckpt)  # drains ONLY new files
-        later = spark.read.option("basePath", out).parquet(out)
-        got2 = {
-            (r["new_id"], r["dup_of"])
-            for r in later.filter(F.col("batch_id") >= 1).collect()
-        }
-        assert (2000, 1005) in got2  # b2 is corpus now: the fold took
-        # state = bootstrap b1 + folded b2 + folded b3 (every drained
-        # micro-batch folds, including the last)
+        _ingest(spark, b3, tbl, out, droot, 1)
+        _fold(spark, tbl, droot)
+        assert (2000, 1005) in _pairs(spark, out + "/batch_id=1")  # the fold took
+        # state = bootstrap b1 + folded b2 + folded b3
         assert spark.table(tbl).count() == 2 * (40 + 31 + 1)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -251,36 +283,29 @@ def test_streaming_neardup_ingest_two_microbatches(spark, three_batches, tmp_pat
 def test_streaming_neardup_ingest_gc_reclaims_superseded_gens(
     spark, three_batches, tmp_path
 ):
-    """gc=True completes the storage lifecycle inside the loop: after each
-    drain's fold, superseded generation dirs under the loop's gen base are
-    reclaimed and ONLY the live generation survives — with probe results
-    and the state table identical to the gc=False run (gc never touches
-    the live files)."""
-    import os
-
-    from fpl_data_pipeline_spark.streaming.incremental import run_neardup_ingest
-
+    """gc after each fold completes the storage lifecycle: superseded
+    generation dirs are reclaimed and ONLY the live generation survives —
+    with probe results and the state table identical to the no-gc run
+    (gc never touches the live files)."""
     b1, b2, b3 = three_batches
     tbl = "inc_band_state_stream_gc_t"
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    out = str(tmp_path / "out")
+    droot = out + "/_state_deltas"
     try:
         write_band_state(
             band_state_long(lsh_doc_band_keys(b1)), tbl, str(tmp_path / "state")
         )
-        b2.coalesce(1).write.mode("append").parquet(src)
-        run_neardup_ingest(spark, src, tbl, out, ckpt, gc=True)
-        b3.coalesce(1).write.mode("append").parquet(src)
-        run_neardup_ingest(spark, src, tbl, out, ckpt, gc=True)
+        _ingest(spark, b2, tbl, out, droot, 0)
+        _fold(spark, tbl, droot, gc=True)
+        _ingest(spark, b3, tbl, out, droot, 1)
+        _fold(spark, tbl, droot, gc=True)
 
-        got = {
-            (r["new_id"], r["dup_of"])
-            for r in spark.read.option("basePath", out).parquet(out).collect()
-        }
+        got = _pairs(spark, out + "/batch_id=0") | _pairs(spark, out + "/batch_id=1")
         assert (1099, 3) in got and (2000, 1005) in got
         assert spark.table(tbl).count() == 2 * (40 + 31 + 1)
-        # two drains folded -> two generations written; gc left only the
-        # live one (gen-1), and the live table reads from it
-        base = os.path.join(out, "_state_deltas", "_folded_base")
+        # two folds -> two generations written; gc left only the live one
+        # (gen-1), and the live table reads from it
+        base = os.path.join(droot, "_folded_base")
         assert sorted(os.listdir(base)) == ["gen-1"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -383,47 +408,34 @@ def test_probe_band_state_matches_bruteforce(spark, state_rows, batch_rows,
 
 
 def test_streaming_ingest_replay_is_exactly_once(spark, three_batches, tmp_path):
-    """Round-10 (replacing the round-9 at-least-once degradation test): a
-    replayed micro-batch — simulated by wiping the checkpoint BEFORE the
-    fold ran, the only state a real crash can leave, since the fold runs
-    after every checkpoint commit — re-publishes nothing (the batch=0 delta
-    already exists) and emits BYTE-IDENTICAL candidates (the probe excludes
-    the batch's own delta, so no self-pairs appear). State row counts are
-    exact through the replay and through the eventual fold."""
-    import shutil
-
+    """A replayed micro-batch — the same batch id probed and published
+    again BEFORE any fold ran, the shape a lost ingest commit leaves —
+    re-publishes nothing (the batch=0 delta already exists) and emits
+    BYTE-IDENTICAL candidates (the probe excludes the batch's own delta,
+    so no self-pairs appear). State row counts are exact through the
+    replay and through the eventual fold."""
     from fpl_data_pipeline_spark.operators.incremental_state import (
-        fold_band_deltas,
+        published_batches,
         read_band_state,
     )
-    from fpl_data_pipeline_spark.streaming.incremental import run_neardup_ingest
 
     b1, b2, _ = three_batches
     tbl = "inc_band_state_replay_t"
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    out = str(tmp_path / "out")
     droot = out + "/_state_deltas"
     try:
         write_band_state(
             band_state_long(lsh_doc_band_keys(b1)), tbl, str(tmp_path / "state")
         )
-        b2.coalesce(1).write.mode("append").parquet(src)
-        # fold=False models the crash window: checkpoint lost, fold not run
-        run_neardup_ingest(spark, src, tbl, out, ckpt, fold=False)
-        first = {
-            (r["new_id"], r["dup_of"])
-            for r in spark.read.parquet(out + "/batch_id=0").collect()
-        }
+        _ingest(spark, b2, tbl, out, droot, 0)
+        first = _pairs(spark, out + "/batch_id=0")
         assert (1099, 3) in first and all(d < 1000 for _, d in first)
-        shutil.rmtree(ckpt)  # lose the commit -> full replay on next drain
-        run_neardup_ingest(spark, src, tbl, out, ckpt, fold=False)
-        replay = {
-            (r["new_id"], r["dup_of"])
-            for r in spark.read.parquet(out + "/batch_id=0").collect()
-        }
-        assert replay == first  # byte-identical emission, no self-pairs
+        _ingest(spark, b2, tbl, out, droot, 0)  # the replay
+        assert _pairs(spark, out + "/batch_id=0") == first  # no self-pairs
+        assert list(published_batches(droot)) == [0]
         # state (base + published deltas) is exact: b1 + b2 ONCE
         assert read_band_state(spark, tbl, droot).count() == 2 * (40 + 31)
-        fold_band_deltas(spark, tbl, droot, str(tmp_path / "gen0"))
+        _fold(spark, tbl, droot)
         assert spark.table(tbl).count() == 2 * (40 + 31)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -432,27 +444,25 @@ def test_streaming_ingest_replay_is_exactly_once(spark, three_batches, tmp_path)
 def test_ingest_replay_after_fold_cannot_republish_state(
     spark, three_batches, tmp_path
 ):
-    """Disaster shape beyond any real crash ordering (checkpoint LOST after
-    a completed fold cleaned the delta away): the durable applied-set still
-    refuses the re-publish, so state row counts stay exact. Candidate
-    emission in this shape may legitimately see the batch's own folded
-    keys — state exactness is the contract that survives everything."""
-    import shutil
-
-    from fpl_data_pipeline_spark.streaming.incremental import run_neardup_ingest
-
+    """Disaster shape beyond any real crash ordering (a batch replayed
+    after a completed fold cleaned its delta away): the durable
+    applied-set still refuses the re-publish, so state row counts stay
+    exact. Candidate emission in this shape may legitimately see the
+    batch's own folded keys — state exactness is the contract that
+    survives everything."""
     b1, b2, _ = three_batches
     tbl = "inc_band_state_dr_t"
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    out = str(tmp_path / "out")
+    droot = out + "/_state_deltas"
     try:
         write_band_state(
             band_state_long(lsh_doc_band_keys(b1)), tbl, str(tmp_path / "state")
         )
-        b2.coalesce(1).write.mode("append").parquet(src)
-        run_neardup_ingest(spark, src, tbl, out, ckpt)  # fold=True: delta cleaned
+        _ingest(spark, b2, tbl, out, droot, 0)
+        _fold(spark, tbl, droot)  # delta cleaned, batch 0 recorded applied
         assert spark.table(tbl).count() == 2 * (40 + 31)
-        shutil.rmtree(ckpt)
-        run_neardup_ingest(spark, src, tbl, out, ckpt)  # full replay
+        _ingest(spark, b2, tbl, out, droot, 0)  # full replay
+        _fold(spark, tbl, droot)
         assert spark.table(tbl).count() == 2 * (40 + 31)  # NOT 40+31+31
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -1379,8 +1389,8 @@ def test_maintenance_state_machine_random_interleavings(
 
 def test_streaming_lifecycle_soak_with_crashes(spark, tmp_path):
     """Round-11 task #5: the WHOLE deployment loop, run the way a
-    deployment runs it — 20 micro-batch drains through run_neardup_ingest
-    (fold=False: maintenance on a cadence, not per-batch), folds triggered
+    deployment runs it — 20 micro-batch ingests (maintenance on a
+    cadence, not per-batch), folds triggered
     by a small-file criterion over the published deltas (the
     sources/compaction.py streaming-pack rule degenerates to a delta-count
     threshold here because every delta is one uniform micro-batch), gc
@@ -1400,13 +1410,12 @@ def test_streaming_lifecycle_soak_with_crashes(spark, tmp_path):
         gc_band_state_generations,
         published_batches,
     )
-    from fpl_data_pipeline_spark.streaming.incremental import run_neardup_ingest
 
     N_BATCHES, PER_BATCH, CADENCE = 20, 5, 4
     SEAMS = ["write_tmp", "manifest", "drop", "rename", "applied",
              "rm_deltas"]
     tbl, off = "inc_lifecycle_soak_t", "inc_lifecycle_soak_off_t"
-    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    out = str(tmp_path / "out")
     droot = os.path.join(out, "_state_deltas")
     gen_base = os.path.join(droot, "_folded_base")
     rng = np.random.RandomState(11)
@@ -1432,8 +1441,7 @@ def test_streaming_lifecycle_soak_with_crashes(spark, tmp_path):
                          str(tmp_path / "state"))
         batches = [_emb_frame(spark, r) for r in raw[1:]]
         for c, b in enumerate(batches):
-            b.coalesce(1).write.mode("append").parquet(src)
-            run_neardup_ingest(spark, src, tbl, out, ckpt, fold=False)
+            _ingest(spark, b, tbl, out, droot, c)
             if rng.rand() < 0.25:  # a maintenance fold dies mid-protocol
                 with pytest.raises(_InjectedCrash):
                     fold_band_deltas(
@@ -1441,9 +1449,9 @@ def test_streaming_lifecycle_soak_with_crashes(spark, tmp_path):
                         _fail_after=SEAMS[rng.randint(len(SEAMS))],
                     )
                 if not spark.catalog.tableExists(tbl):
-                    # the mid-swap window: the next drain's probe needs the
+                    # the mid-swap window: the next batch's probe needs the
                     # table, so the operator re-runs the fold NOW (exactly
-                    # what a failing drain would page a deployment to do)
+                    # what a failing ingest would page a deployment to do)
                     fold_band_deltas(spark, tbl, droot, next_gen())
             # cadence: the planner criterion — enough published deltas to
             # make the rewrite pay — then fold (doubles as crash recovery)

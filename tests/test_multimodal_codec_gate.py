@@ -4,7 +4,10 @@ asked that the deploy-time codec swap itself be tested, not just documented.
 
 In this container (no PIL) the fallback path runs; in a codec-equipped
 deployment the same tests exercise the real path. Both paths share the
-FEATURE_DIM output contract, so the Spark schema never changes.
+FEATURE_DIM output contract, so the Spark schema never changes. The
+last two tests pin the Spark side of the same operator: features do not
+depend on partitioning or Arrow batch size, and the mapInArrow surface
+agrees with the mapInPandas one.
 """
 
 from __future__ import annotations
@@ -209,3 +212,57 @@ def test_bmp_decoder_rejects_malformed_payloads():
         assert decode_payload(payload, "image/bmp") == decode_stub(payload), (
             payload[:20]
         )
+
+
+SF = "/root/testdata/sf0.001"
+
+
+def test_multimodal_batch_shape_independence(spark):
+    from fpl_data_pipeline_spark.operators.multimodal import (
+        extract_features,
+        media_table,
+    )
+
+    media = media_table(spark, SF)
+    small = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
+    out1 = extract_features(media.repartition(1)).orderBy("asset_id").collect()
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        out2 = extract_features(media.repartition(13)).orderBy("asset_id").collect()
+    finally:
+        if small:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
+        else:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert out1 == out2  # identical regardless of partitioning / Arrow batch size
+    assert out1[0]["magic_hex"] is not None and len(out1[0]["features"]) == 8
+
+
+def test_map_in_arrow_matches_map_in_pandas(spark):
+    """mapInArrow — the zero-copy RecordBatch surface (no pandas
+    materialization): byte-length accounting over the media table must
+    equal the mapInPandas extractor's, completing the UDF API matrix."""
+    import pyarrow as pa
+    import pyspark.sql.functions as F
+
+    from fpl_data_pipeline_spark.operators.multimodal import media_table
+
+    media = media_table(spark, SF)
+
+    def arrow_len(batches):
+        for batch in batches:
+            tbl = pa.table(batch)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "asset_id": tbl["asset_id"].combine_chunks(),
+                    "blob_len": pa.array(
+                        [len(v.as_py() or b"") for v in tbl["media"]], pa.int64()
+                    ),
+                }
+            )
+
+    via_arrow = media.mapInArrow(arrow_len, "asset_id long, blob_len long")
+    total_arrow = via_arrow.agg(F.sum("blob_len")).first()[0]
+    total_meta = media.agg(F.sum("byte_len")).first()[0]
+    assert total_arrow == total_meta
+    assert via_arrow.count() == media.count()

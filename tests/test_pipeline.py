@@ -149,8 +149,8 @@ def test_pipeline_rejects_empty_landing(spark, tmp_path):
 
 def test_pipeline_publish_crash_recovery(spark, landing, tmp_path):
     """A crash between _publish's two renames (table at .bak, garbage at
-    .stage) must be recovered on the next run — same contract as the
-    streaming merge, exercised through run_pipeline itself."""
+    .stage) must be recovered on the next run, exercised through
+    run_pipeline itself."""
     import os
 
     wh = str(tmp_path / "wh")
@@ -190,6 +190,54 @@ def test_pipeline_crash_recovery_preserves_merged_history(spark, landing, tmp_pa
     t = run_pipeline(spark, str(landing), wh)
     pts = {r["round_gw"]: r["total_points"] for r in t["player_week_ft"].collect()}
     assert pts == {1: 12, 2: 7}  # week 1 history RECOVERED, week 2 merged
+
+
+def test_torn_publish_window_recovers_after_injected_crash(spark, tmp_path, monkeypatch):
+    """Crash-inject the exact torn-publish window of the atomic-rename
+    protocol inside _merge_publish: kill the publish AFTER 'target renamed
+    to backup' but BEFORE 'stage renamed to target', then prove the next
+    merge's restore path (backup -> target, leftovers cleaned, the failed
+    batch re-merged) converges to the correct table."""
+    import os
+
+    from fpl_data_pipeline_spark.pipeline import _merge_publish
+
+    def weeks(*ws):
+        return spark.createDataFrame(
+            [(w, p, w * 10 + p) for w in ws for p in range(1, 7)],
+            "week int, player_id int, points int",
+        )
+
+    target = str(tmp_path / "week_fact")
+    keys = ["week", "player_id"]
+    _merge_publish(spark, weeks(1, 2), target, keys)
+    assert spark.read.parquet(target).count() == 12
+
+    real_rename = os.rename
+
+    def crash_after_backup_rename(src, dst):
+        real_rename(src, dst)
+        if str(dst).endswith(".bak"):
+            raise RuntimeError("injected crash: died between the two renames")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_after_backup_rename)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _merge_publish(spark, weeks(3), target, keys)
+
+    # the torn state the crash leaves behind: target gone, old table in
+    # backup, new version stranded in stage
+    assert not os.path.exists(target)
+    assert os.path.exists(target + ".bak")
+    assert os.path.exists(target + ".stage")
+
+    # next merge: restore path recovers the table, and the keyed merge
+    # publishes weeks 1-3 exactly once
+    t = _merge_publish(spark, weeks(3), target, keys)
+    counts = {r.week: r["count"] for r in t.groupBy("week").count().collect()}
+    assert counts == {1: 6, 2: 6, 3: 6}
+    assert not os.path.exists(target + ".bak")
+    assert not os.path.exists(target + ".stage")
 
 
 def test_pipeline_failed_gate_leaves_previous_table_live(spark, landing, tmp_path):

@@ -85,3 +85,27 @@ def test_lsh_probe_is_hash_join(spark, name):
     p = plan(spark, name)
     assert "BroadcastHashJoin" in p or "SortMergeJoin" in p
     assert "CartesianProduct" not in p
+
+
+def test_every_pair_expansion_fans_out_first(spark):
+    """_expand_member_pairs_streaming owns the fan-out rule (ARCHITECTURE.md
+    §7): the group relation is small and AQE coalesces it, but the explode
+    multiplies each row by s(s-1)/2. In every registered query that expands
+    member pairs, the expansion's first Generate (the posexplode emitting the
+    ``_i`` anchor position) must sit directly on a round-robin repartition
+    to session parallelism."""
+    fan_out = f"Repartition {spark.sparkContext.defaultParallelism}, true"
+    inputs = {}
+    for name, fn in QUERIES.items():
+        lines = fn(spark, SF)._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        under = [
+            lines[i + 1].lstrip(" :+-")
+            for i, ln in enumerate(lines)
+            if "Generate posexplode(" in ln and "[_i#" in ln
+        ]
+        if under:
+            inputs[name] = under
+    # the loop found the expanders, semdedup's included
+    assert {"cf_item_similarity", "dedup_ngram_jaccard", "semdedup_prune"} <= set(inputs)
+    bad = {n: u for n, u in inputs.items() if any(c != fan_out for c in u)}
+    assert not bad, bad

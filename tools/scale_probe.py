@@ -48,10 +48,7 @@ def cf_candidate_pairs(spark, sf_dir):
 
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    baskets = _cf_capped_baskets(li, o).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return _expand_member_pairs_streaming(baskets)
+    return _expand_member_pairs_streaming(_cf_capped_baskets(li, o))
 
 
 _ASSIGN_MEMO: dict = {}
